@@ -17,6 +17,59 @@ def _plan(df) -> str:
     )
 
 
+def _python_rdd_scans(plan: str) -> list[str]:
+    """``Scan ExistingRDD`` nodes whose RDD is not a localCheckpoint:
+    what ``createDataFrame(list)`` plans over a Python RDD (one Python
+    worker task per slice, on every action)."""
+    return [
+        line
+        for line in plan.split("\n")
+        if line.startswith("Arguments:")
+        and "ExistingRDD" in line
+        and " at localCheckpoint at " not in line
+    ]
+
+
+def _simple_plan_lines(df) -> list[str]:
+    return df._jdf.queryExecution().executedPlan().toString().split("\n")
+
+
+def _arrow_udf_nodes(df):
+    """ArrowEvalPython nodes of the final adaptive plan of an executed
+    DataFrame (query stages are leaves: descend into their plans)."""
+
+    def walk(node):
+        if "QueryStage" in node.nodeName():
+            yield from walk(node.plan())
+            return
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            yield from walk(children.apply(i))
+
+    final = df._jdf.queryExecution().executedPlan().executedPlan()
+    return [n for n in walk(final) if n.nodeName() == "ArrowEvalPython"]
+
+
+def _jobs_per_execution(spark, build) -> tuple[int, int]:
+    """(jobs launched while building the query, jobs of build + collect)
+    for one execution under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = build()
+        n_build = len(tracker.getJobIdsForGroup(group))
+        df.collect()
+        return n_build, len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_region_join_is_hash_not_nested_loop(spark, sf_dir):
     plan = _plan(q.q_region_join_bcast(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
@@ -131,6 +184,9 @@ def test_no_cartesian_or_row_python_in_any_query(spark, sf_dir):
         plan = _plan(fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, name
         assert "BatchEvalPython" not in plan, name
+        # driver literals are LocalTableScans; an RDD scan may only
+        # read a materialized checkpoint, never a Python RDD
+        assert not _python_rdd_scans(plan), (name, _python_rdd_scans(plan))
         if name not in bnlj_ok:
             assert "BroadcastNestedLoopJoin" not in plan, name
 
@@ -238,3 +294,64 @@ def test_int8_rerank_has_two_level_topk(spark, sf_dir):
     )._jdf.queryExecution().optimizedPlan().toString()
     assert "_salt" in plan
     assert len(re.findall(r"row_number", plan)) >= 3  # salt + global + rerank
+
+
+def test_poly_roundtrip_is_one_python_crossing(spark, sf_dir):
+    """Forward + inverse run as ONE kernel chain: one ArrowEvalPython
+    node, not one per transform."""
+    lines = _simple_plan_lines(q.q_poly_roundtrip(spark, sf_dir))
+    assert sum("ArrowEvalPython" in line for line in lines) == 1, lines
+
+
+def test_refit_outputs_are_not_range_sorted(spark, sf_dir):
+    """No range-partition exchange above the refit applyInPandas: its
+    sampling job would run the whole grouped Python refit a second
+    time."""
+    for qfn in (q.q_loo_residuals, q.q_auto_choose_model):
+        lines = _simple_plan_lines(qfn(spark, sf_dir))
+        at = next(
+            i for i, line in enumerate(lines)
+            if "FlatMapGroupsInPandas" in line
+        )
+        above = lines[:at]
+        assert not any("rangepartitioning" in line for line in above), (
+            qfn.__name__, lines,
+        )
+
+
+def test_point_kernels_run_one_python_wave(spark, sf_dir):
+    """The pandas-UDF stage over the points reads at most one
+    partition per core: each Python task pays a fixed worker start,
+    so a second wave costs a second start on every core."""
+    cores = spark.sparkContext.defaultParallelism
+    for qfn in (q.q_tin_transform, q.q_poly_roundtrip):
+        df = qfn(spark, sf_dir)
+        df.collect()
+        nodes = _arrow_udf_nodes(df)
+        assert nodes, qfn.__name__
+        for node in nodes:
+            n = node.execute().getNumPartitions()
+            assert n <= cores, (qfn.__name__, node.nodeName(), n, cores)
+
+
+def test_loo_residuals_job_budget(spark, sf_dir):
+    """At most 3 jobs per execution (hash-exchange map, refit stage,
+    final single-task sort); a range sort would add a sampling job."""
+    for i in range(2):
+        _, jobs = _jobs_per_execution(
+            spark, lambda: q.q_loo_residuals(spark, sf_dir)
+        )
+        assert jobs <= 3, (i, jobs)
+
+
+def test_knn_city_assign_builds_without_jobs(spark, sf_dir):
+    """The inline kNN collects its literal center table while the
+    query is built: a LocalTableScan collect runs no job.  The first
+    build in a session also builds the memoized points plan, whose
+    parquet schema inference runs a job; the budget holds after it."""
+    q.q_knn_city_assign(spark, sf_dir)
+    for i in range(2):
+        build_jobs, _ = _jobs_per_execution(
+            spark, lambda: q.q_knn_city_assign(spark, sf_dir)
+        )
+        assert build_jobs == 0, (i, build_jobs)

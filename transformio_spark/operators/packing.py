@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from ..sources.synth import literal_table
+
 
 def pack_sequences(
     docs: DataFrame,
@@ -79,7 +81,7 @@ def pack_sequences(
         running += row["_range_tokens"]
     spark = docs.sparkSession
     off_df = F.broadcast(
-        spark.createDataFrame(offsets, "_range_id long, _range_start long")
+        literal_table(spark, offsets, "_range_id long, _range_start long")
     )
 
     # 3. intra-range running sum — window partitioned BY RANGE, so the

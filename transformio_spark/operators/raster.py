@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..kernels import from_json
 from ..kernels.warp import as_chain
+from ..sources.synth import literal_table
 
 TILE_SCHEMA = (
     "tile_x int, tile_y int, col0 int, row0 int, w int, h int, px binary"
@@ -64,7 +65,7 @@ def image_to_tiles(spark: SparkSession, im: np.ndarray, tile: int = 256) -> Data
                     bytearray(np.ascontiguousarray(block).tobytes()),
                 )
             )
-    return spark.createDataFrame(rows, TILE_SCHEMA)
+    return literal_table(spark, rows, TILE_SCHEMA)
 
 
 def _out_grid(w: int, h: int, tile: int) -> list[tuple[int, int, int, int, int, int]]:
@@ -111,8 +112,8 @@ def warp_tiled(
     xscale, _, xoff, _, yscale, yoff = affine
 
     grid = _out_grid(w, h, out_tile)
-    grid_df = spark.createDataFrame(
-        grid, "otx int, oty int, ocol0 int, orow0 int, ow int, oh int"
+    grid_df = literal_table(
+        spark, grid, "otx int, oty int, ocol0 int, orow0 int, ow int, oh int"
     )
 
     def backpred_for(pdf_row):
@@ -347,8 +348,8 @@ def resize_tiles(
         _, jc0, jc1 = area_weights(imw, nw, ocol0, ocol0 + ow)
         _, jr0, jr1 = area_weights(imh, nh, orow0, orow0 + oh)
         grid.append((otx, oty, jc0, jc1 - 1, jr0, jr1 - 1))
-    grid_df = spark.createDataFrame(
-        grid, "otx int, oty int, cmin int, cmax int, rmin int, rmax int"
+    grid_df = literal_table(
+        spark, grid, "otx int, oty int, cmin int, cmax int, rmin int, rmax int"
     )
     st = src_tiles.select("col0", "row0", "w", "h", "px")
     cond = (
@@ -463,8 +464,8 @@ def rasterize_tiles(
     pad = max(fillsize / 2.0, outlinewidth / 2.0) + 1.0
     boxes = [get_bbox(g) for g in geoms_img]
     grid = _out_grid(w, h, out_tile)
-    grid_df = spark.createDataFrame(
-        grid, "otx int, oty int, ocol0 int, orow0 int, ow int, oh int"
+    grid_df = literal_table(
+        spark, grid, "otx int, oty int, ocol0 int, orow0 int, ow int, oh int"
     )
     geoms_b = spark.sparkContext.broadcast(list(zip(geoms_img, boxes)))
 

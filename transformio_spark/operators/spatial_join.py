@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import geo, tiles
+from ..sources.synth import literal_table
 
 
 def _e5(c: F.Column) -> F.Column:
@@ -337,9 +338,9 @@ def radius_join_counts(
         for cid, lon, lat in centers
         for cell in radius_cover_cells(lon, lat, radius_km, zoom)
     ]
-    cand_df = spark.createDataFrame(cand, "center_id int, cell long")
-    cdf = spark.createDataFrame(
-        list(centers), "center_id int, c_lon double, c_lat double"
+    cand_df = literal_table(spark, cand, "center_id int, cell long")
+    cdf = literal_table(
+        spark, centers, "center_id int, c_lon double, c_lat double"
     )
     keyed = points.withColumn(
         "cell", tiles.tile_id(F.col("lon"), F.col("lat"), zoom)

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.synth import literal_table
 from . import udfs
 
 LONG_SCHEMA = (
@@ -49,7 +50,7 @@ def geojson_to_long(spark, features: list[tuple[str, dict]]) -> DataFrame:
             for ri, ring in enumerate(part):
                 for si, (x, y) in enumerate(ring):
                     rows.append((geom_id, pi, ri, si, float(x), float(y)))
-    return spark.createDataFrame(rows, LONG_SCHEMA)
+    return literal_table(spark, rows, LONG_SCHEMA)
 
 
 def transform_long(geoms: DataFrame, model_json: str) -> DataFrame:

@@ -913,8 +913,9 @@ def q_loo_residuals(spark, sf_dir) -> DataFrame:
         for h in range(n)
         for i in range(n)
     ]
-    gcps = spark.createDataFrame(
-        rows, "held_out int, gcp_id int, sx double, sy double, dx double, dy double"
+    gcps = synth.literal_table(
+        spark, rows,
+        "held_out int, gcp_id int, sx double, sy double, dx double, dy double",
     )
 
     def fit_predict(pdf: _pd.DataFrame) -> _pd.DataFrame:
@@ -934,10 +935,14 @@ def q_loo_residuals(spark, sf_dir) -> DataFrame:
         )
         return _pd.DataFrame({"gcp_id": [held], "resid_e6": [round(resid[0] * 1e6)]})
 
-    return (
-        gcps.groupBy("held_out")
-        .applyInPandas(fit_predict, "gcp_id int, resid_e6 long")
-        .orderBy("gcp_id")
+    # one row per GCP: the bounded single-task sort runs the refits
+    # once, where orderBy's range-partition sample job would run the
+    # whole applyInPandas a second time
+    return _bounded_sort(
+        gcps.groupBy("held_out").applyInPandas(
+            fit_predict, "gcp_id int, resid_e6 long"
+        ),
+        "gcp_id",
     )
 
 
@@ -2139,22 +2144,25 @@ def q_poly_roundtrip(spark, sf_dir) -> DataFrame:
     import json as _json
 
     from ..fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
-    from ..kernels import Polynomial
+    from ..kernels import Chain, Polynomial
     from ..operators import udfs
 
     imx, imy = zip(*CHINA22_IMPOINTS)
     gx, gy = zip(*CHINA22_GEOPOINTS)
     trans = Polynomial(order=2).fit(imx, imy, gx, gy)
-    fwd = _json.dumps(trans.to_json())
-    inv = _json.dumps(trans.inverse().to_json())
+    # forward then inverse as ONE kernel chain: one Arrow crossing,
+    # the same numpy ops in the same order (Arrow doubles are lossless,
+    # so the values equal two separate UDF passes bit for bit)
+    roundtrip = _json.dumps(Chain([trans, trans.inverse()]).to_json())
 
     # px-space doc points (bounded domain where the fit is valid)
     pts = points_df(spark, sf_dir).select(
         ((F.col("lon") + 180.0) * 3.0).alias("x"),
         ((F.col("lat") + 85.0) * 5.5).alias("y"),
     )
-    f = udfs.with_transformed(pts, fwd, x="x", y="y", out_x="fx", out_y="fy")
-    b = udfs.with_transformed(f, inv, x="fx", y="fy", out_x="bx", out_y="by")
+    b = udfs.with_transformed(
+        pts, roundtrip, x="x", y="y", out_x="bx", out_y="by"
+    )
     err = geo.euclidean(F.col("x"), F.col("y"), F.col("bx"), F.col("by"))
     return b.select(err.alias("err")).agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -2199,8 +2207,9 @@ def q_auto_choose_model(spark, sf_dir) -> DataFrame:
         for c in candidates
         for i in range(n)
     ]
-    gcps = spark.createDataFrame(
-        rows, "candidate string, gcp_id int, sx double, sy double, dx double, dy double"
+    gcps = synth.literal_table(
+        spark, rows,
+        "candidate string, gcp_id int, sx double, sy double, dx double, dy double",
     )
 
     def evaluate(pdf: _pd.DataFrame) -> _pd.DataFrame:
@@ -2368,9 +2377,9 @@ def q_tin_transform(spark, sf_dir) -> DataFrame:
     lattice = pts.select(
         ix.cast("double").alias("ix"), iy.cast("double").alias("iy")
     )
-    out = lattice.select(
-        udfs.transform_xy(tin_json, F.col("ix"), F.col("iy")).alias("o")
-    ).select(F.col("o.px").alias("px"), F.col("o.py").alias("py"))
+    out = udfs.with_transformed(
+        lattice, tin_json, x="ix", y="iy", out_x="px", out_y="py"
+    )
     return (
         out.select(
             F.floor("px").cast("long").alias("bucket"),
@@ -2414,17 +2423,15 @@ def q_model_accuracy(spark, sf_dir) -> DataFrame:
     """SURVEY ops 18/20/21 relationally: residuals of the observable
     re-fit (predict via the order-2 Column twin, geodesic R=6367
     haversine against the observed GCP targets), then RMSE / MAE / MAX
-    as one aggregate row.  A SINGLE-slice parallelize pins the
-    double-summation order to the GCP row order, matching the
-    oracle's sequential VALUES scan — same rows, same order, same
-    fold as the previous coalesce(1), WITHOUT coalescing 64
-    pickled slices through one task (round 6: that cost a flat
-    ~3.2 s per execution; numSlices=1 measures ~0.26 s)."""
+    as one aggregate row.  ``coalesce(1)`` over the literal table
+    pins the double-summation order to the GCP row order, matching
+    the oracle's sequential VALUES scan.  The table is an in-memory
+    LocalTableScan (synth.literal_table), so that single task reads
+    JVM rows and starts no Python worker."""
     A, gcps = model_accuracy_gate()
-    df = spark.createDataFrame(
-        spark.sparkContext.parallelize(gcps, 1),
-        "sx double, sy double, dx double, dy double",
-    )
+    df = synth.literal_table(
+        spark, gcps, "sx double, sy double, dx double, dy double"
+    ).coalesce(1)
     px, py = geo.polynomial_predict(A, 2, F.col("sx"), F.col("sy"))
     # distance arg order (pred, obs) — reference accuracy.py:37
     resid = geo.haversine_km(px, py, F.col("dx"), F.col("dy"))

@@ -15,10 +15,42 @@ with 2-5 interleaved spans per doc, >=1 media span carrying a
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import synthspec
+
+
+def literal_table(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str
+) -> DataFrame:
+    """A small driver-literal table: ``rows`` (tuples in ``ddl`` column
+    order) as a DataFrame with exactly the DDL schema.
+
+    Goes through an Arrow table, which Spark plans as an in-memory
+    ``LocalTableScan``.  ``createDataFrame(list)`` instead plans
+    ``Scan ExistingRDD`` over a Python RDD, and every action over it
+    launches one Python worker task per slice — each paying the
+    worker's fixed start cost (~0.2 s) to hand back a few literal rows.
+    (A pandas frame would reach the same plan, except that an empty
+    frame silently takes the Python-RDD path and NaN turns into null.)
+
+    Values convert exactly: Python ints without overflow (an int that
+    does not fit its DDL type raises), doubles bit for bit including
+    NaN and -0.0, ``None`` as null.  A LocalTableScan splits its rows
+    over up to ``defaultParallelism`` partitions: callers whose result
+    depends on row order across the table (an order-sensitive fold)
+    add ``.coalesce(1)``."""
+    schema = StructType.fromDDL(ddl)
+    columns = list(zip(*rows, strict=True)) or [()] * len(schema)
+    table = pa.table(
+        {name: list(col) for name, col in zip(schema.names, columns, strict=True)}
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,8 +353,10 @@ def gcps(spark: SparkSession) -> DataFrame:
         ("px2geo", i, sx, sy, dx, dy)
         for i, (sx, sy, dx, dy) in enumerate(synthspec.GCPS_PX_GEO)
     ]
-    return spark.createDataFrame(
-        rows, "set_id string, gcp_id int, src_x double, src_y double, dst_x double, dst_y double"
+    return literal_table(
+        spark,
+        rows,
+        "set_id string, gcp_id int, src_x double, src_y double, dst_x double, dst_y double",
     )
 
 
@@ -384,4 +418,4 @@ def knn_centers(spark: SparkSession) -> DataFrame:
     """The 10 hotspot city centers as a broadcastable center table
     for kNN control-point matching."""
     rows = [(i, lon, lat) for i, (lon, lat) in enumerate(synthspec.CITIES)]
-    return spark.createDataFrame(rows, "center_id int, lon double, lat double")
+    return literal_table(spark, rows, "center_id int, lon double, lat double")
