@@ -473,6 +473,35 @@ def test_simhash_md5_twin_matches_reimplementation(spark):
     assert got["a"].simhash_hex != got["c"].simhash_hex
 
 
+def _ref_components(edges):
+    """Pure-Python union-find reference: {node: component min} over
+    every endpoint of a non-self-loop edge."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _components(pairs, monkeypatch, cap=None):
+    """connected_components as {id: comp}; ``cap`` lowers the
+    union-find edge cap to force the multi-lane path."""
+    with monkeypatch.context() as m:
+        if cap is not None:
+            m.setattr(dedup, "_UF_MAX_EDGES", cap)
+        return {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+
+
 def test_connected_components_chain_merge(spark):
     """A~B, B~C, D~E: transitive closure must merge A/B/C into one
     keep-one group even though (A,C) was never emitted."""
@@ -484,52 +513,34 @@ def test_connected_components_chain_merge(spark):
     assert comps["a"] == comps["b"] == comps["c"] == "a"
     assert comps["d"] == comps["e"] == "d"
     assert comps["w"] == comps["x"] == comps["y"] == comps["z"] == "w"
-    # a deep path that SURVIVES local contraction (one edge per lane)
-    # cannot converge in 1 global round; label-prop-only keeps the
-    # old hard abort.  Round 6: the gate-scale pre-contraction solves
-    # small graphs in the local pass, so force one-edge lanes to keep
-    # the abort path covered.
-    old_cap = dedup._LOCAL_UF_MAX_EDGES
-    dedup._LOCAL_UF_MAX_EDGES = 1
-    try:
-        with pytest.raises(RuntimeError, match="converge"):
-            chain = spark.createDataFrame(
-                [(str(i), str(i + 1)) for i in range(8)],
-                "id_a string, id_b string",
-            )
-            dedup.connected_components(
-                chain, max_iter=1, algorithm="label-prop"
-            )
-    finally:
-        dedup._LOCAL_UF_MAX_EDGES = old_cap
 
 
-def test_connected_components_star_equals_label_prop(spark):
-    """Property check: alternating large-star/small-star (Kiveris et
-    al.) labels random graphs identically to min-label propagation."""
+def test_connected_components_matches_reference(spark, monkeypatch):
+    """Random string-id graphs with self-loops, duplicate and reversed
+    edges label exactly like the union-find reference, on the
+    single-task path and on the multi-lane path (hash lanes, star
+    over the cross-lane edges) at edge caps 1, 2 and 7 (one per
+    graph: each multi-lane run is a few star rounds of jobs)."""
     import random
 
     rng = random.Random(42)
-    for trial in range(3):
-        n = 30
+    for trial, cap in enumerate((1, 2, 7)):
         edges = [
-            (f"n{rng.randrange(n):02d}", f"n{rng.randrange(n):02d}")
+            (f"n{rng.randrange(30):02d}", f"n{rng.randrange(30):02d}")
             for _ in range(25)
         ]
-        edges = [(a, b) for a, b in edges if a != b]
+        edges += [(b, a) for a, b in edges[:5]] + edges[5:8]
         pairs = spark.createDataFrame(edges, "id_a string, id_b string")
-        lp = {r.id: r.comp for r in dedup.connected_components(
-            pairs, max_iter=30, algorithm="label-prop").collect()}
-        st = {r.id: r.comp for r in dedup.connected_components(
-            pairs, algorithm="star").collect()}
-        assert lp == st, f"trial {trial}: {lp} != {st}"
+        ref = _ref_components(edges)
+        for c in (None, cap):
+            got = _components(pairs, monkeypatch, c)
+            assert got == ref, f"trial {trial}, cap {c}: {got} != {ref}"
 
 
-def test_connected_components_single_lane_shortcut(spark):
-    """Round 6: a graph that fits one contraction lane returns the
-    local union-find labeling directly (zero global rounds).  The
-    short-circuit must label identically to the multi-lane global
-    path (forced via a 2-edge lane cap) for every algorithm choice."""
+def test_connected_components_single_lane_shortcut(spark, monkeypatch):
+    """A graph under the edge cap is labeled by ONE union-find task
+    over the materialized edges (no join, no star rounds); it must
+    label like the reference, with comp the component minimum."""
     import random
 
     rng = random.Random(7)
@@ -537,40 +548,28 @@ def test_connected_components_single_lane_shortcut(spark):
         (f"n{rng.randrange(20):02d}", f"n{rng.randrange(20):02d}")
         for _ in range(30)
     ]
-    pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges if a != b], "id_a string, id_b string"
-    )
-    fast = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
-    old_cap = dedup._LOCAL_UF_MAX_EDGES
-    dedup._LOCAL_UF_MAX_EDGES = 2
-    try:
-        slow_lp = {r.id: r.comp for r in dedup.connected_components(
-            pairs, max_iter=30, algorithm="label-prop").collect()}
-        slow_st = {r.id: r.comp for r in dedup.connected_components(
-            pairs, algorithm="star").collect()}
-    finally:
-        dedup._LOCAL_UF_MAX_EDGES = old_cap
-    assert fast == slow_lp == slow_st
-    # comp is the component minimum in the short-circuit path too
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    fast = _components(pairs, monkeypatch)
+    assert fast == _ref_components(edges)
     assert all(comp <= node for node, comp in fast.items())
-
-
-def test_connected_components_deep_chain_auto_fallback(spark):
-    """A 40-node path (diameter 39 > max_iter 12) — the case the old
-    code refused with a hard raise.  algorithm='auto' now switches to
-    large-star/small-star and labels the whole chain with its min."""
-    chain = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(39)],
-        "id_a string, id_b string",
+    plan = (
+        dedup.connected_components(pairs)._jdf.queryExecution()
+        .executedPlan().toString()
     )
-    comps = {r.id: r.comp for r in
-             dedup.connected_components(chain, max_iter=12).collect()}
-    assert len(comps) == 40
-    assert set(comps.values()) == {"n000"}
-    # and 'star' directly agrees
-    direct = {r.id: r.comp for r in dedup.connected_components(
-        chain, algorithm="star").collect()}
-    assert direct == comps
+    assert "MapInPandas" in plan and "Coalesce 1" in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_connected_components_deep_chain(spark, monkeypatch):
+    """A 40-node path (diameter 39) labels every node with the chain
+    minimum on the single-task path and through the star rounds (six
+    hash lanes at a 7-edge cap)."""
+    chain = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(39)]
+    pairs = spark.createDataFrame(chain, "id_a string, id_b string")
+    for cap in (None, 7):
+        comps = _components(pairs, monkeypatch, cap)
+        assert comps == _ref_components(chain), cap
+        assert len(comps) == 40 and set(comps.values()) == {"n000"}, cap
 
 
 def test_int8_rerank_recall_vs_exact(spark, sf_dir):

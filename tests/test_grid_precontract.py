@@ -1,48 +1,88 @@
-"""Round-6 grid pre-contraction pins: _precontracted_components must
-label exactly like the raw star algorithm (comp = component min) on
-adversarial grid shapes — a grid-spanning snake (high diameter, the
-case that motivated the rewrite), random sparse grids, block-boundary
-components, and singletons-with-one-edge."""
+"""grid_dbscan component pins: clusters must equal a pure-Python
+union-find reference (cluster id = component's minimum cell id) on
+adversarial grid shapes — a grid-spanning snake (high diameter), random
+sparse grids, block-boundary components, and singletons — both on the
+single union-find task and on the multi-lane path, where
+connected_components contracts each 32x32 cell block in its lane and
+runs star rounds over the block-boundary edges (forced by lowering
+dedup._UF_MAX_EDGES)."""
 
 from __future__ import annotations
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
-from transformio_spark.operators.dedup import connected_components
-from transformio_spark.operators.grid import (
-    _precontracted_components,
-    grid_dbscan,
-)
+from transformio_spark.operators import dedup
+from transformio_spark.operators.grid import grid_dbscan
+
+_FWD = ((1, 0), (1, 1), (0, 1), (-1, 1))
 
 
-def _pairs_df(spark, cells, width):
-    """8-neighbor adjacency pairs of a cell set via the same 4 forward
-    offsets grid_dbscan uses."""
-    cs = set(cells)
-    rows = []
-    for (tx, ty) in cs:
-        a = ty * width + tx
-        for dx, dy in ((1, 0), (1, 1), (0, 1), (-1, 1)):
-            if (tx + dx, ty + dy) in cs:
-                rows.append((a, (ty + dy) * width + tx + dx))
-    if not rows:
-        rows = [(0, 0)]  # degenerate; filtered by u != v
-    return spark.createDataFrame(rows, "id_a long, id_b long")
+def _ref_clusters(rows, min_pts, width):
+    """Reference grid DBSCAN over (tx, ty, n) rows: union-find over the
+    8-neighbor adjacency of the core cells, one sorted tuple
+    (cluster_id, n_cells, n_points, tx_min, tx_max, ty_min, ty_max)
+    per cluster."""
+    core = {(tx, ty): n for tx, ty, n in rows if n >= min_pts}
+    parent = {c: c for c in core}
+
+    def cid(c):
+        return c[1] * width + c[0]
+
+    def find(c):
+        while parent[c] != c:
+            c = parent[c]
+        return c
+
+    for tx, ty in core:
+        for dx, dy in _FWD:
+            nb = (tx + dx, ty + dy)
+            if nb in core:
+                ra, rb = find((tx, ty)), find(nb)
+                if ra != rb:
+                    lo, hi = sorted((ra, rb), key=cid)
+                    parent[hi] = lo
+    groups = {}
+    for c in core:
+        groups.setdefault(find(c), []).append(c)
+    return sorted(
+        (
+            cid(root),
+            len(cs),
+            sum(core[c] for c in cs),
+            min(c[0] for c in cs),
+            max(c[0] for c in cs),
+            min(c[1] for c in cs),
+            max(c[1] for c in cs),
+        )
+        for root, cs in groups.items()
+    )
 
 
-def _labels(df):
-    return sorted(tuple(r) for r in df.collect())
+def _n_edges(rows):
+    cs = {(tx, ty) for tx, ty, _ in rows}
+    return sum((tx + dx, ty + dy) in cs for tx, ty in cs for dx, dy in _FWD)
+
+
+def _dbscan(spark, rows, monkeypatch, cap=None, min_pts=3, width=256):
+    cells = spark.createDataFrame(rows, "tx long, ty long, n long")
+    with monkeypatch.context() as m:
+        if cap is not None:
+            m.setattr(dedup, "_UF_MAX_EDGES", cap)
+        return sorted(
+            tuple(r)
+            for r in grid_dbscan(cells, min_pts=min_pts, width=width).collect()
+        )
 
 
 @pytest.mark.parametrize("case", ["snake", "random", "boundary"])
-def test_precontract_equals_star(spark, case):
-    width = 256
+def test_precontract_equals_star(spark, monkeypatch, case):
+    """Block-lane contraction + star over the boundary edges labels
+    like the reference (4 lanes: cap = a quarter of the edges)."""
     if case == "snake":
         # boustrophedon path spanning many 32-cell blocks: diameter
-        # ~ n_cells, the shape the pre-contraction targets
+        # ~ n_cells, the shape the block contraction targets
         cells = []
         for ty in range(0, 40, 2):
             xs = range(0, 200) if (ty // 2) % 2 == 0 else range(199, -1, -1)
@@ -56,37 +96,23 @@ def test_precontract_equals_star(spark, case):
         # isolated pair entirely inside one block
         cells = [(31, y) for y in range(10)] + [(32, y) for y in range(10)]
         cells += [(100, 100), (101, 100)]
-    pairs = _pairs_df(spark, cells, width)
-    fast = _labels(_precontracted_components(pairs, width=width))
-    slow = _labels(connected_components(pairs, algorithm="star"))
-    assert fast == slow
-    assert len(fast) > 0
+    rows = [(tx, ty, 3) for tx, ty in set(cells)]
+    ref = _ref_clusters(rows, 3, 256)
+    got = _dbscan(spark, rows, monkeypatch, cap=-(-_n_edges(rows) // 4))
+    assert got == ref
+    assert len(got) > 0
 
 
-def test_grid_dbscan_direct_equals_block_path(spark):
-    """Round 6: the single-task union-find shortcut must produce the
-    same clusters as the block pre-contraction + star pipeline (forced
-    via the edge cap) on a random grid."""
-    from transformio_spark.operators import grid as G
-
+def test_grid_dbscan_direct_equals_block_path(spark, monkeypatch):
+    """The single union-find task and the block-lane path (forced via
+    a 7-edge cap) produce the reference clusters on a random grid with
+    mixed core and non-core cells."""
     rng = random.Random(11)
-    rows = [(tx, ty, 3) for tx, ty in
-            {(rng.randrange(80), rng.randrange(80)) for _ in range(1200)}]
-    cells = spark.createDataFrame(rows, "tx long, ty long, n long")
-
-    def run():
-        return sorted(
-            tuple(r) for r in grid_dbscan(cells, min_pts=3, width=256).collect()
-        )
-
-    direct = run()
-    old_cap = G._DIRECT_UF_MAX_EDGES
-    G._DIRECT_UF_MAX_EDGES = 0
-    try:
-        block = run()
-    finally:
-        G._DIRECT_UF_MAX_EDGES = old_cap
-    assert direct == block
+    rows = [(tx, ty, rng.choice((2, 3, 4))) for tx, ty in
+            {(rng.randrange(40), rng.randrange(40)) for _ in range(300)}]
+    direct = _dbscan(spark, rows, monkeypatch)
+    block = _dbscan(spark, rows, monkeypatch, cap=7)
+    assert direct == block == _ref_clusters(rows, 3, 256)
     assert len(direct) > 1
 
 

@@ -34,9 +34,9 @@ def _simple_plan_lines(df) -> list[str]:
     return df._jdf.queryExecution().executedPlan().toString().split("\n")
 
 
-def _arrow_udf_nodes(df):
-    """ArrowEvalPython nodes of the final adaptive plan of an executed
-    DataFrame (query stages are leaves: descend into their plans)."""
+def _plan_nodes(df):
+    """Every node of the final adaptive plan of an executed DataFrame,
+    query stages descended into."""
 
     def walk(node):
         if "QueryStage" in node.nodeName():
@@ -47,8 +47,13 @@ def _arrow_udf_nodes(df):
         for i in range(children.size()):
             yield from walk(children.apply(i))
 
-    final = df._jdf.queryExecution().executedPlan().executedPlan()
-    return [n for n in walk(final) if n.nodeName() == "ArrowEvalPython"]
+    return list(walk(df._jdf.queryExecution().executedPlan().executedPlan()))
+
+
+def _arrow_udf_nodes(df):
+    """ArrowEvalPython nodes of the final adaptive plan of an executed
+    DataFrame."""
+    return [n for n in _plan_nodes(df) if n.nodeName() == "ArrowEvalPython"]
 
 
 def _jobs_per_execution(spark, build) -> tuple[int, int]:
@@ -355,3 +360,45 @@ def test_knn_city_assign_builds_without_jobs(spark, sf_dir):
             spark, lambda: q.q_knn_city_assign(spark, sf_dir)
         )
         assert build_jobs == 0, (i, build_jobs)
+
+
+def test_grid_dbscan_union_find_reads_checkpoint(spark, sf_dir):
+    """The single union-find task of grid_dbscan reads the
+    materialized edge set: the child of its ``Coalesce 1`` is a
+    checkpoint scan with no join below it, so edge generation (the
+    neighbor join) runs in parallel before the single task starts."""
+    df = q.q_grid_dbscan(spark, sf_dir)
+    df.collect()
+    uf = [
+        n for n in _plan_nodes(df)
+        if n.nodeName() == "MapInPandas" and "_uf_partition" in n.toString()
+    ]
+    assert len(uf) == 1, [n.toString() for n in uf]
+
+    def child(node):
+        # skip the codegen wrappers between operators
+        node = node.children().apply(0)
+        while node.nodeName().startswith(("WholeStageCodegen", "InputAdapter")):
+            node = node.children().apply(0)
+        return node
+
+    coalesce = child(uf[0])
+    assert coalesce.nodeName() == "Coalesce", coalesce.toString()
+    assert coalesce.numPartitions() == 1, coalesce.toString()
+    scan = child(coalesce)
+    assert scan.nodeName() == "Scan ExistingRDD", scan.toString()
+    assert " at localCheckpoint at " in scan.rdd().toString()
+    assert scan.children().size() == 0
+
+
+@pytest.mark.parametrize(
+    "name,budget",
+    [("grid_dbscan", 13), ("curation_funnel", 15), ("neardup_components", 8)],
+)
+def test_component_queries_job_budget(spark, sf_dir, name, budget):
+    """Jobs per warm execution (build + collect) of the queries that
+    label connected components: a new driver barrier fails here."""
+    qfn = getattr(q, f"q_{name}")
+    qfn(spark, sf_dir).collect()
+    _, jobs = _jobs_per_execution(spark, lambda: qfn(spark, sf_dir))
+    assert jobs <= budget, (name, jobs)

@@ -15,7 +15,9 @@ spatial_join, and AQE skew-join handles residual imbalance.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions import text as T
@@ -329,20 +331,22 @@ def simhash_md5_buckets(
     )
 
 
-#: max edges one local union-find task folds — bounds task memory at
-#: adversarial scale (a few MB of dict state) while letting gate-sized
-#: graphs collapse in a single task
-_LOCAL_UF_MAX_EDGES = 50_000
+#: max edges one union-find task folds (~50 MB of dict state at the
+#: cap, the order of a shuffle partition's working set).  A graph at
+#: or under it is labeled by ONE task; a larger one splits its nodes
+#: into ceil(|E| / cap) lanes.  Zoom-8 grid adjacency (<= 4 x 65,536
+#: cells) stays under the cap at any corpus size.
+_UF_MAX_EDGES = 400_000
 
 
 def _uf_partition(batches):
     """Per-partition union-find over (u, v) edge batches (mapInPandas
-    body — shared by dedup's hash-lane contraction and grid's
-    block contraction).  Unions keep the SMALLER id as root, so the
-    final root of every node is its local component's minimum.
-    Yields (id, root) for every node seen.  Python `<` must agree
-    with Spark's min/least ordering for the id type (longs always;
-    strings when ASCII — every engine id column is)."""
+    body of connected_components).  Unions keep the SMALLER id as
+    root, so the final root of every node is its local component's
+    minimum.  Duplicate and reversed edges are harmless.  Yields
+    (id, root) for every node seen.  Python `<` must agree with
+    Spark's min/least ordering for the id type (longs always; strings
+    when ASCII — every engine id column is)."""
     import pandas as pd
 
     parent: dict = {}
@@ -370,15 +374,15 @@ def _uf_partition(batches):
 def _star_components(sym: DataFrame, max_rounds: int = 64) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    2014 — public) over a symmetric deduped edge set (u, v), u != v.
+    2014 — public) over an edge set (u, v), u != v, in any direction
+    and with duplicates.
 
     Each round: large-star connects every neighbor LARGER than u to
     the minimum of u's closed neighborhood; small-star (on the
     resulting child>parent canonical edges) re-points every smaller
     neighbor and u itself at the group minimum.  Converges in
-    O(log^2 n) rounds regardless of graph diameter — the
-    deep-chain-safe path that min-label propagation (diameter-bounded)
-    falls back to.  Returns (id, comp) with comp = component min."""
+    O(log^2 n) rounds regardless of graph diameter.  Returns
+    (id, comp) with comp = component min."""
     # localCheckpoint truncates the lineage each round — an iterative
     # self-join otherwise grows the logical plan geometrically until
     # ANALYSIS (not data) blows the driver heap.  On a multi-executor
@@ -438,186 +442,88 @@ def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 12,
-    algorithm: str = "auto",
+    lane: Callable[[str], Column] | None = None,
 ) -> DataFrame:
-    """Connected components over a near-duplicate pair graph — the
-    dedup ENDGAME: pair lists must become disjoint keep-one groups
-    before any row is dropped (A~B, B~C must retire B AND C even when
-    (A,C) was never emitted).
+    """Connected components over a pair graph — the dedup ENDGAME:
+    pair lists must become disjoint keep-one groups before any row is
+    dropped (A~B, B~C must retire B AND C even when (A,C) was never
+    emitted).  Returns (id, comp) for every node appearing in
+    ``pairs``; comp is the component's minimum id.
 
-    Min-label propagation: every node starts labeled with itself;
-    each round takes the min of its own and its neighbors' labels;
-    stops at the first fixpoint (one count() action per round).
-    Rounds needed = graph diameter — near-dup graphs are
-    diameter-bounded in practice (clusters are boilerplate families,
-    a few hops wide), so this is 3-5 shuffle rounds at any corpus
-    size.
-
-    ``algorithm``:
-      * ``"auto"`` (default) — label propagation; if it has not
-        converged after ``max_iter`` rounds (adversarially deep
-        graph), SWITCH to the O(log^2 n) alternating
-        large-star/small-star algorithm (round 5; _star_components)
-        instead of aborting.
-      * ``"label-prop"`` — propagation only; raises on
-        non-convergence (an UNCONVERGED labeling silently
-        under-merges groups, which a dedup pipeline must never do).
-      * ``"star"`` — large-star/small-star directly.
-
-    Returns (id, comp) for every node appearing in ``pairs``; comp is
-    the component's minimum id."""
-    if algorithm not in ("auto", "label-prop", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    edges = pairs.select(
-        F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).where(F.col("u") != F.col("v"))
-    # canonical undirected edge set, materialized ONCE — it feeds the
-    # lane split, the contraction, and the node universe (same
-    # cluster-mode checkpoint() caveat as _star_components)
-    half = (
-        edges.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
+    Local union-find contraction (Kiveris et al. 2014): the edge set
+    is materialized once, its size observed by the same job.  Up to
+    ``_UF_MAX_EDGES`` edges, ONE union-find task labels the whole
+    graph (unions keep the minimum root, so its roots are the
+    component minima).  Above the cap the nodes split into
+    n = ceil(|E| / cap) lanes: ``lane`` maps an id column name to its
+    lane key (default ``pmod(xxhash64(c), n)``; callers with locality
+    pass their own, e.g. grid_dbscan's cell-block key).  Lane-internal
+    edges collapse per lane to their local minimum, only cross-lane
+    edges enter the O(log^2 n) large-star/small-star rounds, and the
+    two labelings compose — local roots are local minima, so the
+    composition is again the component minimum."""
+    # materialized ONCE — it feeds the lane split, the contraction and
+    # the node universe; observe() counts it inside the checkpoint job
+    # (same cluster-mode checkpoint() caveat as _star_components)
+    n_obs = Observation()
+    edges = (
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .observe(n_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    # round 6: hash-lane LOCAL UNION-FIND PRE-CONTRACTION (the local-
-    # contraction optimization of Kiveris et al. 2014): nodes hash
-    # into ceil(|E| / _LOCAL_UF_MAX_EDGES) lanes; edges internal to a
-    # lane collapse to their local minimum in ONE mapInPandas pass,
-    # and only cross-lane edges enter the global rounds.  A gate-
-    # scale graph fits one lane and needs ZERO global rounds; at
-    # 10^12 edges per-task state stays bounded and the global phase
-    # sees a contracted fraction of the graph.  Labels compose to the
-    # identical (id, comp = component min) output — same argument as
-    # grid._precontracted_components, pinned by the dedup property
-    # tests.
-    n_edges = half.count()
-    n_parts = max(1, -(-n_edges // _LOCAL_UF_MAX_EDGES))
-    id_type = dict(half.dtypes)["u"]
-    if n_parts == 1:
-        # pmod(xxhash64(id), 1) == 0 for every id: EVERY edge is
-        # lane-internal, so the single union-find task sees the whole
-        # graph, labels every node of `half`, and unions keep the
-        # minimum root — the local pass IS the full (id, comp =
-        # component min) labeling.  Returning it directly skips the
-        # structurally-empty global phase (cross-lane set is empty by
-        # construction), which otherwise still costs ~5 driver job
-        # launches (sym/labels/per-round checkpoints + counts) per
-        # call.  Same output as the composed path — pinned in
-        # tests/test_dedup_similarity.py.
+    n_edges = n_obs.get["n"]
+    id_type = dict(edges.dtypes)["u"]
+    uf_schema = f"id {id_type}, root {id_type}"
+    if n_edges <= _UF_MAX_EDGES:
         return (
-            half.coalesce(1)
-            .mapInPandas(_uf_partition, f"id {id_type}, root {id_type}")
+            edges.coalesce(1)
+            .mapInPandas(_uf_partition, uf_schema)
             .select("id", F.col("root").alias("comp"))
         )
-    lane = {
-        "lu": F.pmod(F.xxhash64(F.col("u")), F.lit(n_parts)),
-        "lv": F.pmod(F.xxhash64(F.col("v")), F.lit(n_parts)),
-    }
-    tagged = half.withColumns(lane)
-    # materialized ONCE (round 6): mapping feeds mu, mv and compose's
-    # node-labeling join — MapInPandas sits above the reusable
-    # exchange, so without the checkpoint each subtree copy re-ran the
-    # per-lane union-find pass.  |mapping| is bounded by the lane-
-    # internal edge endpoints (same scale argument as ``half``).
+    n_lanes = -(-n_edges // _UF_MAX_EDGES)
+    if lane is None:
+
+        def lane(c: str) -> Column:
+            return F.pmod(F.xxhash64(F.col(c)), F.lit(n_lanes))
+
+    tagged = edges.withColumns({"lu": lane("u"), "lv": lane("v")})
+    # materialized ONCE: mapping feeds mu, mv and the node-labeling
+    # join — MapInPandas sits above the reusable exchange, so without
+    # the checkpoint each subtree copy re-ran the per-lane union-find
     mapping = (
         tagged.where(F.col("lu") == F.col("lv"))
         .select("u", "v", "lu")
-        .repartition(n_parts, "lu")
+        .repartition(n_lanes, "lu")
         .drop("lu")
-        .mapInPandas(_uf_partition, f"id {id_type}, root {id_type}")
+        .mapInPandas(_uf_partition, uf_schema)
         .localCheckpoint(eager=True)
     )
-    cross = tagged.where(F.col("lu") != F.col("lv")).select("u", "v")
     mu = mapping.select(F.col("id").alias("u"), F.col("root").alias("ru"))
     mv = mapping.select(F.col("id").alias("v"), F.col("root").alias("rv"))
+    # a root shares its node's lane, so a cross-lane edge never
+    # contracts to a self-loop
     contracted = (
-        cross.join(mu, "u", "left")
+        tagged.where(F.col("lu") != F.col("lv"))
+        .join(mu, "u", "left")
         .join(mv, "v", "left")
         .select(
             F.coalesce(F.col("ru"), F.col("u")).alias("u"),
             F.coalesce(F.col("rv"), F.col("v")).alias("v"),
         )
-        .where(F.col("u") != F.col("v"))
     )
-
-    def compose(global_labels: DataFrame) -> DataFrame:
-        nodes = (
-            half.select(F.col("u").alias("id"))
-            .union(half.select(F.col("v").alias("id")))
-            .distinct()
-        )
-        base = nodes.join(mapping, "id", "left").select(
-            "id", F.coalesce(F.col("root"), F.col("id")).alias("_r")
-        )
-        return base.join(
-            global_labels.select(F.col("id").alias("_r"), "comp"),
-            "_r",
-            "left",
-        ).select("id", F.coalesce(F.col("comp"), F.col("_r")).alias("comp"))
-
-    if algorithm == "star":
-        return compose(_star_components(contracted))
-    sym = (
-        contracted.union(
-            contracted.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
+    star = _star_components(contracted)
+    nodes = (
+        edges.select(F.col("u").alias("id"))
+        .union(edges.select(F.col("v").alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("u").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
+    base = nodes.join(mapping, "id", "left").select(
+        "id", F.coalesce(F.col("root"), F.col("id")).alias("_r")
     )
-    # localCheckpoint per round, NOT cache: ``labels`` appears twice
-    # in each round's plan, so without lineage truncation the
-    # analyzed tree doubles every round and Catalyst analysis (not
-    # the data) exhausts the driver heap after ~7 rounds.  cache()
-    # only swaps in InMemoryRelation at physical planning; the
-    # logical tree still carries the full history.
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(
-                    F.col("id").alias("v"), F.col("comp").alias("v_comp")
-                ),
-                "v",
-            )
-            .groupBy("u")
-            .agg(F.min("v_comp").alias("nbr_comp"))
-        )
-        # carry the changed flag inside the round's own projection
-        # (round 6): the old new-vs-old join re-shuffled both label
-        # sets once per round just to count differences; the join
-        # already had both values in hand
-        new_full = (
-            labels.join(nbr_min, labels["id"] == nbr_min["u"], "left")
-            .select(
-                labels["id"],
-                F.least(
-                    labels["comp"],
-                    F.coalesce(nbr_min["nbr_comp"], labels["comp"]),
-                ).alias("comp"),
-                (
-                    F.coalesce(nbr_min["nbr_comp"], labels["comp"])
-                    < labels["comp"]
-                ).alias("_chg"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_full.where(F.col("_chg")).count()
-        labels = new_full.drop("_chg")
-        if changed == 0:
-            break
-    else:
-        if algorithm == "auto":
-            return compose(_star_components(contracted))
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
-    return compose(labels)
+    return base.join(
+        star.select(F.col("id").alias("_r"), "comp"), "_r", "left"
+    ).select("id", F.coalesce(F.col("comp"), F.col("_r")).alias("comp"))
 
 
 def neardup_component_summary(

@@ -28,127 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: max adjacency edges handled by ONE union-find task (round 6): the
-#: 4-forward-offset edge set is <= 4x the core-cell count, so a core
-#: table under this/4 cells fits one bounded task (~50 MB dict state
-#: at the cap — the same order as a shuffle partition's working set).
-#: Grid cell tables are capped by the zoom grid itself (zoom 8:
-#: 65,536 cells -> <= 262,144 edges at ANY corpus scale), so the gate
-#: query takes this path forever; finer grids beyond the cap fall
-#: back to the block pre-contraction + global star pipeline.
-_DIRECT_UF_MAX_EDGES = 400_000
-
-
-def _precontracted_components(
-    pairs: DataFrame,
-    width: int,
-    block_bits: int = 5,
-    nodes: DataFrame | None = None,
-) -> DataFrame:
-    """Connected components over a grid-cell adjacency pair set with
-    PARTITION-LOCAL PRE-CONTRACTION (round 6, guide §1.2 "fix the
-    distributed algorithm"): grid components are routinely
-    high-diameter snakes, so the global O(log^2 n) star rounds — each
-    a multi-job shuffle round — dominated grid_dbscan's wall clock.
-
-    Plan: edges whose endpoints share a (2^block_bits)-cell square
-    block are grouped by block and collapsed by a per-partition
-    union-find (mapInPandas — Arrow-vectorized partition pass, edge
-    count per partition bounded by block occupancy, never by grid
-    area); each local component contracts to its MINIMUM cell id.
-    Only block-boundary edges (the perimeter set, << area) enter the
-    global star algorithm, and a partition-local snake costs zero
-    global rounds.  Local roots are set minima and unions keep the
-    smaller root, so the contracted graph's star labels compose to
-    exactly the same (id, comp=component min) labeling as running
-    star on the raw pair set — pinned equal in
-    tests/test_grid_precontract.py.
-
-    Returns (id, comp) for every id appearing in ``pairs``."""
-    # materialize the pair set once: internal/cross/node derivations
-    # each re-evaluated the whole upstream edge-generation subtree
-    # (extract -> counts -> spread -> join) otherwise.  Same
-    # cluster-mode checkpoint() caveat as dedup._star_components.
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
-    )
-
-    bs = 1 << block_bits
-
-    def blk(c: str) -> F.Column:
-        # cell_id = ty*width + tx (tx, ty >= 0) -> block row-major key;
-        # integer `div` keeps this exact for ids beyond 2^53
-        return F.expr(
-            f"(({c} div {int(width)}) div {bs}) * {int(width)} "
-            f"+ (({c} % {int(width)}) div {bs})"
-        ).cast("long")
-
-    tagged = edges.withColumns({"bu": blk("u"), "bv": blk("v")})
-    internal = tagged.where(F.col("bu") == F.col("bv"))
-    cross = tagged.where(F.col("bu") != F.col("bv")).select("u", "v")
-
-    spark = pairs.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from .dedup import _uf_partition
-
-    # materialize the local-contraction mapping ONCE (round 6): it
-    # feeds mu, mv AND the final node-labeling join — three separate
-    # plan subtrees otherwise, and MapInPandas sits ABOVE the reusable
-    # exchange, so each copy re-ran the per-block union-find pass.
-    # |mapping| <= |internal edge endpoints| — bounded like the edges.
-    mapping = (
-        internal.select("u", "v", "bu")
-        .repartition(n_parts, "bu")
-        .drop("bu")
-        .mapInPandas(_uf_partition, "id long, root long")
-        .localCheckpoint(eager=True)
-    )
-    mu = mapping.select(F.col("id").alias("u"), F.col("root").alias("ru"))
-    mv = mapping.select(F.col("id").alias("v"), F.col("root").alias("rv"))
-    contracted = (
-        cross.join(mu, "u", "left")
-        .join(mv, "v", "left")
-        .select(
-            F.coalesce(F.col("ru"), F.col("u")).alias("u"),
-            F.coalesce(F.col("rv"), F.col("v")).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-    )
-    # round 6: the boundary graph goes through the generic
-    # connected_components, whose hash-lane local union-find collapses
-    # a gate-scale boundary set (measured: 210 contracted edges at
-    # sf0.1) in one task with zero global star rounds; "star" stays
-    # the global algorithm for the adversarial-depth case.
-    from .dedup import connected_components
-
-    star = connected_components(
-        contracted.select(
-            F.col("u").alias("id_a"), F.col("v").alias("id_b")
-        ),
-        algorithm="star",
-    )
-    # round 6: callers that already hold a materialized SUPERSET of
-    # the edge nodes (grid_dbscan's checkpointed core table — every
-    # edge endpoint is a core cell) pass it as ``nodes`` and skip the
-    # union+distinct re-derivation from the edge set; extra ids label
-    # as singletons (comp = id), exactly what the downstream
-    # coalesce(comp, cell_id) produced for them before.
-    if nodes is None:
-        nodes = (
-            edges.select(F.col("u").alias("id"))
-            .union(edges.select(F.col("v").alias("id")))
-            .distinct()
-        )
-    base = nodes.join(mapping, "id", "left").select(
-        "id", F.coalesce(F.col("root"), F.col("id")).alias("r")
-    )
-    return base.join(
-        star.select(F.col("id").alias("r"), "comp"), "r", "left"
-    ).select("id", F.coalesce(F.col("comp"), F.col("r")).alias("comp"))
-
+from .dedup import connected_components
 
 def focal_sum(
     cells: DataFrame,
@@ -215,13 +95,15 @@ def grid_dbscan(
     eps-neighborhood bucket, so the quadratic point-pair search of
     classic DBSCAN becomes a NEIGHBOR EQUI-JOIN over 4 forward
     offsets — each adjacent pair emitted exactly once — and the
-    transitive closure reuses operators/dedup.connected_components,
-    label propagation with the large-star/small-star fallback).
+    transitive closure is operators/dedup.connected_components with
+    32x32 cell blocks as its union-find lanes).
 
     Scale shape: |cells| << |points| (the input is the aggregated
     tile table), edge generation is spread(×4) → one equi-join on
-    (tx, ty), and the closure is diameter-bounded shuffle rounds —
-    no all-pairs stage anywhere.  Border/noise points of classic
+    (tx, ty), and the closure is one union-find task while the
+    adjacency set fits it (zoom 8 always does), else per-block
+    union-find plus star rounds over the block-boundary edges — no
+    all-pairs stage anywhere.  Border/noise points of classic
     DBSCAN map to non-core cells and are excluded by construction.
 
     Returns one row per cluster: ``cluster_id`` (minimum row-major
@@ -276,49 +158,18 @@ def grid_dbscan(
         on=["tx", "ty"],
         how="inner",
     ).select("id_a", "id_b")
-    # round 6 (§1.2 measure first): when the WHOLE adjacency set fits
-    # one bounded union-find task, run it directly — the block
-    # pre-contraction + global-star pipeline is ~8 driver job barriers
-    # (edge/mapping/half checkpoints, counts, star rounds) and
-    # measured 6.75 s where the single task costs 0.93 s at sf0.1.
-    # |edges| <= 4|core| and core is already materialized, so the
-    # decision is one cheap count on checkpointed data; the zoom-8
-    # gate grid keeps 4|core| under the cap at any corpus size, while
-    # finer grids fall back to the scale-out path.  Union-by-min makes
-    # the task's roots the component minima — identical labels to the
-    # star path (pinned in tests/test_grid_precontract.py).
-    if 4 * core.count() <= _DIRECT_UF_MAX_EDGES:
-        from .dedup import _uf_partition
+    w = int(width)
 
-        labels = (
-            pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .coalesce(1)
-            .mapInPandas(_uf_partition, "id long, root long")
-            .select(F.col("id").alias("cell_id"), F.col("root").alias("comp"))
-        )
-        labeled = core.join(labels, on="cell_id", how="left").withColumn(
-            "comp", F.coalesce(F.col("comp"), F.col("cell_id"))
-        )
-        return labeled.groupBy(F.col("comp").alias("cluster_id")).agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.sum("n").alias("n_points"),
-            F.min("tx").alias("tx_min"),
-            F.max("tx").alias("tx_max"),
-            F.min("ty").alias("ty_min"),
-            F.max("ty").alias("ty_max"),
-        )
-    # grid components are routinely HIGH-diameter (a connected band of
-    # core cells is a hops-long snake: measured diameter >> 12 on the
-    # sf0.1 gate corpus — one 65k-cell component), so skip the
-    # diameter-bounded label-propagation attempt; round 6 adds
-    # partition-local union-find pre-contraction so the global
-    # O(log^2 n) star rounds only see block-boundary edges
-    # (_precontracted_components; 47s -> 31s -> 20s -> measured in
-    # OPTIMIZATION_r06.md).
-    labels = _precontracted_components(
-        pairs, width=width, nodes=core.select(F.col("cell_id").alias("id"))
-    )
+    def block(c: str) -> F.Column:
+        # union-find lane = the cell's 32x32 block: grid components are
+        # routinely HIGH-diameter snakes, and a snake's in-block stretch
+        # then contracts in its lane instead of in the global star
+        # rounds.  Integer `div` keeps the key exact beyond 2^53.
+        return F.expr(
+            f"(({c} div {w}) div 32) * {w} + (({c} % {w}) div 32)"
+        ).cast("long")
+
+    labels = connected_components(pairs, lane=block)
     labeled = core.join(
         labels.withColumnRenamed("id", "cell_id"), on="cell_id", how="left"
     ).withColumn("comp", F.coalesce(F.col("comp"), F.col("cell_id")))

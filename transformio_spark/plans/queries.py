@@ -1165,9 +1165,9 @@ def q_curation_funnel(spark, sf_dir) -> DataFrame:
 
 def q_neardup_components(spark, sf_dir) -> DataFrame:
     """Near-duplicate CLUSTERING (round 4): MinHash-LSH pairs →
-    distributed connected components (min-label propagation,
-    operators/dedup.connected_components) → one row per keep-one
-    group.  The oracle recomputes components over the brute-force
+    distributed connected components (lane-local union-find +
+    large-star/small-star, operators/dedup.connected_components) → one
+    row per keep-one group.  The oracle recomputes components over the brute-force
     exact-Jaccard pair set with a DuckDB recursive CTE — valid by the
     same exhaustively-verified-recall argument as minhash_pairs."""
     from ..operators import dedup
@@ -2005,9 +2005,9 @@ def q_grid_dbscan(spark, sf_dir) -> DataFrame:
     primitive, grid formulation): zoom-8 tile counts; cells with >= 3
     points are core; clusters are 8-connected components of core
     cells (operators/grid.grid_dbscan — neighbor spread ×4 forward
-    offsets → ONE equi-join on (tx,ty) for edges, then the dedup
-    connected-components machinery: label propagation with the
-    large-star/small-star fallback; no all-pairs stage).  Observables
+    offsets → ONE equi-join on (tx,ty) for edges, then
+    dedup.connected_components with cell-block union-find lanes; no
+    all-pairs stage).  Observables
     per cluster: cell/point counts + bbox — a wrong offset splits or
     fuses clusters, a closure bug under-merges.  The DuckDB twin
     replays edges relationally and closes them with WITH RECURSIVE
