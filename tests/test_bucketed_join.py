@@ -137,10 +137,7 @@ def test_asof_join_null_carry_value_still_matches(spark):
     NULL, not fall through to an older non-null row (ADVICE r4: the
     carry struct tracks presence independent of value nullability,
     matching DuckDB ASOF LEFT JOIN)."""
-    from transformio_spark.operators.temporal import (
-        asof_join_backward,
-        asof_join_backward_salted,
-    )
+    from transformio_spark.operators.temporal import asof_join_backward
 
     left = spark.createDataFrame(
         [(1, 100, "e1"), (1, 30, "e2")], "user_id long, ts long, tag string"
@@ -149,32 +146,24 @@ def test_asof_join_null_carry_value_still_matches(spark):
         [(1, 20, "old_nonnull"), (1, 90, None)],
         "user_id long, ts long, label string",
     )
-    for fn in (asof_join_backward, asof_join_backward_salted):
-        out = {
-            r.tag: r.who
-            for r in fn(left, right, "user_id", "ts", {"who": "label"}).collect()
-        }
-        assert out["e1"] is None, fn.__name__      # matched row carries NULL
-        assert out["e2"] == "old_nonnull", fn.__name__
+    out = {
+        r.tag: r.who
+        for r in asof_join_backward(
+            left, right, "user_id", "ts", {"who": "label"}
+        ).collect()
+    }
+    assert out["e1"] is None      # matched row carries NULL
+    assert out["e2"] == "old_nonnull"
 
 
-def test_asof_join_salted_equals_unsalted_hot_key(spark):
-    """Skew treatment: the ts-bucketed salted variant returns exactly
-    the unsalted result on a corpus where one key owns 80% of rows."""
-    import numpy as np
+def _check_asof_against_bruteforce(spark, lk, lt, rk, rt, trial):
+    """``asof_join_backward`` on the given keys/timestamps equals per-row
+    brute force (latest right ts <= left ts per key)."""
+    from transformio_spark.operators.temporal import asof_join_backward
 
-    from transformio_spark.operators.temporal import (
-        asof_join_backward,
-        asof_join_backward_salted,
-    )
-
-    rng = np.random.default_rng(23)
-    n_l, n_r = 400, 300
-    lk = np.where(rng.random(n_l) < 0.8, 7, rng.integers(0, 5, n_l))
-    lt = rng.integers(0, 10_000, n_l)
-    rk = np.where(rng.random(n_r) < 0.8, 7, rng.integers(0, 5, n_r))
-    rt = rng.integers(0, 10_000, n_r)
-    seen, rrows = set(), []
+    # unique right (key, ts) so "the latest" is well-defined
+    seen = set()
+    rrows = []
     for k, t in zip(rk, rt):
         if (int(k), int(t)) not in seen:
             seen.add((int(k), int(t)))
@@ -183,18 +172,33 @@ def test_asof_join_salted_equals_unsalted_hot_key(spark):
     left = spark.createDataFrame(lrows, "k long, ts long, lid long")
     right = spark.createDataFrame(rrows, "k long, ts long, label string")
 
-    base = {
+    got = {
         r.lid: r.who
-        for r in asof_join_backward(left, right, "k", "ts", {"who": "label"}).collect()
+        for r in asof_join_backward(
+            left, right, "k", "ts", {"who": "label"}
+        ).collect()
     }
-    for n_buckets in (1, 4, 16):
-        salted = {
-            r.lid: r.who
-            for r in asof_join_backward_salted(
-                left, right, "k", "ts", {"who": "label"}, n_buckets=n_buckets
-            ).collect()
-        }
-        assert salted == base, n_buckets
+    for k, t, lid in lrows:
+        cands = [(rt_, lab) for rk_, rt_, lab in rrows
+                 if rk_ == k and rt_ <= t]
+        expect = max(cands)[1] if cands else None
+        assert got[lid] == expect, (trial, lid)
+
+
+def test_asof_join_salted_equals_unsalted_hot_key(spark):
+    """Skew: on a corpus where one key owns 80% of rows (its whole
+    sorted run lands on one window partition), the single-window as-of
+    join still equals per-row brute force."""
+    import numpy as np
+
+    rng = np.random.default_rng(23)
+    n_l, n_r = 400, 300
+    lk = np.where(rng.random(n_l) < 0.8, 7, rng.integers(0, 5, n_l))
+    lt = rng.integers(0, 10_000, n_l)
+    rk = np.where(rng.random(n_r) < 0.8, 7, rng.integers(0, 5, n_r))
+    rt = rng.integers(0, 10_000, n_r)
+    assert (lk == 7).mean() > 0.7 and (rk == 7).mean() > 0.7
+    _check_asof_against_bruteforce(spark, lk, lt, rk, rt, "hot")
 
 
 def test_asof_join_random_matches_bruteforce(spark):
@@ -209,29 +213,7 @@ def test_asof_join_random_matches_bruteforce(spark):
         lt = rng.integers(0, 100, n_l)
         rk = rng.integers(0, 5, n_r)
         rt = rng.integers(0, 100, n_r)
-        # unique right (key, ts) so "the latest" is well-defined
-        seen = set()
-        rrows = []
-        for k, t in zip(rk, rt):
-            if (int(k), int(t)) not in seen:
-                seen.add((int(k), int(t)))
-                rrows.append((int(k), int(t), f"r{k}-{t}"))
-        lrows = [(int(k), int(t), i) for i, (k, t) in enumerate(zip(lk, lt))]
-        left = spark.createDataFrame(lrows, "k long, ts long, lid long")
-        right = spark.createDataFrame(rrows, "k long, ts long, label string")
-        from transformio_spark.operators.temporal import asof_join_backward
-
-        got = {
-            r.lid: r.who
-            for r in asof_join_backward(
-                left, right, "k", "ts", {"who": "label"}
-            ).collect()
-        }
-        for k, t, lid in lrows:
-            cands = [(rt_, lab) for rk_, rt_, lab in rrows
-                     if rk_ == k and rt_ <= t]
-            expect = max(cands)[1] if cands else None
-            assert got[lid] == expect, (trial, lid)
+        _check_asof_against_bruteforce(spark, lk, lt, rk, rt, trial)
 
 
 def test_sessionize_semantics(spark):
@@ -287,18 +269,17 @@ def test_sessionize_tiebreak_and_invariance(spark):
         sessionize(df, 0)
 
 
-def test_sessionize_bucketed_equals_plain(spark):
-    """Round 6: the ts-bucketed skew-safe sessionize must number
-    sessions identically to the single-window operator — hot key,
-    boundary-straddling gaps, ties, sparse keys, and random
-    timelines."""
+def test_sessionize_matches_gap_rule(spark):
+    """``sessionize`` numbers sessions exactly as a pure-Python gap
+    rule (order each key's events by (ts, event_id); a gap of <= 30 s
+    stays in the session, a larger one opens the next) on a hot key,
+    exact-threshold gaps, a tie burst, a far straggler and sparse
+    keys."""
     import random
+    from collections import defaultdict
     from datetime import datetime, timedelta
 
-    from transformio_spark.operators.temporal import (
-        sessionize,
-        sessionize_bucketed,
-    )
+    from transformio_spark.operators.temporal import sessionize
 
     t0 = datetime(2024, 1, 1)
     rng = random.Random(13)
@@ -327,15 +308,22 @@ def test_sessionize_bucketed_equals_plain(spark):
     df = spark.createDataFrame(
         rows, "event_id long, user_id long, ts timestamp"
     )
-    for nb in (1, 3, 16):
-        plain = sorted(
-            (r.event_id, r.session_idx)
-            for r in sessionize(df, 30, key_col="user_id").collect()
-        )
-        buck = sorted(
-            (r.event_id, r.session_idx)
-            for r in sessionize_bucketed(
-                df, 30, key_col="user_id", n_buckets=nb
-            ).collect()
-        )
-        assert buck == plain, f"n_buckets={nb}"
+
+    by_key = defaultdict(list)
+    for e, k, ts in rows:
+        by_key[k].append((ts, e))
+    expect = {}
+    for events in by_key.values():
+        events.sort()
+        idx, prev = -1, None
+        for ts, e in events:
+            if prev is None or ts - prev > timedelta(seconds=30):
+                idx += 1
+            expect[e] = idx
+            prev = ts
+    got = {
+        r.event_id: r.session_idx
+        for r in sessionize(df, 30, key_col="user_id").collect()
+    }
+    assert got == expect
+    assert len(set(expect.values())) > 2

@@ -198,16 +198,6 @@ def test_multimodal_unknown_kind_errors_per_row(spark):
     assert "no decoder" in rows[0].err
 
 
-def test_minhash_salted_equals_unsalted(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    )
-    plain = dedup.minhash_lsh_pairs(docs, threshold=0.5).collect()
-    salted = dedup.minhash_lsh_pairs(docs, threshold=0.5, n_salt=8).collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-    assert len(plain) > 0
-
-
 def test_ivf_topk_recall(embeddings):
     queries = embeddings.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), "unit"
@@ -281,17 +271,6 @@ def test_ivf_fast_equals_column_path(embeddings):
     slow = similarity.ivf_topk(corpus, queries, cents, k=5, n_probe=3, fast=False).collect()
     assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
     assert len(fast) > 0
-
-
-def test_cosine_salted_equals_unsalted(embeddings):
-    """n_salt splinters hot LSH buckets without changing the pair set
-    (same guard as test_minhash_salted_equals_unsalted)."""
-    plain = similarity.cosine_neardup_pairs(embeddings, 0.40, dim=64).collect()
-    salted = similarity.cosine_neardup_pairs(
-        embeddings, 0.40, dim=64, n_salt=8
-    ).collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-    assert len(plain) > 0
 
 
 def test_ivf_tie_margin_on_gate_data():

@@ -393,11 +393,15 @@ def test_grid_dbscan_union_find_reads_checkpoint(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "name,budget",
-    [("grid_dbscan", 13), ("curation_funnel", 15), ("neardup_components", 8)],
+    [
+        ("grid_dbscan", 13), ("curation_funnel", 15), ("neardup_components", 8),
+        ("event_sessions", 4), ("events_asof_join", 4), ("gc_waypoints", 6),
+    ],
 )
 def test_component_queries_job_budget(spark, sf_dir, name, budget):
     """Jobs per warm execution (build + collect) of the queries that
-    label connected components: a new driver barrier fails here."""
+    label connected components, of the single-shuffle temporal
+    queries and of gc_waypoints: a new driver barrier fails here."""
     qfn = getattr(q, f"q_{name}")
     qfn(spark, sf_dir).collect()
     _, jobs = _jobs_per_execution(spark, lambda: qfn(spark, sf_dir))

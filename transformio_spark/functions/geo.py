@@ -72,22 +72,6 @@ def euclidean(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
     return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
 
 
-def bearing_deg(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """Initial great-circle bearing from point 1 to point 2, degrees
-    in [0, 360) clockwise from north (standard spherical forward
-    azimuth: atan2(sin Δλ·cos φ2, cos φ1·sin φ2 − sin φ1·cos φ2·cos Δλ)).
-    Round 5 — the direction half of the geodesic pair whose distance
-    half is :func:`haversine_km`."""
-    rlon1, rlat1 = F.radians(lon1), F.radians(lat1)
-    rlon2, rlat2 = F.radians(lon2), F.radians(lat2)
-    dlon = rlon2 - rlon1
-    y = F.sin(dlon) * F.cos(rlat2)
-    x = F.cos(rlat1) * F.sin(rlat2) - F.sin(rlat1) * F.cos(rlat2) * F.cos(dlon)
-    # atan2 ∈ (−π, π] → degrees ∈ (−180, 180] → +360 → (180, 540] —
-    # the dividend stays positive, so Spark's and DuckDB's `%` agree.
-    return (F.degrees(F.atan2(y, x)) + F.lit(360.0)) % F.lit(360.0)
-
-
 def gc_interpolate_sql(
     lon1: str, lat1: str, lon2: str, lat2: str, f: str
 ) -> tuple[str, str]:
@@ -177,8 +161,13 @@ def gc_interpolate_stages(
 
 
 def bearing_deg_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
-    """SQL-text twin of :func:`bearing_deg` (dialect-shared: runs
-    verbatim under Spark ``F.expr`` and DuckDB)."""
+    """Initial great-circle bearing from point 1 to point 2, degrees
+    in [0, 360) clockwise from north (standard spherical forward
+    azimuth: atan2(sin Δλ·cos φ2, cos φ1·sin φ2 − sin φ1·cos φ2·cos Δλ)),
+    as SQL text (dialect-shared: runs verbatim under Spark ``F.expr``
+    and DuckDB).  atan2 ∈ (−π, π] → degrees ∈ (−180, 180] → +360 →
+    (180, 540]: the dividend stays positive, so Spark's and DuckDB's
+    ``%`` agree."""
     dlon = f"(radians({lon2}) - radians({lon1}))"
     y = f"(sin({dlon}) * cos(radians({lat2})))"
     x = (
@@ -383,12 +372,6 @@ def robinson_forward(lon: Column, lat: Column) -> tuple[Column, Column]:
 # SQL text twins (for the DuckDB oracle)
 # ---------------------------------------------------------------------------
 
-def affine_predict_sql(A, x: str, y: str) -> tuple[str, str]:
-    px = f"({A[0][0]!r} * {x} + {A[0][1]!r} * {y} + {A[0][2]!r})"
-    py = f"({A[1][0]!r} * {x} + {A[1][1]!r} * {y} + {A[1][2]!r})"
-    return px, py
-
-
 def _poly_terms_sql(order: int, x: str, y: str) -> list[str]:
     if order == 1:
         return [x, y, "1e0"]
@@ -419,12 +402,6 @@ def mercator_forward_sql(lon: str, lat: str) -> tuple[str, str]:
     x = f"(6378137.0e0 * radians({lon}))"
     y = f"(6378137.0e0 * ln(tan(0.7853981633974483e0 + radians({lat}) / 2)))"
     return x, y
-
-
-def mercator_inverse_sql(x: str, y: str) -> tuple[str, str]:
-    lon = f"degrees(({x}) / 6378137.0e0)"
-    lat = f"degrees(2.0e0 * atan(exp(({y}) / 6378137.0e0)) - 1.5707963267948966e0)"
-    return lon, lat
 
 
 def mollweide_forward_sql(lon: str, lat: str) -> tuple[str, str]:

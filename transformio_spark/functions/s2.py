@@ -71,37 +71,6 @@ def _xyz(lon: Column, lat: Column) -> tuple[Column, Column, Column]:
     return cphi * F.cos(lam), cphi * F.sin(lam), F.sin(phi)
 
 
-def _face_uv(x: Column, y: Column, z: Column) -> tuple[Column, Column, Column]:
-    """S2 face number (0..5) and the face-local (u, v).  Tie-breaks on
-    equal |components| resolve x-before-y-before-z via the exact same
-    >= comparison chain in the SQL twin."""
-    ax, ay, az = F.abs(x), F.abs(y), F.abs(z)
-    axis = (
-        F.when((ax >= ay) & (ax >= az), F.lit(0))
-        .when(ay >= az, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-    major = F.when(axis == 0, x).when(axis == 1, y).otherwise(z)
-    face = axis + F.when(major < 0, F.lit(3)).otherwise(F.lit(0))
-    u = (
-        F.when(face == 0, y / x)
-        .when(face == 1, -x / y)
-        .when(face == 2, -x / z)
-        .when(face == 3, z / x)
-        .when(face == 4, z / y)
-        .otherwise(-y / z)
-    )
-    v = (
-        F.when(face == 0, z / x)
-        .when(face == 1, z / y)
-        .when(face == 2, -y / z)
-        .when(face == 3, y / x)
-        .when(face == 4, -x / y)
-        .otherwise(-x / z)
-    )
-    return face.cast("long"), u, v
-
-
 def _st(u: Column) -> Column:
     """Quadratic UV→ST (S2's default projection)."""
     return F.when(u >= 0, 0.5 * F.sqrt(1.0 + 3.0 * u)).otherwise(
@@ -156,13 +125,6 @@ def hilbert_d(x: Column, y: Column, level: int) -> Column:
     return d
 
 
-def face_ij(lon: Column, lat: Column, level: int = S2_LEVEL) -> tuple[Column, Column, Column]:
-    """(face, i, j) leaf coordinates at ``level`` as Columns."""
-    x, y, z = _xyz(lon, lat)
-    face, u, v = _face_uv(x, y, z)
-    return face, _ij(_st(u), level), _ij(_st(v), level)
-
-
 def with_s2_cell(df, lon: Column, lat: Column, level: int = S2_LEVEL,
                  out: str = "s2_cell"):
     """Append an S2-style cell-id column (face * 4^level + hilbert_d).
@@ -201,6 +163,8 @@ def with_s2_cell(df, lon: Column, lat: Column, level: int = S2_LEVEL,
     )
     xc, yc, zc = F.col("_s2_x"), F.col("_s2_y"), F.col("_s2_z")
     ax, ay, az = F.abs(xc), F.abs(yc), F.abs(zc)
+    # ties on equal |components| resolve x-before-y-before-z via the
+    # exact same >= comparison chain in the SQL twin
     axis = (
         F.when((ax >= ay) & (ax >= az), F.lit(0))
         .when(ay >= az, F.lit(1))

@@ -9,8 +9,8 @@ shingle→minhash→band→bucket-join plan); verification re-computes true
 Jaccard only for candidates.
 
 At 10^12 rows the candidate self-join is the skew risk (a hot bucket
-= boilerplate text); ``n_salt``-style splitting applies as in
-spatial_join, and AQE skew-join handles residual imbalance.
+= boilerplate text); AQE skew-join (on in ``build_session``) splits
+hot sort-merge partitions.
 """
 
 from __future__ import annotations
@@ -165,7 +165,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.7,
-    n_salt: int = 0,
     shingles=None,
 ) -> DataFrame:
     """Near-duplicate pairs: shingle → minhash → LSH bands → bucket
@@ -174,13 +173,7 @@ def minhash_lsh_pairs(
 
     ``shingles`` overrides the feature set (default: k-char shingles);
     pass e.g. ``word_ngrams(F.col("text"), 3)`` for word-n-gram
-    Jaccard — banding, salting, and verify are feature-agnostic.
-
-    ``n_salt`` > 1 splinters hot buckets (boilerplate text at 10^12
-    rows makes a single (band, hash) key enormous): the left side gets
-    salt = pmod(xxhash64(id), n_salt), the right side replicates per
-    salt, and the join adds salt to the key — same pair set (asserted
-    in tests), n_salt-way task split of the hottest bucket."""
+    Jaccard — banding and verify are feature-agnostic."""
     rows_per_band = n_hashes // bands
     sh_col = shingles if shingles is not None else char_shingles(
         F.col(text_col), k
@@ -220,17 +213,8 @@ def minhash_lsh_pairs(
     right = banded.select(
         F.col("band_idx"), F.col("band_hash"), F.col("id").alias("id_b")
     )
-    join_keys = ["band_idx", "band_hash"]
-    if n_salt and n_salt > 1:
-        left = left.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(n_salt))
-        )
-        right = right.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n_salt - 1)))
-        )
-        join_keys = join_keys + ["salt"]
     cand = (
-        left.join(right, join_keys)
+        left.join(right, ["band_idx", "band_hash"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])

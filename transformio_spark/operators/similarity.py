@@ -233,7 +233,6 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     seed: int = 7,
     dim: int | None = None,
-    n_salt: int = 0,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the embedding analog of
     minhash_lsh_pairs: sign-LSH bucket self-join for candidates, exact
@@ -241,13 +240,7 @@ def cosine_neardup_pairs(
 
     Recall dial: collision prob per table is (1 - acos(c)/pi)^n_planes
     — few planes + many tables pushes recall -> 1 for c >= threshold
-    while same-bucket candidates (not all pairs) bound the join size.
-
-    ``n_salt`` > 1 splinters hot buckets (boilerplate embeddings at
-    10^12 rows make one LSH bucket enormous), the exact pattern of
-    minhash_lsh_pairs: left salt = pmod(xxhash64(id), n_salt), right
-    replicated per salt, salt added to the join key — same pair set
-    (asserted in tests), n_salt-way split of the hottest bucket."""
+    while same-bucket candidates (not all pairs) bound the join size."""
     if dim is None:
         raise ValueError("cosine_neardup_pairs requires dim=")
     keys = []
@@ -276,17 +269,8 @@ def cosine_neardup_pairs(
     ).select("id", "bucket")
     left = b.select(F.col("bucket"), F.col("id").alias("id_a"))
     right = b.select(F.col("bucket"), F.col("id").alias("id_b"))
-    join_keys = ["bucket"]
-    if n_salt and n_salt > 1:
-        left = left.withColumn(
-            "salt", F.pmod(F.xxhash64(F.col("id_a")), F.lit(n_salt))
-        )
-        right = right.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0).cast("long"), F.lit(n_salt - 1)))
-        )
-        join_keys = join_keys + ["salt"]
     cand = (
-        left.join(right, join_keys)
+        left.join(right, ["bucket"])
         .where(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )

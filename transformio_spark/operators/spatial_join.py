@@ -138,26 +138,18 @@ def point_in_triangle_join_keyed(
 ) -> DataFrame:
     """N3 scale path: broadcast HASH join on a coarse cell key (both
     sides computable), exact integer-lattice sign test as a codegen'd
-    post-filter.  Same output as point_in_triangle_join when every
-    triangle lies within one coarse cell."""
+    post-filter.  The test is the reference TIN's boundary-inclusive
+    cross-product sign test (reference transforms.py:687-694) in
+    integer 1e-5-lattice space (triangle vertices are bigint lattice
+    coords), so boundary points are classified identically by Spark
+    and the oracle.  Exact point-in-triangle when every triangle lies
+    within one coarse cell."""
     pts = points.withColumn("_ck", point_key(points))
     tris = triangles.withColumn("_ck", tri_key(triangles))
     joined = pts.join(F.broadcast(tris), on="_ck", how="inner")
     return joined.where(
         _pit_predicate(_e5(F.col("lon")), _e5(F.col("lat")))
     ).drop("_ck")
-
-
-def point_in_triangle_join(points: DataFrame, triangles: DataFrame) -> DataFrame:
-    """N3: exact point-in-polygon via the reference TIN's
-    boundary-inclusive cross-product sign test
-    (reference transforms.py:687-694), generalized to a broadcast
-    relational join.  Runs in integer 1e-5-lattice space (triangle
-    vertices are bigint lattice coords) — the cross products are
-    exact bigints, so boundary points are classified identically by
-    Spark and the oracle."""
-    inside = _pit_predicate(_e5(F.col("lon")), _e5(F.col("lat")))
-    return points.join(F.broadcast(triangles), on=inside, how="inner")
 
 
 def ray_cast_inside(ring, px, py) -> F.Column:

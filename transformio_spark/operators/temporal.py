@@ -9,11 +9,11 @@ standard scale pattern: tag both sides, UNION, one window pass with a
 running ``last(..., ignorenulls=True)`` over (ts, side) ordering —
 a SINGLE shuffle on the join key, linear work within each partition's
 sorted run, no state beyond the window frame.  At 10^12 rows the
-shuffle on key is the same one any keyed join pays; a hot key (one
-user_id owning a large share of all events) lands its whole sorted
-run on one task — ``asof_join_backward_salted`` splits that run into
-time-range buckets that parallelize, then stitches the bucket
-boundaries with a second (tiny) window pass.
+shuffle on key is the same one any keyed join pays.  Hot-key caveat
+(shared by ``sessionize``): a key owning a large share of all events
+lands its whole sorted run on one task.  No workload here has such a
+key; splitting runs into time buckets would first need a skewed-key
+benchmark to measure it against.
 
 Match presence is tracked with a carry STRUCT, not the raw values: a
 matched right row whose carried value is NULL must still win over an
@@ -28,41 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _carry_struct_type(right: DataFrame, carry: dict[str, str]) -> T.StructType:
-    return T.StructType(
-        [T.StructField(out, right.schema[src].dataType) for out, src in carry.items()]
-    )
-
-
-def _tag_union(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    ts_col: str,
-    carry: dict[str, str],
-) -> tuple[DataFrame, list[str]]:
-    """Union left (side=1, NULL carry struct) with right (side=0,
-    non-null carry struct of the ``carry`` source columns)."""
-    struct_t = _carry_struct_type(right, carry)
-    left_cols = list(left.columns)
-    tagged_left = left.select(
-        *left_cols,
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(struct_t).alias("_carry"),
-    )
-    tagged_right = right.select(
-        F.col(key_col),
-        F.col(ts_col),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left_cols if c not in (key_col, ts_col)],
-        F.lit(0).alias("_side"),
-        F.struct(
-            *[F.col(src).alias(out) for out, src in carry.items()]
-        ).cast(struct_t).alias("_carry"),
-    ).select(*left_cols, "_side", "_carry")
-    return tagged_left.unionByName(tagged_right), left_cols
 
 
 def asof_join_backward(
@@ -82,7 +47,28 @@ def asof_join_backward(
     columns pass through unchanged.  A matched right row whose carry
     value is NULL yields NULL (presence is tracked by the carry
     struct, independent of field nullability)."""
-    u, left_cols = _tag_union(left, right, key_col, ts_col, carry)
+    # left rows: side=1, NULL carry struct; right rows: side=0,
+    # non-null carry struct of the ``carry`` source columns
+    struct_t = T.StructType(
+        [T.StructField(out, right.schema[src].dataType) for out, src in carry.items()]
+    )
+    left_cols = list(left.columns)
+    tagged_left = left.select(
+        *left_cols,
+        F.lit(1).alias("_side"),
+        F.lit(None).cast(struct_t).alias("_carry"),
+    )
+    tagged_right = right.select(
+        F.col(key_col),
+        F.col(ts_col),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
+          for c in left_cols if c not in (key_col, ts_col)],
+        F.lit(0).alias("_side"),
+        F.struct(
+            *[F.col(src).alias(out) for out, src in carry.items()]
+        ).cast(struct_t).alias("_carry"),
+    ).select(*left_cols, "_side", "_carry")
+    u = tagged_left.unionByName(tagged_right)
     w = (
         Window.partitionBy(key_col)
         .orderBy(F.col(ts_col).asc(), F.col("_side").asc())
@@ -91,90 +77,6 @@ def asof_join_backward(
     matched = F.last(F.col("_carry"), ignorenulls=True).over(w)
     return (
         u.select(*left_cols, "_side", *[matched[out].alias(out) for out in carry])
-        .where(F.col("_side") == 1)
-        .drop("_side")
-    )
-
-
-def asof_join_backward_salted(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    ts_col: str,
-    carry: dict[str, str],
-    n_buckets: int = 16,
-) -> DataFrame:
-    """``asof_join_backward`` for SKEWED keys: the per-key sorted run
-    is split into ``n_buckets`` equal time ranges so a hot key's rows
-    spread across ``n_buckets`` tasks instead of one.
-
-    Three passes, none of which shuffles the big union more than the
-    unsalted version does:
-
-    1. window over (key, ts_bucket) — within-bucket running carry;
-    2. per-(key, bucket) last right-row carry (an aggregate with at
-       most |keys| x n_buckets rows), then a window over key ordered
-       by bucket gives the carry ENTERING each bucket;
-    3. broadcast the tiny entering-carry table back and coalesce.
-
-    Results are identical to the unsalted operator (asserted by
-    tests/test_bucketed_join.py)."""
-    bounds = (
-        left.select(F.col(ts_col).alias("_t"))
-        .unionByName(right.select(F.col(ts_col).alias("_t")))
-        .agg(
-            F.min("_t").cast("double").alias("lo"),
-            F.max("_t").cast("double").alias("hi"),
-        )
-        .collect()[0]
-    )
-    lo, hi = float(bounds.lo), float(bounds.hi)
-    width = max((hi - lo) / n_buckets, 1e-12)
-    bucket = F.least(
-        F.floor((F.col(ts_col).cast("double") - F.lit(lo)) / F.lit(width)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-
-    u, left_cols = _tag_union(left, right, key_col, ts_col, carry)
-    u = u.withColumn("_bkt", bucket)
-
-    w_in = (
-        Window.partitionBy(key_col, "_bkt")
-        .orderBy(F.col(ts_col).asc(), F.col("_side").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    within = u.withColumn(
-        "_within", F.last(F.col("_carry"), ignorenulls=True).over(w_in)
-    )
-
-    # per-(key, bucket) last RIGHT carry — tiny aggregate, then the
-    # carry entering each bucket = last non-null over preceding buckets
-    # every (key, bucket) that holds ANY row must appear here — a left
-    # row in a bucket with no right rows still needs an entering carry
-    # from earlier buckets; max_by ignores the NULL ordering key on
-    # left rows, so right-row restriction happens inside the aggregate
-    bucket_last = u.groupBy(key_col, "_bkt").agg(
-        F.max_by(
-            "_carry", F.when(F.col("_side") == 0, F.col(ts_col))
-        ).alias("_blast")
-    )
-    w_enter = (
-        Window.partitionBy(key_col)
-        .orderBy(F.col("_bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    entering = bucket_last.select(
-        key_col,
-        "_bkt",
-        F.last(F.col("_blast"), ignorenulls=True).over(w_enter).alias("_enter"),
-    )
-
-    matched = F.coalesce(F.col("_within"), F.col("_enter"))
-    return (
-        within.join(F.broadcast(entering), on=[key_col, "_bkt"], how="left")
-        .select(
-            *left_cols, "_side", *[matched[out].alias(out) for out in carry]
-        )
         .where(F.col("_side") == 1)
         .drop("_side")
     )
@@ -197,8 +99,7 @@ def sessionize(
     over each key's sorted run (lag -> boundary flag, running sum ->
     session index) — linear per partition, no state beyond the frame,
     the same single-shuffle profile as ``asof_join_backward`` (and the
-    same hot-key caveat; :func:`sessionize_bucketed` is the
-    skew-safe variant, pinned result-identical).  The
+    same hot-key caveat, see the module docstring).  The
     boundary rule is pure Column arithmetic, so the identical
     semantics replay as two SQL window functions in the DuckDB oracle,
     and the streaming twin (applyInPandasWithState with a
@@ -226,100 +127,6 @@ def sessionize(
             .orderBy(ts_col, tiebreak_col)
             .rowsBetween(Window.unboundedPreceding, 0)
         ) - F.lit(1)).cast("long"),
-    )
-
-
-def sessionize_bucketed(
-    events: DataFrame,
-    gap_seconds: float,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    n_buckets: int = 16,
-) -> DataFrame:
-    """``sessionize`` for SKEWED keys (round 6 — VERDICT r05 #5): the
-    per-key sorted run is split into ``n_buckets`` equal time ranges
-    so a hot key's 10^12 events spread over ``n_buckets`` tasks
-    instead of one — the exact ts-bucket decomposition already proven
-    for ``asof_join_backward_salted``.
-
-    Decomposition (identical results, pinned in
-    tests/test_bucketed_join.py):
-
-    1. window over (key, ts_bucket): within-bucket lag + running
-       boundary-flag sum;
-    2. per-(key, bucket) aggregates (last ts, flag totals — at most
-       |keys| x n_buckets rows) + a per-key window over buckets give
-       the ts and the session-count ENTERING each bucket;
-    3. broadcast the tiny entering tables back: the first row of a
-       bucket lags against the entering ts, and every row's running
-       flag sum is offset by the entering count.
-
-    The big side shuffles ONCE, on (key, bucket); both groupBys reuse
-    that partitioning.  Same 2-scalar ts-bounds collect as the asof
-    variant."""
-    if gap_seconds <= 0:
-        raise ValueError(f"gap_seconds must be positive, got {gap_seconds}")
-    gap_us = int(round(float(gap_seconds) * 1_000_000))
-    bounds = events.agg(
-        F.min(ts_col).cast("double").alias("lo"),
-        F.max(ts_col).cast("double").alias("hi"),
-    ).collect()[0]
-    lo, hi = float(bounds.lo), float(bounds.hi)
-    width = max((hi - lo) / n_buckets, 1e-12)
-    bucket = F.least(
-        F.floor((F.col(ts_col).cast("double") - F.lit(lo)) / F.lit(width)),
-        F.lit(n_buckets - 1),
-    ).cast("int")
-    ev = events.withColumn("_bkt", bucket)
-
-    w_in = Window.partitionBy(key_col, "_bkt").orderBy(ts_col, tiebreak_col)
-    # ts entering each bucket = max ts of the key's earlier buckets
-    bucket_last = ev.groupBy(key_col, "_bkt").agg(
-        F.max(ts_col).alias("_bmax")
-    )
-    w_prev_b = (
-        Window.partitionBy(key_col)
-        .orderBy(F.col("_bkt").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    entering_ts = bucket_last.select(
-        key_col, "_bkt", F.max("_bmax").over(w_prev_b).alias("_enter_ts")
-    )
-    flagged = (
-        ev.withColumn("_prev_in", F.lag(F.col(ts_col)).over(w_in))
-        .join(F.broadcast(entering_ts), on=[key_col, "_bkt"], how="left")
-        .withColumn(
-            "_prev", F.coalesce(F.col("_prev_in"), F.col("_enter_ts"))
-        )
-    )
-    gap = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col("_prev"))
-    flagged = flagged.withColumn(
-        "_flag",
-        F.when(F.col("_prev").isNull() | (gap > F.lit(gap_us)), 1).otherwise(
-            0
-        ),
-    )
-    # session count entering each bucket = sum of earlier buckets' flags
-    bucket_flags = flagged.groupBy(key_col, "_bkt").agg(
-        F.sum("_flag").alias("_bflags")
-    )
-    offsets = bucket_flags.select(
-        key_col,
-        "_bkt",
-        F.coalesce(F.sum("_bflags").over(w_prev_b), F.lit(0)).alias("_off"),
-    )
-    run_in = F.sum("_flag").over(
-        w_in.rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        flagged.withColumn("_run", run_in)
-        .join(F.broadcast(offsets), on=[key_col, "_bkt"], how="left")
-        .withColumn(
-            "session_idx",
-            (F.col("_run") + F.col("_off") - 1).cast("long"),
-        )
-        .select(*events.columns, "session_idx")
     )
 
 

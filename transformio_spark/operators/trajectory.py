@@ -12,8 +12,8 @@ pairing is an equi-join of the table with itself on (track, rank−1),
 a second shuffle this plan never pays), then pure whole-stage-codegen
 haversine/bearing columns.  At 10^12 points the shuffle on track id
 is the one any keyed sequence op pays; tracks are numerous and small,
-so skew salting is not needed (a single hot track would use the
-ts-bucket split of ``temporal.asof_join_backward_salted``).
+so skew salting is not needed (a single hot track would land on one
+task, the hot-key caveat of ``operators/temporal.py``).
 
 Cross-engine exactness: the step distance is discretized to integer
 METERS per step *before* any sum (``round()`` on a value ≥ ulp-

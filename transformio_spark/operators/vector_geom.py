@@ -73,16 +73,6 @@ def transform_long(geoms: DataFrame, model_json: str) -> DataFrame:
     )
 
 
-def bbox_per_geom(geoms: DataFrame) -> DataFrame:
-    """Op 26 at scale: bbox per geometry."""
-    return geoms.groupBy("geom_id").agg(
-        F.min("x").alias("xmin"),
-        F.min("y").alias("ymin"),
-        F.max("x").alias("xmax"),
-        F.max("y").alias("ymax"),
-    )
-
-
 def renest(geoms: DataFrame) -> DataFrame:
     """Re-nest the long table to
     (geom_id, parts array<array<array<struct<x,y>>>>) — rings sorted

@@ -1324,24 +1324,9 @@ def q_projective_transform(spark, sf_dir) -> DataFrame:
     )
 
 
-def q_mercator_cells(spark, sf_dir) -> DataFrame:
-    """MapProjection (SURVEY op 14, reference transforms.py:536-587)
-    end-to-end: extracted lon/lat points → EPSG:4326→3857 via the
-    Chain→Column COMPILER (operators/compiler.py — whole-stage
-    codegen, zero Python on this fully-analytic chain; the pandas-UDF
-    kernel route stays driver-covered by tin_transform/poly_roundtrip)
-    → 2000-km web-mercator cell counts with meter-rounded coordinate
-    sums.  Per-point integer rounding before the sum keeps the
-    cross-engine hash ulp-safe."""
-    from ..kernels import Chain, MapProjection
-    from ..operators import compiler
-
-    pts = points_df(spark, sf_dir)
-    model = Chain([MapProjection("EPSG:4326", "EPSG:3857")])
-    out = compiler.with_transformed_columns(
-        pts, model, x="lon", y="lat", out_x="mx", out_y="my",
-    )
-    cell = 2_000_000.0
+def _projected_cells(out: DataFrame, cell: float) -> DataFrame:
+    """Per (cell_x, cell_y) counts and meter-rounded coordinate sums
+    of projected ``mx``/``my`` points, ordered by cell."""
     return (
         out.select(
             F.floor(F.col("mx") / cell).alias("cell_x"),
@@ -1357,6 +1342,32 @@ def q_mercator_cells(spark, sf_dir) -> DataFrame:
         )
         .orderBy("cell_x", "cell_y")
     )
+
+
+def _compiled_projection_cells(spark, sf_dir, crs: str, cell: float) -> DataFrame:
+    """``_projected_cells`` of the points projected EPSG:4326 ->
+    ``crs`` by the Chain->Column compiler."""
+    from ..kernels import Chain, MapProjection
+    from ..operators import compiler
+
+    out = compiler.with_transformed_columns(
+        points_df(spark, sf_dir),
+        Chain([MapProjection("EPSG:4326", crs)]),
+        x="lon", y="lat", out_x="mx", out_y="my",
+    )
+    return _projected_cells(out, cell)
+
+
+def q_mercator_cells(spark, sf_dir) -> DataFrame:
+    """MapProjection (SURVEY op 14, reference transforms.py:536-587)
+    end-to-end: extracted lon/lat points → EPSG:4326→3857 via the
+    Chain→Column COMPILER (operators/compiler.py — whole-stage
+    codegen, zero Python on this fully-analytic chain; the pandas-UDF
+    kernel route stays driver-covered by tin_transform/poly_roundtrip)
+    → 2000-km web-mercator cell counts with meter-rounded coordinate
+    sums.  Per-point integer rounding before the sum keeps the
+    cross-engine hash ulp-safe."""
+    return _compiled_projection_cells(spark, sf_dir, "EPSG:3857", 2_000_000.0)
 
 
 def q_mollweide_cells(spark, sf_dir) -> DataFrame:
@@ -1369,30 +1380,7 @@ def q_mollweide_cells(spark, sf_dir) -> DataFrame:
     LINEAR-size expression tree.  Same cell-count/sum observables as
     mercator_cells; the DuckDB oracle replicates the identical fold
     via list_reduce."""
-    from ..kernels import Chain, MapProjection
-    from ..operators import compiler
-
-    pts = points_df(spark, sf_dir)
-    model = Chain([MapProjection("EPSG:4326", "ESRI:54009")])
-    out = compiler.with_transformed_columns(
-        pts, model, x="lon", y="lat", out_x="mx", out_y="my",
-    )
-    cell = 2_000_000.0
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _compiled_projection_cells(spark, sf_dir, "ESRI:54009", 2_000_000.0)
 
 
 def q_polar_cells(spark, sf_dir) -> DataFrame:
@@ -1402,30 +1390,7 @@ def q_polar_cells(spark, sf_dir) -> DataFrame:
     whole-stage codegen, same cell/sum observables as
     mercator_cells/mollweide_cells (5,000-km cells — south-aspect
     rho spans ~300M m at lat +85)."""
-    from ..kernels import Chain, MapProjection
-    from ..operators import compiler
-
-    pts = points_df(spark, sf_dir)
-    model = Chain([MapProjection("EPSG:4326", "EPSG:3031")])
-    out = compiler.with_transformed_columns(
-        pts, model, x="lon", y="lat", out_x="mx", out_y="my",
-    )
-    cell = 5_000_000.0
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _compiled_projection_cells(spark, sf_dir, "EPSG:3031", 5_000_000.0)
 
 
 def q_robinson_cells(spark, sf_dir) -> DataFrame:
@@ -1434,30 +1399,7 @@ def q_robinson_cells(spark, sf_dir) -> DataFrame:
     natural-cubic-spline table lookup runs as element_at into literal
     arrays, all whole-stage codegen.  Same observables as the other
     projection gate queries (2,000-km cells)."""
-    from ..kernels import Chain, MapProjection
-    from ..operators import compiler
-
-    pts = points_df(spark, sf_dir)
-    model = Chain([MapProjection("EPSG:4326", "ESRI:54030")])
-    out = compiler.with_transformed_columns(
-        pts, model, x="lon", y="lat", out_x="mx", out_y="my",
-    )
-    cell = 2_000_000.0
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _compiled_projection_cells(spark, sf_dir, "ESRI:54030", 2_000_000.0)
 
 
 def q_utm_cells(spark, sf_dir) -> DataFrame:
@@ -1525,25 +1467,10 @@ def q_lcc_cells(spark, sf_dir) -> DataFrame:
         "lon", "lat", 35.0, 65.0, 52.0, lon0=10.0,
         fe=4_000_000.0, fn=2_800_000.0,
     )
-    cell = 1_000_000.0
     out = points_df(spark, sf_dir).withColumns(
         {"mx": F.expr(mx_sql), "my": F.expr(my_sql)}
     )
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _projected_cells(out, 1_000_000.0)
 
 
 def q_decontamination(spark, sf_dir) -> DataFrame:
@@ -1764,25 +1691,10 @@ def q_laea_cells(spark, sf_dir) -> DataFrame:
     mx_sql, my_sql = laea_forward_sql(
         "lon", "lat", 52.0, lon0=10.0, fe=4_321_000.0, fn=3_210_000.0
     )
-    cell = 1_000_000.0
     out = points_df(spark, sf_dir).withColumns(
         {"mx": F.expr(mx_sql), "my": F.expr(my_sql)}
     )
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _projected_cells(out, 1_000_000.0)
 
 
 def q_ease_cells(spark, sf_dir) -> DataFrame:
@@ -1797,25 +1709,10 @@ def q_ease_cells(spark, sf_dir) -> DataFrame:
     from ..functions.geo import cea_forward_sql
 
     mx_sql, my_sql = cea_forward_sql("lon", "lat", 30.0)
-    cell = 1_000_000.0
     out = points_df(spark, sf_dir).withColumns(
         {"mx": F.expr(mx_sql), "my": F.expr(my_sql)}
     )
-    return (
-        out.select(
-            F.floor(F.col("mx") / cell).alias("cell_x"),
-            F.floor(F.col("my") / cell).alias("cell_y"),
-            F.round(F.col("mx"), 0).cast("long").alias("mx_m"),
-            F.round(F.col("my"), 0).cast("long").alias("my_m"),
-        )
-        .groupBy("cell_x", "cell_y")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum("mx_m").alias("sum_mx_m"),
-            F.sum("my_m").alias("sum_my_m"),
-        )
-        .orderBy("cell_x", "cell_y")
-    )
+    return _projected_cells(out, 1_000_000.0)
 
 
 ZONAL_SX = 360.0 / WARP_GATE_SRC
