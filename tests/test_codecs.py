@@ -13,12 +13,15 @@ import numpy as np
 import pytest
 from numpy.testing import assert_array_equal
 
+from ref_loader import needs_file
 from transformio_spark.kernels import png, tiff
 from transformio_spark.kernels import transforms as kt
 from transformio_spark.kernels import warp as kwarp
 from transformio_spark.sources.worldfile import read_worldfile
 
 FIXDIR = "/root/reference/tests/data"
+_LAND = f"{FIXDIR}/land_shallow_topo_2048"
+needs_land = needs_file(f"{_LAND}.png", f"{_LAND}.wld")
 
 
 @pytest.fixture(scope="module")
@@ -89,6 +92,7 @@ def test_png_palette():
     assert_array_equal(png.decode_png(data), pal[idx])
 
 
+@needs_file(f"{_LAND}.png", f"{_LAND}.tif")
 def test_png_and_tiff_fixture_decode_byte_equal(land_png):
     """land_shallow_topo_2048 ships as BOTH PNG (DEFLATE + scanline
     filters) and TIFF (LZW + horizontal predictor).  Two independent
@@ -100,6 +104,7 @@ def test_png_and_tiff_fixture_decode_byte_equal(land_png):
     assert_array_equal(land_png, tif)
 
 
+@needs_file(f"{_LAND}.wld")
 def test_worldfile_fixture_matches_fitbounds():
     aff = read_worldfile(f"{FIXDIR}/land_shallow_topo_2048.wld")
     fb = kwarp.fitbounds(2048, 1024, [-180, 90, 180, -90])
@@ -108,6 +113,7 @@ def test_worldfile_fixture_matches_fitbounds():
                                atol=1e-10)
 
 
+@needs_land
 def test_real_fixture_warp_affine_golden(land_png):
     """The reference's satellite fixture + .wld end-to-end through
     warp(): output affine and full-image checksum pinned."""
@@ -124,6 +130,7 @@ MERC_XM = 6378137.0 * math.pi
 MERC_YM = 6378137.0 * math.log(math.tan(math.pi / 4 + math.radians(85.0) / 2))
 
 
+@needs_land
 def test_real_fixture_reprojection_golden(land_png):
     """The reference's TestWorldSatellite flow (test_image_warp.py:
     6-23): fitbounds affine + MapProjection chain through warp, on the
@@ -143,6 +150,7 @@ def test_real_fixture_reprojection_golden(land_png):
     assert zlib.adler32(out[128:, 128:].tobytes()) == 4019931038
 
 
+@needs_land
 def test_real_fixture_tiled_warp_matches_full(spark, land_png):
     """Distributed tiled warp over the REAL fixture == single-array
     kernel bit-for-bit (the round-2 'tiled==full' guarantee, now on

@@ -10,12 +10,14 @@ import numpy as np
 import pytest
 from numpy.testing import assert_array_almost_equal
 
+from ref_loader import needs_file
 from transformio_spark import kernels as k
 from transformio_spark.operators import vector_geom
 from transformio_spark.sources import geojson as gj
 
 FIXTURE = "/root/reference/tests/data/argentina_pol96_digitized.geojson"
 TRANSFORM = "/root/reference/tests/data/argentina_pol96_georeferenced_transform.json"
+pytestmark = needs_file(FIXTURE, TRANSFORM)
 
 
 @pytest.fixture(scope="module")

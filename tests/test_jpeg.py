@@ -19,9 +19,11 @@ import zlib
 import numpy as np
 import pytest
 
+from ref_loader import needs_file
 from transformio_spark.kernels import jpeg
 
 FIXDIR = "/root/reference/tests/data"
+needs_china = needs_file(f"{FIXDIR}/china_pol96.jpg")
 
 # orthonormal forward DCT (inverse of the decoder's reconstruction)
 _C = jpeg._DCT_C
@@ -297,6 +299,7 @@ def china_im():
         return jpeg.decode_jpeg(f.read())
 
 
+@needs_china
 def test_china_fixture_decodes(china_im):
     assert china_im.shape == (1066, 1078, 3)
     # scanned parchment map: light warm background
@@ -305,6 +308,7 @@ def test_china_fixture_decodes(china_im):
     assert zlib.adler32(china_im.tobytes()) == 2409414820
 
 
+@needs_file(f"{FIXDIR}/cloud_combined_2048.jpg")
 def test_cloud_fixture_grayscale_consistency():
     """cloud_combined is a grayscale photo stored as YCbCr — decoded
     channels must agree within chroma rounding, a structural check
@@ -317,6 +321,7 @@ def test_cloud_fixture_grayscale_consistency():
     assert np.abs(d[..., 2] - d[..., 1]).mean() < 1.0
 
 
+@needs_china
 def test_load_image_dispatches_jpeg(china_im):
     from transformio_spark.kernels import warp as kwarp
 
@@ -324,6 +329,7 @@ def test_load_image_dispatches_jpeg(china_im):
     np.testing.assert_array_equal(im, china_im)
 
 
+@needs_china
 def test_china_readme_warp_end_to_end(china_im):
     """The README's flagship flow (reference README.md:122-141): fit
     on the china22 GCPs, warp the ACTUAL scanned map.  Previously

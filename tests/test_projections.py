@@ -17,12 +17,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from ref_loader import needs_file
 from transformio_spark.kernels import projections as pj
 from transformio_spark.kernels import transforms as kt
 from transformio_spark.kernels import warp as kwarp
 from transformio_spark.sources.worldfile import read_worldfile
 
 FIXDIR = "/root/reference/tests/data"
+_LAND = f"{FIXDIR}/land_shallow_topo_2048"
+needs_land = needs_file(f"{_LAND}.tif", f"{_LAND}.wld")
 R = pj.R_SPHERE
 LONGLAT = "+proj=longlat +datum=WGS84 +no_defs "  # the reference's fromcrs
 
@@ -323,6 +326,7 @@ _WARP_GOLDEN = {
 _POLAR_GOLDEN = {"epsg:3995": 1252176854, "epsg:3031": 1814682708}
 
 
+@needs_land
 @pytest.mark.parametrize("tocrs", sorted(_WARP_GOLDEN))
 def test_world_satellite_reprojection(tocrs, land_im):
     """reference tests/test_image_projections.py:16-22 end-to-end:
@@ -338,6 +342,7 @@ def test_world_satellite_reprojection(tocrs, land_im):
     assert zlib.adler32(out.tobytes()) == golden
 
 
+@needs_land
 @pytest.mark.parametrize("tocrs", sorted(_POLAR_GOLDEN))
 def test_polar_satellite_reprojection(tocrs, land_im):
     aff = read_worldfile(f"{FIXDIR}/land_shallow_topo_2048.wld")
@@ -352,6 +357,7 @@ def test_polar_satellite_reprojection(tocrs, land_im):
     assert zlib.adler32(out.tobytes()) == _POLAR_GOLDEN[tocrs]
 
 
+@needs_land
 def test_norway_polar_satellite_reprojection(land_im):
     """reference tests/test_image_projections.py:44-46
     (TestWorldNorwayPolar, tocrs epsg:5939) end-to-end on the real
@@ -448,6 +454,7 @@ def test_readme_globe_multipoint_doctest_flow():
     assert np.isfinite(xs).all()
 
 
+@needs_land
 def test_globe_logo_warp_flow(land_im):
     """create_logo.py's flow: world PNG -> fitbounds -> ortho warp.
     The output is the visible disc (area fraction ~ pi/4 of its

@@ -10,6 +10,7 @@ import re
 
 import pytest
 
+from ref_loader import needs_file
 from transformio_spark import kernels as k
 from transformio_spark.fixtures import (
     BURKINA10_GEOPOINTS,
@@ -38,6 +39,7 @@ def _readme_residual_blocks():
     return km, px
 
 
+@needs_file(README)
 def test_forward_geodesic_per_point_residuals_match_readme():
     km, _ = _readme_residual_blocks()
     assert len(km) == 22
@@ -53,6 +55,7 @@ def test_forward_geodesic_per_point_residuals_match_readme():
         assert r == pytest.approx(resid, abs=1e-9)
 
 
+@needs_file(README)
 def test_backward_euclidean_per_point_residuals_match_readme():
     _, px_block = _readme_residual_blocks()
     assert len(px_block) == 22

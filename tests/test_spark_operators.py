@@ -10,14 +10,11 @@ import numpy as np
 import pytest
 from numpy.testing import assert_array_almost_equal
 
-from ref_loader import load_reference_modules
+from ref_loader import requires_reference
 from transformio_spark import kernels as k
 from transformio_spark.fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
 from transformio_spark.operators import udfs, vector_geom
 from transformio_spark.sources import synth
-
-ref_transforms, ref_accuracy, ref_vector = load_reference_modules()
-
 
 @pytest.fixture(scope="module")
 def poly2_json():
@@ -60,7 +57,8 @@ def test_pandas_udf_tin_nan_outside_hull(spark, tin_json):
     assert rows[1].pred_x is None or np.isnan(rows[1].pred_x)
 
 
-def test_vector_kernel_parity_vs_reference():
+@requires_reference
+def test_vector_kernel_parity_vs_reference(ref_transforms, ref_vector):
     trans = k.Affine(offset=(10, 20))
     rtrans = ref_transforms.Affine(offset=(10, 20))
     geoj = {

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 from numpy.testing import assert_array_almost_equal, assert_array_equal
 
+from ref_loader import REF_DATA_DIR, needs_file
 from transformio_spark import kernels as k
 from transformio_spark.fixtures import WORLD_AFFINE
 from transformio_spark.kernels import warp as kwarp
@@ -186,6 +187,7 @@ def test_warp_tiles_full_options_matches_kernel(spark):
     assert_array_equal(assembled, full)
 
 
+@needs_file(f"{REF_DATA_DIR}/land_shallow_topo_2048.wld")
 def test_worldfile_read_reference_golden():
     """Reading the vendored .wld reproduces the README world affine
     (README.md:611-620)."""
