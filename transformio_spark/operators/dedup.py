@@ -291,9 +291,11 @@ def simhash_md5_buckets(
     prefix-bucket pipeline as :func:`simhash_buckets`, but the per-bit
     vote source is md5 (available verbatim in DuckDB) instead of
     xxhash64, so the ENTIRE pipeline gets a full rows+schema+hash
-    driver oracle.  xxhash64 stays the production hot path (one
-    non-cryptographic JVM hash per shingle vs md5's ~5-10x cost); the
-    two differ only in which deterministic bits feed the votes.
+    driver oracle.  This twin is what the ``simhash_buckets`` gate
+    query and its bench leaf run; the xxhash64 version (one
+    non-cryptographic JVM hash per shingle vs md5's ~5-10x cost) is
+    called by no query or bench leaf.  The two differ only in which
+    deterministic bits feed the votes.
     Returns (id, simhash_hex string, bucket long); explode+groupBy
     plan — one shuffle on id, identical shape at 10^12 rows."""
     digits, sums, hex_expr, bucket_expr = simhash_md5_exprs()

@@ -15,6 +15,8 @@ precision defines coordinate precision; see synthspec docstring).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -80,9 +82,7 @@ def fit_px2geo_affine(gcps_df: DataFrame) -> np.ndarray:
     return Affine().fit(sx, sy, dx, dy).A
 
 
-_PX2GEO_CACHE: list = []
-
-
+@functools.cache
 def px2geo_affine() -> np.ndarray:
     """The px→geo affine fitted from the literal GCP fixture
     (sources/synthspec.GCPS_PX_GEO) straight through the numpy parity
@@ -92,14 +92,12 @@ def px2geo_affine() -> np.ndarray:
     createDataFrame+collect round trip cost ~0.4 s of driver time per
     query build.  Memoized — the fixture is a program constant, not
     data."""
-    if not _PX2GEO_CACHE:
-        from ..sources import synthspec
+    from ..sources import synthspec
 
-        sx, sy, dx, dy = (
-            [float(t[i]) for t in synthspec.GCPS_PX_GEO] for i in range(4)
-        )
-        _PX2GEO_CACHE.append(Affine().fit(sx, sy, dx, dy).A)
-    return _PX2GEO_CACHE[0]
+    sx, sy, dx, dy = (
+        [float(t[i]) for t in synthspec.GCPS_PX_GEO] for i in range(4)
+    )
+    return Affine().fit(sx, sy, dx, dy).A
 
 
 def span_pair_points(docs: DataFrame, affine_A: np.ndarray) -> DataFrame:

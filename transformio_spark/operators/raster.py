@@ -32,24 +32,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels import from_json
 from ..kernels.warp import as_chain
 from ..sources.synth import literal_table
+from .udfs import model_from_json
 
 TILE_SCHEMA = (
     "tile_x int, tile_y int, col0 int, row0 int, w int, h int, px binary"
 )
-
-_MODEL_CACHE: dict = {}
-
-
-def _chain(chain_json: str):
-    m = _MODEL_CACHE.get(chain_json)
-    if m is None:
-        m = from_json(json.loads(chain_json))
-        _MODEL_CACHE[chain_json] = m
-    return m
-
 
 def image_to_tiles(spark: SparkSession, im: np.ndarray, tile: int = 256) -> DataFrame:
     """Split an (h, w, 4) uint8 array into a tile DataFrame."""
@@ -122,7 +111,7 @@ def warp_tiled(
         cc, rr = np.meshgrid(cols, rows_)
         xs = xoff + (cc.flatten() * xscale)
         ys = yoff + (rr.flatten() * yscale)
-        inv = _chain(chain_json).inverse()
+        inv = model_from_json(chain_json).inverse()
         bx, by = inv.predict(xs, ys)
         return bx, by
 

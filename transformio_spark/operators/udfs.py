@@ -29,6 +29,7 @@ Two application paths exist by design:
 
 from __future__ import annotations
 
+import functools
 import json
 
 import pandas as pd
@@ -38,15 +39,10 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernels import from_json
 
-_MODEL_CACHE: dict = {}
-
-
-def _model(model_json: str):
-    m = _MODEL_CACHE.get(model_json)
-    if m is None:
-        m = from_json(json.loads(model_json))
-        _MODEL_CACHE[model_json] = m
-    return m
+@functools.cache
+def model_from_json(model_json: str):
+    """The fitted model of a JSON IR string, rebuilt once per process."""
+    return from_json(json.loads(model_json))
 
 
 def transform_xy(model_json: str, x: Column, y: Column) -> Column:
@@ -57,7 +53,7 @@ def transform_xy(model_json: str, x: Column, y: Column) -> Column:
 
     @pandas_udf("px double, py double")
     def _apply(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        model = _model(model_json)
+        model = model_from_json(model_json)
         px, py = model.predict(xs.to_numpy(), ys.to_numpy())
         return pd.DataFrame({"px": px, "py": py})
 

@@ -9,6 +9,8 @@ Spark path.
 
 from __future__ import annotations
 
+import functools
+
 from ..functions.geo import haversine_km_sql
 from ..functions.text import (
     fingerprint_sql,
@@ -1458,6 +1460,7 @@ FROM f GROUP BY kind ORDER BY kind
 """
 
 
+@functools.cache
 def auto_choose_model() -> str:
     """Literal-errs + SQL-argmin twin of q_auto_choose_model (round 5,
     per the round-4 review): the per-candidate refinement loops

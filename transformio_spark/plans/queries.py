@@ -14,6 +14,7 @@ conventions shared with the oracles:
 
 from __future__ import annotations
 
+import functools
 import os
 
 import pandas as pd
@@ -48,30 +49,20 @@ def _bounded_sort(df: DataFrame, *cols) -> DataFrame:
     return df.repartition(1).sortWithinPartitions(*cols)
 
 
-# (session, sf_dir) -> the extracted-points DataFrame.  This memoizes
-# the PLAN (an immutable lazy DataFrame), never data: every action
-# over it still recomputes from the parquet inputs.  Rebuilding the
-# identical docs_spans+extract expression tree cost ~0.3 s of driver
-# time per query construction across ~30 gate queries.  Keyed by the
-# SparkSession OBJECT (not id()): holding the reference keeps a
-# stopped session's address from being reused by a new session, so a
-# fresh session can never see a stale dead-session plan.
-_POINTS_DF_CACHE: dict = {}
-
-
+@functools.lru_cache
 def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark, sf_dir)
-    df = _POINTS_DF_CACHE.get(key)
-    if df is None:
-        # round 6: the numeric media-span fastpath — identical rows to
-        # extract_coordinates(docs_spans(media_only=True), A) without
-        # materializing + re-parsing the media_ref strings (pinned
-        # bit-equal over the full corpus in
-        # tests/test_extract_fastpath.py)
-        pts = synth.media_points_numeric(spark, sf_dir)
-        df = extract.finish_coordinates(pts, extract.px2geo_affine())
-        _POINTS_DF_CACHE[key] = df
-    return df
+    """The extracted-points DataFrame shared by ~30 gate queries.
+    Memoizes the PLAN (an immutable lazy DataFrame), never data:
+    every action over it still recomputes from the parquet inputs.
+    Rebuilding the identical expression tree cost ~0.3 s of driver
+    time per query construction."""
+    # round 6: the numeric media-span fastpath — identical rows to
+    # extract_coordinates(docs_spans(media_only=True), A) without
+    # materializing + re-parsing the media_ref strings (pinned
+    # bit-equal over the full corpus in
+    # tests/test_extract_fastpath.py)
+    pts = synth.media_points_numeric(spark, sf_dir)
+    return extract.finish_coordinates(pts, extract.px2geo_affine())
 
 
 # --------------------------------------------------------------------------
@@ -754,9 +745,9 @@ def q_vector_transform(spark, sf_dir) -> DataFrame:
 WARP_GATE_SRC = 256          # source raster is WARP_GATE_SRC^2 px
 WARP_GATE_SRC_TILE = 96
 WARP_GATE_OUT_TILE = 64
-_WARP_GATE_CACHE: dict = {}
 
 
+@functools.cache
 def warp_gate_geometry() -> dict:
     """Deterministic geometry for the warp gate query, shared with its
     DuckDB oracle (plans/oracles.warp_affine_checksums): the affine
@@ -765,8 +756,6 @@ def warp_gate_geometry() -> dict:
     runs — composing them into one matrix would change fp association
     and could flip an np.around'ed source index), and the output
     geometry derived exactly as kernels.warp would."""
-    if _WARP_GATE_CACHE:
-        return _WARP_GATE_CACHE
     import math as _math
 
     import numpy as _np
@@ -788,10 +777,7 @@ def warp_gate_geometry() -> dict:
     inv_mats = [
         _np.linalg.inv(t.A).tolist() for t in reversed(chain.transforms)
     ]
-    _WARP_GATE_CACHE.update(
-        chain=chain, affine=affine, size=size, inv_mats=inv_mats,
-    )
-    return _WARP_GATE_CACHE
+    return dict(chain=chain, affine=affine, size=size, inv_mats=inv_mats)
 
 
 def warp_gate_image():
@@ -993,7 +979,8 @@ def q_embedding_ivf(spark, sf_dir) -> DataFrame:
         F.col("vec_id").alias("query_id"), "unit"
     )
     corpus = emb.where(F.col("vec_id") >= 10)
-    cents = trained_ivf_centroids()
+    # called in the oracle's form, so one cache entry serves both
+    cents = trained_ivf_centroids(n_cells=16, seed=11)
     out = similarity.ivf_topk(corpus, queries_df, cents, k=5, n_probe=2)
     return out.select(
         "query_id",
@@ -2214,9 +2201,8 @@ TIN_YLO, TIN_YHI = 20.0, 986.0
 TIN_SX = (TIN_XHI - TIN_XLO) / 360.0
 TIN_SY = (TIN_YHI - TIN_YLO) / 170.0
 
-_TIN_GATE_CACHE: dict = {}
 
-
+@functools.cache
 def tin_gate_model():
     """Driver-side TIN fit on the china22 GCPs (integer pixel coords ->
     geographic), shared by the Spark query and the DuckDB oracle.
@@ -2224,31 +2210,29 @@ def tin_gate_model():
     (a0,a1,a2), (b0,b1,b2))] — per-triangle order-1 coefficient rows
     px = a0*x + a1*y + a2, py = b0*x + b1*y + b2 (reference
     transforms.py:666-683)."""
-    if "m" not in _TIN_GATE_CACHE:
-        import json as _json
+    import json as _json
 
-        from ..fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
-        from ..kernels import transforms as kt
+    from ..fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
+    from ..kernels import transforms as kt
 
-        tin = kt.TIN().fit(
-            [p[0] for p in CHINA22_IMPOINTS],
-            [p[1] for p in CHINA22_IMPOINTS],
-            [p[0] for p in CHINA22_GEOPOINTS],
-            [p[1] for p in CHINA22_GEOPOINTS],
-        )
-        tris = []
-        for i, (tri, tr) in enumerate(tin.tris):
-            (x1, y1), (x2, y2), (x3, y3) = tri
-            tris.append(
-                (
-                    i,
-                    tuple(float(v) for v in (x1, y1, x2, y2, x3, y3)),
-                    tuple(float(v) for v in tr.A[0]),
-                    tuple(float(v) for v in tr.A[1]),
-                )
+    tin = kt.TIN().fit(
+        [p[0] for p in CHINA22_IMPOINTS],
+        [p[1] for p in CHINA22_IMPOINTS],
+        [p[0] for p in CHINA22_GEOPOINTS],
+        [p[1] for p in CHINA22_GEOPOINTS],
+    )
+    tris = []
+    for i, (tri, tr) in enumerate(tin.tris):
+        (x1, y1), (x2, y2), (x3, y3) = tri
+        tris.append(
+            (
+                i,
+                tuple(float(v) for v in (x1, y1, x2, y2, x3, y3)),
+                tuple(float(v) for v in tr.A[0]),
+                tuple(float(v) for v in tr.A[1]),
             )
-        _TIN_GATE_CACHE["m"] = (_json.dumps(tin.to_json()), tris)
-    return _TIN_GATE_CACHE["m"]
+        )
+    return _json.dumps(tin.to_json()), tris
 
 
 def q_tin_transform(spark, sf_dir) -> DataFrame:
@@ -2293,27 +2277,26 @@ def q_tin_transform(spark, sf_dir) -> DataFrame:
     )
 
 
+@functools.cache
 def model_accuracy_gate():
     """Driver-side observable re-fit for the model_accuracy gate query
     (reference accuracy.py:41-52 residuals + 75-96 metrics): Polynomial
     order 2 re-fit on ALL china22 GCPs, coefficients shared with the
     DuckDB oracle as literals."""
-    if "acc" not in _TIN_GATE_CACHE:
-        from ..fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
-        from ..kernels import transforms as kt
+    from ..fixtures import CHINA22_GEOPOINTS, CHINA22_IMPOINTS
+    from ..kernels import transforms as kt
 
-        poly = kt.Polynomial(order=2).fit(
-            [p[0] for p in CHINA22_IMPOINTS],
-            [p[1] for p in CHINA22_IMPOINTS],
-            [p[0] for p in CHINA22_GEOPOINTS],
-            [p[1] for p in CHINA22_GEOPOINTS],
-        )
-        gcps = [
-            (float(ip[0]), float(ip[1]), float(gp[0]), float(gp[1]))
-            for ip, gp in zip(CHINA22_IMPOINTS, CHINA22_GEOPOINTS)
-        ]
-        _TIN_GATE_CACHE["acc"] = ([list(row) for row in poly.A], gcps)
-    return _TIN_GATE_CACHE["acc"]
+    poly = kt.Polynomial(order=2).fit(
+        [p[0] for p in CHINA22_IMPOINTS],
+        [p[1] for p in CHINA22_IMPOINTS],
+        [p[0] for p in CHINA22_GEOPOINTS],
+        [p[1] for p in CHINA22_GEOPOINTS],
+    )
+    gcps = [
+        (float(ip[0]), float(ip[1]), float(gp[0]), float(gp[1]))
+        for ip, gp in zip(CHINA22_IMPOINTS, CHINA22_GEOPOINTS)
+    ]
+    return [list(row) for row in poly.A], gcps
 
 
 def q_model_accuracy(spark, sf_dir) -> DataFrame:
@@ -2351,6 +2334,7 @@ IVF_TRAIN_SAMPLE = os.environ.get(
 )
 
 
+@functools.cache
 def trained_ivf_centroids(n_cells: int = 16, seed: int = 11) -> list[list[float]]:
     """K-means-TRAINED IVF centroids (operators/similarity.
     ivf_train_centroids) on the pinned IVF_TRAIN_SAMPLE embedding
@@ -2359,20 +2343,17 @@ def trained_ivf_centroids(n_cells: int = 16, seed: int = 11) -> list[list[float]
     literals.  Training on a pinned sample (not the queried sf_dir)
     is what a production pipeline does too: centroids are fitted once
     on a corpus sample, then reused across partitions/runs."""
-    key = ("ivf_trained", n_cells, seed)
-    if key not in _TIN_GATE_CACHE:
-        import duckdb as _duckdb
-        import numpy as _np
+    import duckdb as _duckdb
+    import numpy as _np
 
-        from ..operators.similarity import ivf_train_centroids
+    from ..operators.similarity import ivf_train_centroids
 
-        vecs = _duckdb.sql(
-            f"select embedding from '{IVF_TRAIN_SAMPLE}' order by vec_id"
-        ).fetchnumpy()["embedding"]
-        U = _np.array([_np.asarray(v, dtype=_np.float64) for v in vecs])
-        U /= _np.linalg.norm(U, axis=1, keepdims=True)
-        _TIN_GATE_CACHE[key] = ivf_train_centroids(U, n_cells=n_cells, seed=seed)
-    return _TIN_GATE_CACHE[key]
+    vecs = _duckdb.sql(
+        f"select embedding from '{IVF_TRAIN_SAMPLE}' order by vec_id"
+    ).fetchnumpy()["embedding"]
+    U = _np.array([_np.asarray(v, dtype=_np.float64) for v in vecs])
+    U /= _np.linalg.norm(U, axis=1, keepdims=True)
+    return ivf_train_centroids(U, n_cells=n_cells, seed=seed)
 
 
 # --------------------------------------------------------------------------

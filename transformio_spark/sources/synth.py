@@ -15,6 +15,7 @@ with 2-5 interleaved spans per doc, >=1 media span carrying a
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Iterable, Sequence
 
 import pyarrow as pa
@@ -61,16 +62,22 @@ def raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured: the round-4 simhash explode ran 1-task, ~8 s where
     ~1 s is available; an Iceberg scan on a cluster yields many
     splits and skips this)."""
-    scan = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    path = f"{sf_dir}/documents.parquet"
+    scan = spark.read.parquet(path)
     par = spark.sparkContext.defaultParallelism * 2
-    cache_key = (spark, f"{sf_dir}/documents.parquet")
-    need = _REPARTITION_CACHE.get(cache_key)
-    if need is None:
-        need = scan.rdd.getNumPartitions() < par
-        _REPARTITION_CACHE[cache_key] = need
-    if need:
+    if _scan_splits(spark, path) < par:
         scan = scan.repartition(par, "doc_id")
     return scan
+
+
+@functools.lru_cache
+def _scan_splits(spark: SparkSession, parquet_path: str) -> int:
+    """Number of scan splits Spark plans for ``parquet_path``: a
+    driver-side plan->RDD conversion, probed once per (session, path)
+    instead of once per query build.  Splits depend on the file sizes
+    alone, so the probe declares a placeholder schema; that skips the
+    one-task schema-inference job a bare ``read.parquet`` launches."""
+    return spark.read.schema("_ int").parquet(parquet_path).rdd.getNumPartitions()
 
 
 _SPAN_FIELDS = "kind string, text string, media_ref string, offset int"
@@ -80,10 +87,6 @@ _SPAN_FIELDS = "kind string, text string, media_ref string, offset int"
 # lineitem key; the flat `documents` table stays the corpus for the
 # pure text-analysis operators.
 DOC_NUM_SQL = "(l_orderkey * 8 + l_linenumber)"
-
-# (session, sf_dir) -> bool: does the local scan need a repartition?
-# (keyed by the session OBJECT so a reused id() cannot alias sessions)
-_REPARTITION_CACHE: dict = {}
 
 
 def _spans_base(
@@ -100,19 +103,10 @@ def _spans_base(
     parallelism (driver-side plan inspection, no job).  Results are
     partitioning-independent either way."""
     e = synthspec.point_exprs_sql("doc_num")
+    path = f"{sf_dir}/lineitem.parquet"
     par = spark.sparkContext.defaultParallelism * 2
-    scan = spark.read.parquet(f"{sf_dir}/lineitem.parquet").selectExpr(
-        f"{DOC_NUM_SQL} AS doc_num",
-    )
-    # The plan->RDD probe costs a driver-side conversion per call; the
-    # answer only depends on (session, path), so cache the decision —
-    # 30+ gate queries otherwise re-probe the same scan.
-    cache_key = (spark, sf_dir)
-    need = _REPARTITION_CACHE.get(cache_key)
-    if need is None:
-        need = scan.rdd.getNumPartitions() < par
-        _REPARTITION_CACHE[cache_key] = need
-    if need:
+    scan = spark.read.parquet(path).selectExpr(f"{DOC_NUM_SQL} AS doc_num")
+    if _scan_splits(spark, path) < par:
         scan = scan.repartition(par, "doc_num")
     # two-stage select: px_col/px_row re-use the already-computed
     # lon/lat columns instead of re-expanding the CASE derivation text
