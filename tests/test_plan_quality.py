@@ -50,6 +50,31 @@ def _plan_nodes(df):
     return list(walk(df._jdf.queryExecution().executedPlan().executedPlan()))
 
 
+def _interpreted_exprs(df) -> list[str]:
+    """Class names of the plan's expressions that Spark evaluates
+    interpreted: every ``CodegenFallback`` (lambda higher-order
+    functions and their lambdas, among others), which drags its whole
+    argument subtree out of generated code, row by row."""
+    jvm = df._sc._jvm
+    fallback = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback"
+    )
+    found = set()
+
+    def walk(expr):
+        if fallback.isInstance(expr):
+            found.add(expr.getClass().getSimpleName())
+        children = expr.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    for node in _plan_nodes(df):
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            walk(exprs.apply(i))
+    return sorted(found)
+
+
 def _arrow_udf_nodes(df):
     """ArrowEvalPython nodes of the final adaptive plan of an executed
     DataFrame."""
@@ -281,8 +306,7 @@ def test_mollweide_staged_plan_has_no_interpreted_fold(spark, sf_dir):
     # formatted operator list
     opt = df._jdf.queryExecution().optimizedPlan().toString()
     # the fold's signature: an aggregate( HOF over an array_repeat
-    # dummy-element carrier.  (Row-local filter() HOFs from the span
-    # corpus construction are fine — they're not per-iteration math.)
+    # dummy-element carrier
     assert "array_repeat" not in opt
     assert "aggregate(" not in opt
 
@@ -350,16 +374,64 @@ def test_loo_residuals_job_budget(spark, sf_dir):
 
 
 def test_knn_city_assign_builds_without_jobs(spark, sf_dir):
-    """The inline kNN collects its literal center table while the
-    query is built: a LocalTableScan collect runs no job.  The first
-    build in a session also builds the memoized points plan, whose
-    parquet schema inference runs a job; the budget holds after it."""
-    q.q_knn_city_assign(spark, sf_dir)
-    for i in range(2):
-        build_jobs, _ = _jobs_per_execution(
-            spark, lambda: q.q_knn_city_assign(spark, sf_dir)
-        )
-        assert build_jobs == 0, (i, build_jobs)
+    """A warm build launches no job: the inline kNN collects its
+    literal center table, a LocalTableScan, with none, and every
+    source table is read with its declared schema, so no parquet
+    schema inference runs either.  The other queries pin the latter."""
+    for name in (
+        "knn_city_assign", "region_join_bcast", "pip_triangle",
+        "pricing_summary", "gc_waypoints",
+    ):
+        qfn = getattr(q, f"q_{name}")
+        qfn(spark, sf_dir)
+        for i in range(2):
+            build_jobs, _ = _jobs_per_execution(
+                spark, lambda: qfn(spark, sf_dir)
+            )
+            assert build_jobs == 0, (name, i, build_jobs)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "points_df", "tile_counts", "region_join_bcast", "pip_triangle",
+        "knn_city_assign", "tin_transform", "poly_roundtrip",
+        "mercator_cells",
+    ],
+)
+def test_points_family_runs_in_generated_code(spark, sf_dir, name):
+    """No interpreted expression on the points path: the span slice,
+    the affine and lattice snap, the tile keys, the join refines and
+    the kNN argmin all run in generated code.  (``region_join_salted``
+    is left out: its one ``transform`` builds the tile cover of the 25
+    region boxes, not the points side.)"""
+    qfn = q.points_df if name == "points_df" else getattr(q, f"q_{name}")
+    assert _interpreted_exprs(qfn(spark, sf_dir)) == [], name
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_source_ddl_matches_parquet_footer(spark, sf_dir, sf):
+    """Each declared source schema equals the schema Spark reads from
+    the parquet footer (timestamps as instants), names and types."""
+    import os
+
+    from transformio_spark.sources import synth
+
+    root = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), sf)
+    if not os.path.isdir(root):
+        pytest.skip(f"no {sf} test data")
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for name, ddl in synth.SOURCE_DDL.items():
+            footer = spark.read.parquet(f"{root}/{name}.parquet").schema
+            declared = synth.read_table(spark, root, name).schema
+            assert [(f.name, f.dataType) for f in declared] == [
+                (f.name, f.dataType) for f in footer
+            ], (sf, name, ddl)
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_grid_dbscan_union_find_reads_checkpoint(spark, sf_dir):
@@ -396,12 +468,15 @@ def test_grid_dbscan_union_find_reads_checkpoint(spark, sf_dir):
     [
         ("grid_dbscan", 13), ("curation_funnel", 15), ("neardup_components", 8),
         ("event_sessions", 4), ("events_asof_join", 4), ("gc_waypoints", 6),
+        ("region_join_bcast", 5), ("pip_triangle", 5), ("knn_city_assign", 4),
     ],
 )
 def test_component_queries_job_budget(spark, sf_dir, name, budget):
     """Jobs per warm execution (build + collect) of the queries that
     label connected components, of the single-shuffle temporal
-    queries and of gc_waypoints: a new driver barrier fails here."""
+    queries, of gc_waypoints and of the points-family joins (whose
+    one-task bounded sort runs no range-sampling job): a new driver
+    barrier fails here."""
     qfn = getattr(q, f"q_{name}")
     qfn(spark, sf_dir).collect()
     _, jobs = _jobs_per_execution(spark, lambda: qfn(spark, sf_dir))

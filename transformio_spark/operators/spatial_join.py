@@ -17,8 +17,9 @@ Design for 10^12 rows / 1000 executors:
   region side per salt — per the north rule, this is explicit and
   testable (salted == unsalted), independent of AQE's skew splitting
   (which stays enabled as belt-and-braces).
-- kNN control-point matching: broadcast the (tiny) center table,
-  rank by haversine with a per-point window, keep k (N4).
+- kNN control-point matching: compile the (tiny) center table into
+  a per-point argmin, or broadcast it and rank by haversine with a
+  per-point window, keep k (N4).
 """
 
 from __future__ import annotations
@@ -216,7 +217,7 @@ def knn_join(
     inline=True (default, the scale plan for small center sets): the
     center table is collected on the driver (it is a broadcast-sized
     control-point set) and compiled INTO the expression — per row,
-    an array of (dist, center_id) structs is built, array_sort'ed and
+    one (dist_km, center_id) struct per center, sort_array'ed and
     sliced to k.  Zero joins, zero shuffles, whole-stage codegen;
     the per-point window-rank plan would shuffle |points| x |centers|
     rows just to pick minima.
@@ -225,39 +226,26 @@ def knn_join(
     for center sets too big to inline."""
     if inline:
         rows = centers.select("center_id", "lon", "lat").collect()
-        # ONE nested literal array walked by a single transform (the
-        # IVF fold template, operators/similarity.py): the haversine
-        # expression tree appears once in the plan instead of once per
-        # center — ~|centers|x smaller analysis/codegen at identical
-        # math and identical (dist, center_id) sort order.
-        centers_lit = F.array(
-            *[
-                F.struct(
-                    F.lit(float(r.lon)).alias("c_lon"),
-                    F.lit(float(r.lat)).alias("c_lat"),
-                    F.lit(r.center_id).alias("center_id"),
-                )
-                for r in rows
-            ]
+        # one haversine per center, spelled out in one SQL expression:
+        # a literal center array walked by a `transform` lambda (then
+        # `array_sort`) runs interpreted, row by row, and ten haversines
+        # built as Columns cost ~2,000 py4j calls per query build.  This
+        # runs in generated code, in the same (dist_km, center_id) order.
+        entries = ", ".join(
+            "named_struct('dist_km', "
+            + geo.haversine_km_sql(
+                "lon", "lat", geo.dlit_sql(r.lon), geo.dlit_sql(r.lat)
+            )
+            + f", 'center_id', {int(r.center_id)})"
+            for r in rows
         )
-        entries = F.transform(
-            centers_lit,
-            lambda c: F.struct(
-                geo.haversine_km(
-                    F.col("lon"), F.col("lat"), c["c_lon"], c["c_lat"]
-                ).alias("dist_km"),
-                c["center_id"].alias("center_id"),
-            ),
-        )
-        topk = F.slice(F.array_sort(entries), 1, k)
-        out = points.select(
-            "*", F.posexplode(topk).alias("_pos", "_nn")
-        )
-        return (
-            out.withColumn("center_id", F.col("_nn.center_id"))
-            .withColumn("dist_km", F.col("_nn.dist_km"))
-            .withColumn("knn_rank", F.col("_pos") + 1)
-            .drop("_pos", "_nn")
+        topk = F.expr(f"slice(sort_array(array({entries})), 1, {int(k)})")
+        out = points.select("*", F.posexplode(topk).alias("_pos", "_nn"))
+        return out.select(
+            *[out[c] for c in points.columns],
+            F.col("_nn.center_id").alias("center_id"),
+            F.col("_nn.dist_km").alias("dist_km"),
+            (F.col("_pos") + 1).alias("knn_rank"),
         )
     c = centers.select(
         F.col("center_id"),

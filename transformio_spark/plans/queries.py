@@ -33,15 +33,17 @@ def _e(col, n: int = 6):
 
 
 def _bounded_sort(df: DataFrame, *cols) -> DataFrame:
-    """Total order for a GRID-BOUNDED output (round 6, guide §2.4):
+    """Total order for a BOUNDED output (round 6, guide §2.4):
     callers' row counts are capped by a fixed cell grid (zoom-10
-    tiles <= 524,288 rows; zoom-8 Morton cells <= 65,536) at ANY
-    corpus scale, so the global-sort machinery — range-exchange
-    sampling pass + shuffle + per-partition sorts — costs more than
-    ONE bounded task sorting the whole result.  Row order is
-    identical to orderBy(*cols).  Interleaved same-session probes on
-    hotspot_focal's 438 k rows: noop sink 3.05 → 2.56 s, collect sink
-    4.49 → 4.11 s (driver-side deserialization dominates collect
+    tiles <= 524,288 rows; zoom-8 Morton cells <= 65,536) or by a
+    literal or dimension table (one row per GCP, per region <= 25, per
+    kNN center <= 10) at ANY corpus scale, so the global-sort
+    machinery — range-exchange sampling pass + shuffle +
+    per-partition sorts — costs more than ONE bounded task sorting
+    the whole result.  Row order is identical to orderBy(*cols).
+    Interleaved same-session probes on hotspot_focal's 438 k rows:
+    noop sink 3.05 → 2.56 s, collect sink 4.49 → 4.11 s
+    (driver-side deserialization dominates collect
     either way, so the single-task row encoding is NOT a bottleneck —
     first suspected from contended in-bench samples, then refuted by
     the controlled probe).  NOT for outputs that grow with the
@@ -113,10 +115,9 @@ def q_region_join_bcast(spark, sf_dir) -> DataFrame:
     joined = spatial_join.broadcast_contains_join(
         pts, boxes, point_key=_grid_key_from_coords, box_key=_grid_key_from_box
     )
-    return (
-        joined.groupBy("region_id")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy("region_id")
+    return _bounded_sort(
+        joined.groupBy("region_id").agg(F.count(F.lit(1)).alias("n_points")),
+        "region_id",
     )
 
 
@@ -126,10 +127,9 @@ def q_region_join_salted(spark, sf_dir) -> DataFrame:
     pts = points_df(spark, sf_dir)
     boxes = synth.region_boxes(spark, sf_dir)
     joined = spatial_join.tiled_contains_join(pts, boxes, zoom=4, n_salt=8)
-    return (
-        joined.groupBy("region_id")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy("region_id")
+    return _bounded_sort(
+        joined.groupBy("region_id").agg(F.count(F.lit(1)).alias("n_points")),
+        "region_id",
     )
 
 
@@ -140,10 +140,9 @@ def q_pip_triangle(spark, sf_dir) -> DataFrame:
         pts, tris,
         point_key=_grid_key_from_coords, tri_key=_grid_key_from_triangle,
     )
-    return (
-        joined.groupBy("region_id")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy("region_id")
+    return _bounded_sort(
+        joined.groupBy("region_id").agg(F.count(F.lit(1)).alias("n_points")),
+        "region_id",
     )
 
 
@@ -161,10 +160,9 @@ def q_pip_polygon(spark, sf_dir) -> DataFrame:
         # 5x5 grid cell IS the region id
         poly_key=lambda df: F.col("region_id").cast("long"),
     )
-    return (
-        joined.groupBy("region_id")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy("region_id")
+    return _bounded_sort(
+        joined.groupBy("region_id").agg(F.count(F.lit(1)).alias("n_points")),
+        "region_id",
     )
 
 
@@ -172,10 +170,9 @@ def q_knn_city_assign(spark, sf_dir) -> DataFrame:
     pts = points_df(spark, sf_dir)
     centers = synth.knn_centers(spark)
     nearest = spatial_join.knn_join(pts, centers, k=1)
-    return (
-        nearest.groupBy("center_id")
-        .agg(F.count(F.lit(1)).alias("n_points"))
-        .orderBy("center_id")
+    return _bounded_sort(
+        nearest.groupBy("center_id").agg(F.count(F.lit(1)).alias("n_points")),
+        "center_id",
     )
 
 
@@ -283,7 +280,7 @@ def q_embedding_int8_rerank(spark, sf_dir) -> DataFrame:
     unbroadcast (it is the 10^12-row side at scale), the query set is
     broadcast.  Output carries BOTH scores so the oracle pins the
     quantizer, the approx ranking, and the re-rank."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = synth.read_table(spark, sf_dir, "embeddings")
     xd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     amax = F.array_max(F.transform(xd, F.abs))
     denom = F.when(amax == 0.0, F.lit(1.0)).otherwise(amax)
@@ -641,7 +638,7 @@ def q_dedup_exact(spark, sf_dir) -> DataFrame:
 def q_embedding_knn_l2(spark, sf_dir) -> DataFrame:
     """Brute-force top-5 nearest neighbours (squared L2, integer-exact
     on 1e-3-quantized embeddings) for the first 10 vectors."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    emb = synth.read_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
             F.col("embedding"),
@@ -698,13 +695,16 @@ def q_polygon_areas(spark, sf_dir) -> DataFrame:
         "2, cast(x3 as double), cast(y3 as double)) AS (pt_seq, x, y)"
     )
     m = vector_geom.ring_metrics(long_pts)
-    return m.select(
-        F.col("geom_id").cast("long").alias("region_id"),
-        "n_vertices",
-        "area2",
-        F.round(F.col("centroid_x") * 1e6).cast("long").alias("cx_e6"),
-        F.round(F.col("centroid_y") * 1e6).cast("long").alias("cy_e6"),
-    ).orderBy("region_id")
+    return _bounded_sort(
+        m.select(
+            F.col("geom_id").cast("long").alias("region_id"),
+            "n_vertices",
+            "area2",
+            F.round(F.col("centroid_x") * 1e6).cast("long").alias("cx_e6"),
+            F.round(F.col("centroid_y") * 1e6).cast("long").alias("cy_e6"),
+        ),
+        "region_id",
+    )
 
 
 def q_vector_transform(spark, sf_dir) -> DataFrame:
@@ -973,7 +973,7 @@ def q_embedding_ivf(spark, sf_dir) -> DataFrame:
     from ..operators import similarity
 
     emb = similarity.with_unit_vec(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        synth.read_table(spark, sf_dir, "embeddings")
     )
     queries_df = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "unit"
@@ -999,7 +999,7 @@ def q_embedding_neardup_pairs(spark, sf_dir) -> DataFrame:
     from ..operators import similarity
 
     emb = similarity.with_unit_vec(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        synth.read_table(spark, sf_dir, "embeddings")
     )
     return similarity.cosine_neardup_pairs(emb, 0.40, dim=64).orderBy(
         "id_a", "id_b"
@@ -1039,9 +1039,12 @@ def q_radius_join(spark, sf_dir) -> DataFrame:
         (i, lon, lat) for i, (lon, lat) in enumerate(synthspec.CITIES)
     ]
     pts = points_df(spark, sf_dir)
-    return spatial_join.radius_join_counts(
-        pts, centers, RADIUS_JOIN_KM, zoom=RADIUS_JOIN_ZOOM
-    ).orderBy("center_id")
+    return _bounded_sort(
+        spatial_join.radius_join_counts(
+            pts, centers, RADIUS_JOIN_KM, zoom=RADIUS_JOIN_ZOOM
+        ),
+        "center_id",
+    )
 
 
 def q_events_asof_join(spark, sf_dir) -> DataFrame:
@@ -1051,9 +1054,8 @@ def q_events_asof_join(spark, sf_dir) -> DataFrame:
     pass).  Oracle = DuckDB's native ASOF LEFT JOIN.  Gap surfaces
     in whole seconds; clicks with no prior view map to -1."""
     from ..operators import temporal
-    from ..streaming.stream import EVENTS_SCHEMA
 
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
+    ev = synth.read_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
     )
@@ -1240,7 +1242,7 @@ def q_embedding_ann_lsh(spark, sf_dir) -> DataFrame:
     from ..operators import similarity
 
     emb = similarity.with_unit_vec(
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        synth.read_table(spark, sf_dir, "embeddings")
     )
     queries_df = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), "unit"
@@ -1523,9 +1525,8 @@ def q_event_sessions(spark, sf_dir) -> DataFrame:
     count, event count, largest-session size, and summed session
     duration (whole µs)."""
     from ..operators.temporal import sessionize
-    from ..streaming.stream import EVENTS_SCHEMA
 
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
+    ev = synth.read_table(spark, sf_dir, "events")
     sess = sessionize(ev, gap_seconds=SESSION_GAP_S)
     per_session = sess.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_ev"),
@@ -1566,9 +1567,8 @@ def q_session_window_overlap(spark, sf_dir) -> DataFrame:
     pairs, wrong overlap arithmetic shifts the sum.  The DuckDB twin
     is the plain quadratic inequality join over the same session CTE."""
     from ..operators.temporal import interval_overlap_join, sessionize
-    from ..streaming.stream import EVENTS_SCHEMA
 
-    ev = spark.read.schema(EVENTS_SCHEMA).parquet(f"{sf_dir}/events.parquet")
+    ev = synth.read_table(spark, sf_dir, "events")
     sess = (
         sessionize(ev, gap_seconds=SESSION_GAP_S)
         .groupBy("user_id", "session_idx")
@@ -2142,9 +2142,9 @@ def q_auto_choose_model(spark, sf_dir) -> DataFrame:
 def q_revenue_by_nation(spark, sf_dir) -> DataFrame:
     """Multi-join relational query (orders ⋈ customer ⋈ nation):
     Spark SQL's own join machinery under the oracle gate."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = synth.read_table(spark, sf_dir, "orders")
+    customer = synth.read_table(spark, sf_dir, "customer")
+    nation = synth.read_table(spark, sf_dir, "nation")
     return (
         orders.join(customer, orders.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
@@ -2158,7 +2158,7 @@ def q_revenue_by_nation(spark, sf_dir) -> DataFrame:
     )
 
 def q_pricing_summary(spark, sf_dir) -> DataFrame:
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = synth.read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -2174,7 +2174,7 @@ def q_pricing_summary(spark, sf_dir) -> DataFrame:
 
 
 def q_events_by_type(spark, sf_dir) -> DataFrame:
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = synth.read_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(

@@ -54,6 +54,40 @@ def literal_table(
     return spark.createDataFrame(table, schema)
 
 
+#: The declared schema of each source table the engine reads: its
+#: parquet footer schema, with timestamps read as instants
+#: (``timestamp``, as Spark infers them with
+#: ``spark.sql.parquet.inferTimestampNTZ.enabled`` off).  A wall-clock
+#: ``timestamp_ntz`` would tie every ``unix_micros`` to the session
+#: time zone.  Pinned against the footers in tests/test_plan_quality.py.
+SOURCE_DDL = {
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+    "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+    "events": "event_id bigint, ts timestamp, user_id bigint, "
+    "event_type string, value double, props string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+}
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Source table ``name`` of ``sf_dir`` with its declared schema.
+    A bare ``read.parquet`` infers the schema from the file footer in
+    a one-task job each time a query is built; a declared schema plans
+    with no job."""
+    return spark.read.schema(SOURCE_DDL[name]).parquet(
+        f"{sf_dir}/{name}.parquet"
+    )
+
+
 def raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flat documents corpus.  Same conditional-repartition logic
     as docs_spans: the local testdata is a single-row-group parquet
@@ -62,10 +96,9 @@ def raw_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured: the round-4 simhash explode ran 1-task, ~8 s where
     ~1 s is available; an Iceberg scan on a cluster yields many
     splits and skips this)."""
-    path = f"{sf_dir}/documents.parquet"
-    scan = spark.read.parquet(path)
+    scan = read_table(spark, sf_dir, "documents")
     par = spark.sparkContext.defaultParallelism * 2
-    if _scan_splits(spark, path) < par:
+    if _scan_splits(spark, f"{sf_dir}/documents.parquet") < par:
         scan = scan.repartition(par, "doc_id")
     return scan
 
@@ -103,10 +136,11 @@ def _spans_base(
     parallelism (driver-side plan inspection, no job).  Results are
     partitioning-independent either way."""
     e = synthspec.point_exprs_sql("doc_num")
-    path = f"{sf_dir}/lineitem.parquet"
     par = spark.sparkContext.defaultParallelism * 2
-    scan = spark.read.parquet(path).selectExpr(f"{DOC_NUM_SQL} AS doc_num")
-    if _scan_splits(spark, path) < par:
+    scan = read_table(spark, sf_dir, "lineitem").selectExpr(
+        f"{DOC_NUM_SQL} AS doc_num"
+    )
+    if _scan_splits(spark, f"{sf_dir}/lineitem.parquet") < par:
         scan = scan.repartition(par, "doc_num")
     # two-stage select: px_col/px_row re-use the already-computed
     # lon/lat columns instead of re-expanding the CASE derivation text
@@ -180,9 +214,12 @@ def media_points_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
         snap("lon2", 4).alias("raw_x"),
         snap("lat2", 4).alias("raw_y"),
     )
-    spans = F.filter(
+    # slice, not a filter lambda: a lambda runs interpreted, row by
+    # row, inside the generated stage (DESIGN.md §3)
+    spans = F.slice(
         F.array(primary, secondary),
-        lambda s, i: (i == 0) | ((i == 1) & (F.col("doc_num") % 3 == 2)),
+        1,
+        F.when(F.col("doc_num") % 3 == 2, 2).otherwise(1),
     )
     return (
         base.select(
@@ -359,7 +396,7 @@ def region_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (5x5), keyed by nation — a deterministic polygon layer whose
     containment join has an exact SQL oracle.  Every point falls in
     exactly one box."""
-    return spark.read.parquet(f"{sf_dir}/nation.parquet").selectExpr(
+    return read_table(spark, sf_dir, "nation").selectExpr(
         "n_nationkey AS region_id",
         "n_name AS region_name",
         "-180.0 + (n_nationkey % 5) * 72.0 AS lon_min",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import tiles
 from ..operators import extract
+from ..sources.synth import SOURCE_DDL
 
 
 def streaming_tile_counts(
@@ -47,10 +48,7 @@ def streaming_tile_counts(
     )
 
 
-EVENTS_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, "
-    "value double, props string"
-)
+EVENTS_SCHEMA = SOURCE_DDL["events"]
 
 
 def streaming_event_window_counts(
