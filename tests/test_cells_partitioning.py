@@ -23,10 +23,10 @@ def pts(spark, sf_dir):
 def test_cell_parent_consistency(spark, pts):
     """cell_parent(cell_id(z), z, z-2) must equal cell_id(z-2) for
     every point — the H3/S2-style resolution ladder is pure bit math."""
-    df = pts.select(
-        tiles.cell_id(F.col("lon"), F.col("lat"), 10).alias("c10"),
-        tiles.cell_id(F.col("lon"), F.col("lat"), 8).alias("c8"),
-    ).withColumn("c8_derived", tiles.cell_parent(F.col("c10"), 10, 8))
+    df = pts.selectExpr(
+        f"{tiles.cell_id_sql('lon', 'lat', 10)} AS c10",
+        f"{tiles.cell_id_sql('lon', 'lat', 8)} AS c8",
+    ).withColumn("c8_derived", F.expr(tiles.cell_parent_sql("c10", 10, 8)))
     bad = df.where(F.col("c8") != F.col("c8_derived")).count()
     assert bad == 0
 
@@ -37,8 +37,8 @@ def test_morton_locality(spark, pts):
     spatial partitioner.  Check that the mean lon/lat span inside
     each of 64 contiguous cell-id range buckets is far below the
     global span."""
-    df = pts.select(
-        "lon", "lat", tiles.cell_id(F.col("lon"), F.col("lat"), 8).alias("cell")
+    df = pts.selectExpr(
+        "lon", "lat", f"{tiles.cell_id_sql('lon', 'lat', 8)} AS cell"
     )
     bucketed = df.withColumn("bucket", F.ntile(64).over(
         __import__("pyspark.sql.window", fromlist=["Window"]).Window.orderBy("cell")
@@ -57,7 +57,7 @@ def test_partition_pruning_on_tile_bucket(spark, pts, tmp_path):
     and return exactly the matching rows."""
     out = str(tmp_path / "pts_by_cell")
     with_cell = pts.withColumn(
-        "cell4", tiles.tile_id(F.col("lon"), F.col("lat"), 4)
+        "cell4", F.expr(tiles.tile_id_sql("lon", "lat", 4))
     )
     with_cell.write.mode("overwrite").partitionBy("cell4").parquet(out)
     back = spark.read.parquet(out)
@@ -74,28 +74,26 @@ def test_partition_pruning_on_tile_bucket(spark, pts, tmp_path):
 
 
 def test_cell_id_sql_twin_matches_column(spark, pts):
-    """The shared SQL texts (cell_id_sql / cell_parent_sql) equal the
-    Column implementations on Spark AND evaluate identically in
-    DuckDB."""
+    """The shared SQL texts (cell_id_sql / cell_parent_sql), run in
+    Spark, equal a bit-by-bit Morton interleave of the point's tile
+    (x, y) in Python, AND evaluate identically in DuckDB."""
     import duckdb
-    from pyspark.sql import functions as F
+    import numpy as np
 
-    from transformio_spark.functions import tiles
-
-    df = pts.select(
-        "lon", "lat",
-        tiles.cell_id(F.col("lon"), F.col("lat"), 12).alias("col12"),
-        F.expr(tiles.cell_id_sql("lon", "lat", 12)).alias("sql12"),
+    tx, ty = tiles.tile_xy_sql("lon", "lat", 12)
+    pdf = pts.selectExpr(
+        "lon", "lat", f"{tx} AS tx", f"{ty} AS ty",
+        f"{tiles.cell_id_sql('lon', 'lat', 12)} AS col12",
     ).withColumn(
-        "colp", tiles.cell_parent(F.col("col12"), 12, 8)
-    ).withColumn(
-        "sqlp", F.expr(tiles.cell_parent_sql("sql12", 12, 8))
-    )
-    bad = df.where(
-        (F.col("col12") != F.col("sql12")) | (F.col("colp") != F.col("sqlp"))
-    ).count()
-    assert bad == 0
-    pdf = df.select("lon", "lat", "col12", "colp").toPandas()
+        "colp", F.expr(tiles.cell_parent_sql("col12", 12, 8))
+    ).toPandas()
+    x, y = pdf.tx.to_numpy(np.int64), pdf.ty.to_numpy(np.int64)
+    morton = np.zeros(len(pdf), np.int64)
+    for i in range(12):
+        morton |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
+    assert (pdf.col12.to_numpy() == (12 << 58) + morton).all()
+    assert (pdf.colp.to_numpy() == (8 << 58) + (morton >> 8)).all()
+    pdf = pdf[["lon", "lat", "col12", "colp"]]
     con = duckdb.connect()
     con.register("p", pdf)
     n = con.sql(

@@ -1,6 +1,7 @@
-"""Chain->Column compiler (operators/compiler.py): compiled plans must
-be pure codegen for analytic legs, bit-identical to the pandas-UDF
-kernel route, and fall back to one UDF crossing per TIN/pyproj leg."""
+"""Chain->SQL-text compiler (operators/compiler.py): compiled plans
+must be pure codegen for analytic legs, bit-identical to the
+pandas-UDF kernel route, and fall back to one UDF crossing per
+TIN/pyproj leg."""
 
 from __future__ import annotations
 
@@ -32,11 +33,15 @@ def _analytic_chain():
                      kt.MapProjection("EPSG:3857", "EPSG:4326")])
 
 
+def _transformed(df, chain):
+    return compiler.with_transformed_columns(
+        df, chain, x="x", y="y", out_x="px", out_y="py"
+    )
+
+
 def test_compiled_chain_matches_udf_kernel_bitwise(spark, grid):
     chain = _analytic_chain()
-    compiled = grid.select(
-        *compiler.transform_columns(chain, F.col("x"), F.col("y"))
-    ).collect()
+    compiled = _transformed(grid, chain).select("px", "py").collect()
     via_udf = grid.select(
         udfs.transform_xy(json.dumps(chain.to_json()), F.col("x"), F.col("y")).alias("o")
     ).select("o.px", "o.py").collect()
@@ -50,7 +55,7 @@ def test_compiled_chain_matches_udf_kernel_bitwise(spark, grid):
 
 def test_compiled_chain_plan_has_no_python(spark, grid):
     chain = _analytic_chain()
-    df = grid.select(*compiler.transform_columns(chain, F.col("x"), F.col("y")))
+    df = _transformed(grid, chain).select("px", "py")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
@@ -60,15 +65,13 @@ def test_mixed_chain_pays_one_udf_crossing_per_tin_leg(spark, grid):
                        [0, 200, 0, 200], [0, 0, 300, 300])
     aff = kt.Affine(A=[[2.0, 0.0, 1.0], [0.0, 2.0, -1.0], [0.0, 0.0, 1.0]])
     chain = kt.Chain([aff, tin, aff])
-    assert compiler.compile_columns(chain) is None  # TIN leg blocks full compile
+    assert compiler.compile_sql(chain) is None  # TIN leg blocks full compile
     pts = grid.where((F.col("x") >= 0) & (F.col("x") <= 40)
                      & (F.col("y") >= 0) & (F.col("y") <= 40))
-    df = pts.select(*compiler.transform_columns(chain, F.col("x"), F.col("y")))
+    df = _transformed(pts, chain).select("x", "y", "px", "py")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1  # only the TIN leg
-    got = {(r[0], r[1]): (r[2], r[3]) for r in pts.select(
-        "x", "y", *compiler.transform_columns(chain, F.col("x"), F.col("y"))
-    ).collect()}
+    got = {(r[0], r[1]): (r[2], r[3]) for r in df.collect()}
     n_out = 0
     for (x, y), (px, py) in got.items():
         ex, ey = chain.predict(np.array([x]), np.array([y]))

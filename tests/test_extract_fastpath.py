@@ -79,12 +79,15 @@ def test_span_pair_generator_matches_filter_form(spark, sf_dir):
     raw_y0 = F.regexp_extract(ref0, rf",{_NUM}$", 1).cast("double")
     from transformio_spark.functions import geo
 
-    alon, alat = geo.affine_predict(a.tolist(), raw_x0, raw_y0)
-    lon0 = F.when(kind0 == "px", F.round(alon, 4)).otherwise(raw_x0)
-    lat0 = F.when(kind0 == "px", F.round(alat, 4)).otherwise(raw_y0)
+    alon, alat = geo.polynomial_predict_sql(a.tolist(), 1, "_x0", "_y0")
+    x0, y0 = F.col("_x0"), F.col("_y0")
+    lon0 = F.when(kind0 == "px", F.round(F.expr(alon), 4)).otherwise(x0)
+    lat0 = F.when(kind0 == "px", F.round(F.expr(alat), 4)).otherwise(y0)
     lon1 = F.regexp_extract(ref1, rf"^[a-z]+:{_NUM},", 1).cast("double")
     lat1 = F.regexp_extract(ref1, rf",{_NUM}$", 1).cast("double")
-    old = docs.where(F.size(media) >= 2).select(
+    old = docs.where(F.size(media) >= 2).withColumns(
+        {"_x0": raw_x0, "_y0": raw_y0}
+    ).select(
         "doc_id",
         "doc_num",
         lon0.alias("lon0"),

@@ -481,3 +481,82 @@ def test_component_queries_job_budget(spark, sf_dir, name, budget):
     qfn(spark, sf_dir).collect()
     _, jobs = _jobs_per_execution(spark, lambda: qfn(spark, sf_dir))
     assert jobs <= budget, (name, jobs)
+
+
+def _warm_build_py4j_calls(build) -> int:
+    """py4j commands one warm build sends to the JVM.  Object-release
+    commands are not counted: Python sends them when it collects
+    proxies, at times the build does not decide."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    build()  # warm-up: memoized fits and literal tables
+    gc.collect()
+    orig = cs.ClientServerConnection.send_command
+    n = [0]
+
+    def counted(self, command):
+        if not command.startswith("m\nd\n"):
+            n[0] += 1
+        return orig(self, command)
+
+    cs.ClientServerConnection.send_command = counted
+    try:
+        build()
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    return n[0]
+
+
+@pytest.mark.parametrize(
+    "name,budget",
+    [
+        ("region_join_bcast", 125), ("region_join_salted", 200),
+        ("pip_triangle", 140), ("mollweide_cells", 900),
+        ("embedding_ann_lsh", 900), ("embedding_neardup_pairs", 1000),
+    ],
+)
+def test_warm_build_py4j_budget(spark, sf_dir, name, budget):
+    """Join keys, refine predicates, projections and LSH buckets are
+    built as SQL text, one call per stage, not as chains of Column
+    calls (each one py4j round trip at every query build).  Counted
+    at sf0.001, local[4]: 98 / 157 / 111 / 744 / 743 / 802 calls;
+    built from Column calls they took 771 / 1,172 / 1,047 / 3,272 /
+    13,956 / 14,495."""
+    qfn = getattr(q, f"q_{name}")
+    calls = _warm_build_py4j_calls(lambda: qfn(spark, sf_dir))
+    assert calls <= budget, (name, calls)
+
+
+def test_kept_column_forms_match_their_sql_text(spark):
+    """The Column functions kept for callers that pass Columns
+    (tiles.lon_e4/lat_e4 for s2, tiles.tile_id for the benchmark's
+    tile sweep, geo.polynomial_predict and geo.haversine_km for
+    bench.py) plan the same expression as their SQL text."""
+    from transformio_spark.functions import geo, tiles
+
+    base = spark.range(8).selectExpr(
+        "cast(id as double) * 37.5 - 179.9 AS lon",
+        "cast(id as double) * 21.25 - 84.9 AS lat",
+    )
+    lon, lat = F.col("lon"), F.col("lat")
+
+    def same(cols, exprs) -> bool:
+        a = base.select(*cols)._jdf.queryExecution().optimizedPlan()
+        b = base.select(*map(F.expr, exprs))._jdf.queryExecution().optimizedPlan()
+        return a.sameResult(b)
+
+    assert same([tiles.lon_e4(lon), tiles.lat_e4(lat)],
+                [tiles.e4_sql("lon"), tiles.e4_sql("lat")])
+    for zoom in (4, 10):
+        assert same([tiles.tile_id(lon, lat, zoom)],
+                    [tiles.tile_id_sql("lon", "lat", zoom)])
+    for A, order in ((q.POLY2_A, 1), (q.POLY2_A, 2), (q.model_accuracy_gate()[0], 2)):
+        assert same(geo.polynomial_predict(A, order, lon, lat),
+                    geo.polynomial_predict_sql(A, order, "lon", "lat"))
+    assert same([geo.haversine_km(lon, lat, lat, lon)],
+                [geo.haversine_km_sql("lon", "lat", "lat", "lon")])
+    # the comparison can fail: a different zoom is a different plan
+    assert not same([tiles.tile_id(lon, lat, 4)],
+                    [tiles.tile_id_sql("lon", "lat", 5)])

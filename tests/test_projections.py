@@ -212,19 +212,28 @@ def test_norway_polar_stereographic_epsg5939():
 
 
 # ---------------------------------------------------------------------------
-# Column / SQL twins (Mollweide Newton fold)
+# Spark and DuckDB forms (Mollweide Newton solve)
 # ---------------------------------------------------------------------------
 
-def test_mollweide_column_twin_matches_kernel(spark):
-    from transformio_spark.functions import geo
-
-    kx, ky = pj.mollweide_forward(GRID_LON, GRID_LAT)
-    df = spark.createDataFrame(
+def _grid_df(spark):
+    return spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(GRID_LON, GRID_LAT)],
         "lon double, lat double",
     )
-    cx, cy = geo.mollweide_forward(F.col("lon"), F.col("lat"))
-    pdf = df.select(cx.alias("x"), cy.alias("y")).toPandas()
+
+
+def _mollweide_staged(df):
+    """df with x/y = the engine's staged Mollweide forward."""
+    from transformio_spark.operators import compiler
+
+    moll = kt.MapProjection("EPSG:4326", "ESRI:54009")
+    return compiler.with_transformed_columns(df, moll, out_x="x", out_y="y")
+
+
+def test_mollweide_column_twin_matches_kernel(spark):
+    """The engine's staged Spark SQL form matches the numpy kernel."""
+    kx, ky = pj.mollweide_forward(GRID_LON, GRID_LAT)
+    pdf = _mollweide_staged(_grid_df(spark)).select("x", "y").toPandas()
     # JVM libm ulp differences through 30 Newton steps: nanometer scale
     np.testing.assert_allclose(pdf.x.values, kx, atol=1e-6)
     np.testing.assert_allclose(pdf.y.values, ky, atol=1e-6)
@@ -232,20 +241,31 @@ def test_mollweide_column_twin_matches_kernel(spark):
 
 def test_mollweide_staged_bit_equal_to_fold(spark):
     """The chained-projection Newton unroll (compiler staged path)
-    must be BIT-equal to the F.aggregate fold it replaces — same op
-    order, same 30 steps, only the physical execution differs."""
-    from transformio_spark.functions import geo
+    must be BIT-equal to a Spark SQL ``aggregate`` fold of the same
+    step — same op order, same 30 steps, only the physical execution
+    differs.  The fold is written here as the reference."""
+    from transformio_spark.kernels.projections import MOLL_NEWTON_ITERS, R_SPHERE
 
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(GRID_LON, GRID_LAT)],
-        "lon double, lat double",
+    pi = "3.141592653589793e0"
+    c = f"({pi} * sin(radians(lat)))"
+    thp = (
+        f"aggregate(array_repeat(0.0e0, {MOLL_NEWTON_ITERS}), "
+        f"cast(radians(lat) as double), "
+        f"(acc, _) -> acc - (acc + sin(acc) - {c}) / (1.0e0 + cos(acc)))"
     )
-    fx, fy = geo.mollweide_forward(F.col("lon"), F.col("lat"))
-    fold = df.select("lon", "lat", fx.alias("x"), fy.alias("y")).toPandas()
-    sdf, sx, sy = geo.mollweide_forward_staged(
-        df, F.col("lon"), F.col("lat")
+    th = (
+        f"((CASE WHEN {c} = {pi} THEN {pi} WHEN {c} = -{pi} THEN -{pi} "
+        f"ELSE {thp} END) / 2.0e0)"
     )
-    staged = sdf.select("lon", "lat", sx.alias("x"), sy.alias("y")).toPandas()
+    xs = 2.0 * 2.0 ** 0.5 / 3.141592653589793 * R_SPHERE
+    ys = 2.0 ** 0.5 * R_SPHERE
+    df = _grid_df(spark)
+    fold = df.selectExpr(
+        "lon", "lat",
+        f"cast({xs!r} as double) * radians(lon) * cos({th}) AS x",
+        f"cast({ys!r} as double) * sin({th}) AS y",
+    ).toPandas()
+    staged = _mollweide_staged(df).select("lon", "lat", "x", "y").toPandas()
     assert (fold.x.values == staged.x.values).all()
     assert (fold.y.values == staged.y.values).all()
 
@@ -266,15 +286,13 @@ def test_mollweide_sql_twin_bit_equal_to_kernel():
 
 
 def test_mollweide_inverse_column_twin_roundtrip(spark):
+    """Staged forward then the inverse SQL text, in Spark."""
     from transformio_spark.functions import geo
 
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(GRID_LON, GRID_LAT)],
-        "lon double, lat double",
-    )
-    fx, fy = geo.mollweide_forward(F.col("lon"), F.col("lat"))
-    bx, by = geo.mollweide_inverse(fx, fy)
-    pdf = df.select(bx.alias("lon2"), by.alias("lat2")).toPandas()
+    bx, by = geo.mollweide_inverse_sql("x", "y")
+    pdf = _mollweide_staged(_grid_df(spark)).selectExpr(
+        f"{bx} AS lon2", f"{by} AS lat2"
+    ).toPandas()
     np.testing.assert_allclose(pdf.lon2.values, GRID_LON, atol=1e-9)
     np.testing.assert_allclose(pdf.lat2.values, GRID_LAT, atol=1e-9)
     # kernel parity
@@ -524,23 +542,18 @@ def test_proj4_ellipsoidal_merc_is_loud():
 
 
 def test_polar_stereographic_column_and_sql_twins(spark):
-    """Column + SQL twins of the ellipsoidal polar stereographic
-    agree with the numpy kernel (3031 south aspect)."""
+    """The ellipsoidal polar stereographic SQL text, run in Spark and
+    in DuckDB, agrees with the numpy kernel (3031 south aspect)."""
     import duckdb
     import pandas as pd
 
     from transformio_spark.functions import geo
 
     kx, ky = pj.polar_stereographic_forward(GRID_LON, GRID_LAT, lat_ts=-71.0)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(GRID_LON, GRID_LAT)],
-        "lon double, lat double",
-    )
-    cx, cy = geo.polar_stereographic_forward(F.col("lon"), F.col("lat"), -71.0)
-    pdf = df.select(cx.alias("x"), cy.alias("y")).toPandas()
+    sx, sy = geo.polar_stereographic_forward_sql("lon", "lat", -71.0)
+    pdf = _grid_df(spark).selectExpr(f"{sx} AS x", f"{sy} AS y").toPandas()
     np.testing.assert_allclose(pdf.x.values, kx, rtol=1e-12)
     np.testing.assert_allclose(pdf.y.values, ky, rtol=1e-12)
-    sx, sy = geo.polar_stereographic_forward_sql("lon", "lat", -71.0)
     con = duckdb.connect()
     con.register("pts", pd.DataFrame({"lon": GRID_LON, "lat": GRID_LAT}))
     d = con.sql(f"select {sx} as x, {sy} as y from pts").df()
@@ -563,19 +576,15 @@ def test_polar_chain_compiles_to_pure_codegen(spark):
 
 
 def test_robinson_column_and_sql_twins(spark):
-    """Column + SQL spline twins agree with the numpy kernel."""
+    """The Spark and DuckDB spline texts agree with the numpy kernel."""
     import duckdb
     import pandas as pd
 
     from transformio_spark.functions import geo
 
     kx, ky = pj.robinson_forward(GRID_LON, GRID_LAT)
-    df = spark.createDataFrame(
-        [(float(a), float(b)) for a, b in zip(GRID_LON, GRID_LAT)],
-        "lon double, lat double",
-    )
-    cx, cy = geo.robinson_forward(F.col("lon"), F.col("lat"))
-    pdf = df.select(cx.alias("x"), cy.alias("y")).toPandas()
+    cx, cy = geo.robinson_forward_spark_sql("lon", "lat")
+    pdf = _grid_df(spark).selectExpr(f"{cx} AS x", f"{cy} AS y").toPandas()
     np.testing.assert_allclose(pdf.x.values, kx, atol=1e-6)
     np.testing.assert_allclose(pdf.y.values, ky, atol=1e-6)
     sx, sy = geo.robinson_forward_sql("lon", "lat")

@@ -142,21 +142,19 @@ def test_salted_equals_unsalted(spark, sf_dir):
 
 
 def test_mercator_column_twin_matches_udf_kernel(spark):
-    """functions/geo.mercator_forward (codegen path) must equal the
-    Chain(MapProjection) pandas-UDF kernel path to the last ulp-ish
-    (both are float64 spherical-Mercator; numpy vs JVM Math may differ
-    ~1 ulp, assert < 1e-6 m)."""
+    """functions/geo.mercator_forward_sql run in Spark (codegen path)
+    must equal the Chain(MapProjection) pandas-UDF kernel path to the
+    last ulp-ish (both are float64 spherical-Mercator; numpy vs JVM
+    Math may differ ~1 ulp, assert < 1e-6 m)."""
     import json as _json
-
-    from pyspark.sql import functions as F
 
     from transformio_spark.functions import geo
 
     rows = [(float(lon), float(lat)) for lon in range(-179, 180, 37)
             for lat in range(-84, 85, 23)]
     df = spark.createDataFrame(rows, "lon double, lat double")
-    mx, my = geo.mercator_forward(F.col("lon"), F.col("lat"))
-    col_path = df.select("lon", "lat", mx.alias("cx"), my.alias("cy"))
+    mx, my = geo.mercator_forward_sql("lon", "lat")
+    col_path = df.selectExpr("lon", "lat", f"{mx} AS cx", f"{my} AS cy")
     model = k.Chain([k.MapProjection("EPSG:4326", "EPSG:3857")])
     udf_path = udfs.with_transformed(
         col_path, _json.dumps(model.to_json()),
@@ -215,19 +213,17 @@ def test_ray_cast_matches_numpy_reference(spark):
 
 
 def test_projective_column_twin_matches_kernel(spark):
-    """functions/geo.projective_predict must equal
+    """functions/geo.projective_predict_sql run in Spark must equal
     kernels.Projective.predict on the same H (both are the standard
     homography division; double-exact on identical expression trees)."""
-    from pyspark.sql import functions as F
-
     from transformio_spark.functions import geo
     from transformio_spark.plans.queries import PROJECTIVE_H
 
     rows = [(float(lon), float(lat)) for lon in range(-179, 180, 41)
             for lat in range(-84, 85, 29)]
     df = spark.createDataFrame(rows, "lon double, lat double")
-    px, py = geo.projective_predict(PROJECTIVE_H, F.col("lon"), F.col("lat"))
-    got = df.select("lon", "lat", px.alias("px"), py.alias("py")).collect()
+    px, py = geo.projective_predict_sql(PROJECTIVE_H, "lon", "lat")
+    got = df.selectExpr("lon", "lat", f"{px} AS px", f"{py} AS py").collect()
 
     trans = k.Projective(H=np.array(PROJECTIVE_H))
     ex, ey = trans.predict(
@@ -493,14 +489,14 @@ def _bisection_geohash(lon, lat, precision):
 
 
 def test_geohash_three_way_and_published_vectors(spark):
-    """Column builder == SQL-text twin == iterative bisection on
+    """The geohash SQL text run in Spark == the same text run in
+    DuckDB == iterative bisection (the independent implementation) on
     random + boundary points at every precision parity, and the
     published test vectors hold."""
     import duckdb
     import pandas as pd
-    from pyspark.sql import functions as F
 
-    from transformio_spark.functions.tiles import geohash, geohash_sql
+    from transformio_spark.functions.tiles import geohash_sql
 
     rng = np.random.default_rng(23)
     pts = pd.DataFrame({
@@ -518,20 +514,20 @@ def test_geohash_three_way_and_published_vectors(spark):
     con.register("t", pts)
     for prec in (1, 4, 5, 6):
         s = (
-            sdf.select(geohash(F.col("lon"), F.col("lat"), prec).alias("g"))
+            sdf.selectExpr(f"{geohash_sql('lon', 'lat', prec)} AS g")
             .toPandas()["g"].tolist()
         )
         d = con.sql(
             f"SELECT {geohash_sql('lon', 'lat', prec)} g FROM t"
         ).df()["g"].tolist()
         w = [_bisection_geohash(a, b, prec) for a, b in zip(pts.lon, pts.lat)]
-        assert s == w, f"Column path diverges at precision {prec}"
-        assert d == w, f"SQL path diverges at precision {prec}"
+        assert s == w, f"Spark diverges at precision {prec}"
+        assert d == w, f"DuckDB diverges at precision {prec}"
     # published vectors (geohash.org / Niemeyer): ezs42, u4pruy prefix
     vec = pd.DataFrame({"lon": [-5.6, 10.40744], "lat": [42.6, 57.64911]})
     got = (
         spark.createDataFrame(vec)
-        .select(geohash(F.col("lon"), F.col("lat"), 5).alias("g"))
+        .selectExpr(f"{geohash_sql('lon', 'lat', 5)} AS g")
         .toPandas()["g"].tolist()
     )
     assert got == ["ezs42", "u4pru"]
@@ -540,17 +536,15 @@ def test_geohash_three_way_and_published_vectors(spark):
 def test_geohash_val_order_matches_string_order(spark):
     """Round 6: q_geohash_counts groups/ranks on the geohash INTEGER
     and renders only the surviving rows.  That is exact because (a)
-    geohash == geohash_from_val(geohash_val) by construction, and (b)
-    the base-32 alphabet is ASCII-ascending, so fixed-precision
-    geohash strings order exactly like their integers — both pinned
-    here, plus a corpus-scale cross-check of the two query forms."""
-    from pyspark.sql import functions as F
-
+    rendering a materialized geohash_val_sql column gives the geohash
+    string, and (b) the base-32 alphabet is ASCII-ascending, so
+    fixed-precision geohash strings order exactly like their
+    integers — both pinned here."""
     from transformio_spark.functions.tiles import (
         GEOHASH_B32,
-        geohash,
-        geohash_from_val,
-        geohash_val,
+        geohash_from_val_sql,
+        geohash_sql,
+        geohash_val_sql,
     )
 
     # (b) alphabet monotonicity — the load-bearing ordering argument
@@ -564,13 +558,10 @@ def test_geohash_val_order_matches_string_order(spark):
         "lat": rng.uniform(-90, 89.9999, 500),
     })
     sdf = spark.createDataFrame(pts)
-    both = sdf.select(
-        geohash(F.col("lon"), F.col("lat"), 5).alias("g"),
-        geohash_from_val(
-            geohash_val(F.col("lon"), F.col("lat"), 5), 5
-        ).alias("g2"),
-        geohash_val(F.col("lon"), F.col("lat"), 5).alias("v"),
-    ).toPandas()
+    both = sdf.selectExpr(
+        f"{geohash_sql('lon', 'lat', 5)} AS g",
+        f"{geohash_val_sql('lon', 'lat', 5)} AS v",
+    ).selectExpr("g", f"{geohash_from_val_sql('v', 5)} AS g2", "v").toPandas()
     assert (both.g == both.g2).all()
     order_by_str = both.sort_values("g").index.tolist()
     order_by_val = both.sort_values("v").index.tolist()

@@ -1,16 +1,25 @@
-"""Geometric Column-expression kernels (JVM side, whole-stage codegen).
+"""Geometric expression kernels (JVM side, whole-stage codegen).
 
 The reference's transform kernels are whole-array numpy functions
 (reference transforms.py:341-385, accuracy.py:9-41); on Spark the
-*preferred* physical form for polynomial transforms and haversine is a
-pure Column expression — Catalyst folds it into WholeStageCodegen with
-zero Python crossings.  The pandas-UDF twins (operators/udfs.py) exist
-for the models that genuinely need numpy (TIN loops, pyproj) and for
-parity testing; both paths call identical math.
+*preferred* physical form for polynomial transforms, projections and
+haversine is a pure expression — Catalyst folds it into
+WholeStageCodegen with zero Python crossings.  The pandas-UDF twins
+(operators/udfs.py) exist for the models that genuinely need numpy
+(TIN loops, pyproj) and for parity testing; both paths call
+identical math.
 
-Each builder has a ``*_sql`` twin emitting the same arithmetic as SQL
-text — used to build the DuckDB oracle queries so the correctness gate
-compares semantically identical plans.
+Every formula is written once, as SQL text (``*_sql``, or a
+``*_stages`` list of named SQL stages): the engine applies it with
+one ``F.expr`` per stage and the DuckDB oracle runs the same text, so
+the correctness gate compares semantically identical plans (DESIGN.md
+§3, one expression form).  Where the two dialects need different
+text, the oracle's builder keeps its DuckDB form and the engine gets
+a Spark one (``mollweide_forward_stages``,
+``robinson_forward_spark_sql``).  Two Column functions remain for the
+frozen headline benchmark (bench.py), which passes Columns:
+:func:`polynomial_predict` and :func:`haversine_km`; each is pinned
+plan-equal to its ``*_sql`` twin in tests/test_plan_quality.py.
 """
 
 from __future__ import annotations
@@ -20,14 +29,6 @@ from pyspark.sql import functions as F
 
 # PARITY: R=6367 km, reference accuracy.py:35
 EARTH_RADIUS_KM = 6367.0
-
-
-def affine_predict(A, x: Column, y: Column) -> tuple[Column, Column]:
-    """Forward affine as Column arithmetic: the first two rows of the
-    3x3 matrix A (reference transforms.py:492-509 semantics)."""
-    px = F.lit(float(A[0][0])) * x + F.lit(float(A[0][1])) * y + F.lit(float(A[0][2]))
-    py = F.lit(float(A[1][0])) * x + F.lit(float(A[1][1])) * y + F.lit(float(A[1][2]))
-    return px, py
 
 
 def _poly_terms_cols(order: int, x: Column, y: Column) -> list[Column]:
@@ -44,7 +45,8 @@ def _poly_terms_cols(order: int, x: Column, y: Column) -> list[Column]:
 
 def polynomial_predict(A, order: int, x: Column, y: Column) -> tuple[Column, Column]:
     """Order 1/2/3 polynomial transform as Column arithmetic; term
-    order matches reference transforms.py:341-385."""
+    order matches reference transforms.py:341-385.  Column form of
+    :func:`polynomial_predict_sql`, kept for bench.py."""
     terms = _poly_terms_cols(order, x, y)
     px = None
     py = None
@@ -58,7 +60,8 @@ def polynomial_predict(A, order: int, x: Column, y: Column) -> tuple[Column, Col
 
 def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
     """Great-circle distance, identical formulation to the reference
-    (accuracy.py:22-36): arcsin form, R=6367 km."""
+    (accuracy.py:22-36): arcsin form, R=6367 km.  Column form of
+    :func:`haversine_km_sql`, kept for bench.py."""
     rlon1, rlat1 = F.radians(lon1), F.radians(lat1)
     rlon2, rlat2 = F.radians(lon2), F.radians(lat2)
     a = (
@@ -68,8 +71,8 @@ def haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Colu
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def euclidean(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:
-    return F.sqrt(F.pow(x2 - x1, 2) + F.pow(y2 - y1, 2))
+def euclidean_sql(x1: str, y1: str, x2: str, y2: str) -> str:
+    return f"sqrt(pow({x2} - {x1}, 2) + pow({y2} - {y1}, 2))"
 
 
 def gc_interpolate_sql(
@@ -177,199 +180,8 @@ def bearing_deg_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
     return f"((degrees(atan2({y}, {x})) + 360.0e0) % 360.0e0)"
 
 
-def projective_predict(H, x: Column, y: Column) -> tuple[Column, Column]:
-    """Homography (kernels.transforms.Projective.predict semantics) as
-    pure Column arithmetic: (a·x+b·y+c)/(g·x+h·y+i), two rows over the
-    shared denominator."""
-    den = F.lit(float(H[2][0])) * x + F.lit(float(H[2][1])) * y + F.lit(float(H[2][2]))
-    px = (
-        F.lit(float(H[0][0])) * x + F.lit(float(H[0][1])) * y + F.lit(float(H[0][2]))
-    ) / den
-    py = (
-        F.lit(float(H[1][0])) * x + F.lit(float(H[1][1])) * y + F.lit(float(H[1][2]))
-    ) / den
-    return px, py
-
-
-# WGS84 semi-major axis — the EPSG:3857 sphere radius
-WEBMERC_R = 6378137.0
-
-
-def mercator_forward(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """EPSG:4326 -> EPSG:3857 as pure Column arithmetic — the codegen
-    twin of kernels.transforms._SphericalMercator(forward=True)
-    (public spherical web-Mercator formulas)."""
-    x = F.lit(WEBMERC_R) * F.radians(lon)
-    y = F.lit(WEBMERC_R) * F.log(
-        F.tan(F.lit(3.141592653589793 / 4.0) + F.radians(lat) / 2)
-    )
-    return x, y
-
-
-def mercator_inverse(x: Column, y: Column) -> tuple[Column, Column]:
-    """EPSG:3857 -> EPSG:4326 as pure Column arithmetic."""
-    lon = F.degrees(x / F.lit(WEBMERC_R))
-    lat = F.degrees(
-        F.lit(2.0) * F.atan(F.exp(y / F.lit(WEBMERC_R)))
-        - F.lit(3.141592653589793 / 2.0)
-    )
-    return lon, lat
-
-
-def mollweide_forward(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """lon/lat deg -> Mollweide (ESRI:54009) meters as pure Column
-    arithmetic — the codegen twin of
-    kernels.projections.mollweide_forward.  The Newton solve for
-    theta' runs as an F.aggregate fold over MOLL_NEWTON_ITERS dummy
-    elements, so the expression tree is LINEAR in the iteration count
-    (a naive unroll would be 3^N: the accumulator appears three times
-    per step) and the op sequence matches the numpy kernel exactly."""
-    from ..kernels.projections import MOLL_NEWTON_ITERS, R_SPHERE
-
-    pi = 3.141592653589793
-    lam = F.radians(lon)
-    phi = F.radians(lat)
-    c = F.lit(pi) * F.sin(phi)
-    thp = F.aggregate(
-        F.array_repeat(F.lit(0.0), MOLL_NEWTON_ITERS),
-        phi.cast("double"),
-        lambda acc, _: acc - (acc + F.sin(acc) - c) / (F.lit(1.0) + F.cos(acc)),
-    )
-    # exact-pole special case — see kernels MOLL_NEWTON_ITERS note
-    thp = (
-        F.when(c == F.lit(pi), F.lit(pi))
-        .when(c == F.lit(-pi), F.lit(-pi))
-        .otherwise(thp)
-    )
-    th = thp / F.lit(2.0)
-    x = F.lit(2.0 * 2.0 ** 0.5 / pi * R_SPHERE) * lam * F.cos(th)
-    y = F.lit(2.0 ** 0.5 * R_SPHERE) * F.sin(th)
-    return x, y
-
-
-def mollweide_forward_staged(df, lon: Column, lat: Column, prefix: str = "_mw_"):
-    """df-level twin of :func:`mollweide_forward` with the Newton loop
-    UNROLLED into chained projections instead of the interpreted
-    F.aggregate fold: each step rewrites one materialized accumulator
-    column, so every reference inside a step is a cheap attribute (the
-    functions/s2.with_s2_cell staging pattern — CollapseProject keeps
-    the split because the accumulator is non-cheap and consumed three
-    times per step) and the whole solve runs in whole-stage codegen.
-    Identical op order to the fold and the numpy kernel, so values are
-    bit-equal (pinned in tests/test_projections.py).  Returns
-    (df_with_temp_columns, x_col, y_col); the caller drops ``prefix``
-    columns after projecting its outputs."""
-    from ..kernels.projections import MOLL_NEWTON_ITERS, R_SPHERE
-
-    pi = 3.141592653589793
-    acc_name, lam, cc = prefix + "acc", prefix + "lam", prefix + "c"
-    df = df.withColumns(
-        {
-            lam: F.radians(lon),
-            cc: F.lit(pi) * F.sin(F.radians(lat)),
-            acc_name: F.radians(lat).cast("double"),
-        }
-    )
-    for _ in range(MOLL_NEWTON_ITERS):
-        a = F.col(acc_name)
-        df = df.withColumn(
-            acc_name,
-            a - (a + F.sin(a) - F.col(cc)) / (F.lit(1.0) + F.cos(a)),
-        )
-    thp = (
-        F.when(F.col(cc) == F.lit(pi), F.lit(pi))
-        .when(F.col(cc) == F.lit(-pi), F.lit(-pi))
-        .otherwise(F.col(acc_name))
-    )
-    th = thp / F.lit(2.0)
-    x = F.lit(2.0 * 2.0 ** 0.5 / pi * R_SPHERE) * F.col(lam) * F.cos(th)
-    y = F.lit(2.0 ** 0.5 * R_SPHERE) * F.sin(th)
-    return df, x, y
-
-
-def mollweide_inverse(x: Column, y: Column) -> tuple[Column, Column]:
-    """Mollweide meters -> lon/lat deg (closed form, no iteration) —
-    codegen twin of kernels.projections.mollweide_inverse."""
-    from ..kernels.projections import R_SPHERE
-
-    pi = 3.141592653589793
-    sqrt2_r = F.lit(2.0 ** 0.5 * R_SPHERE)
-    th = F.asin(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), y / sqrt2_r)))
-    lat = F.degrees(
-        F.asin(
-            F.greatest(
-                F.lit(-1.0),
-                F.least(F.lit(1.0), (F.lit(2.0) * th + F.sin(F.lit(2.0) * th)) / F.lit(pi)),
-            )
-        )
-    )
-    lon = F.degrees(F.lit(pi) * x / (F.lit(2.0) * sqrt2_r * F.cos(th)))
-    return lon, lat
-
-
-def polar_stereographic_forward(
-    lon: Column, lat: Column, lat_ts: float
-) -> tuple[Column, Column]:
-    """Ellipsoidal polar stereographic variant B (EPSG GN7-2 §3.2.4)
-    as pure Column arithmetic — codegen twin of
-    kernels.projections.polar_stereographic_forward with lon0=fe=fn=0.
-    North aspect when lat_ts > 0 (EPSG:3995), south when < 0
-    (EPSG:3031).  The projection constants (e, k0, the big radical)
-    are driver-side literals."""
-    from ..kernels.projections import A_WGS84, _ps_constants
-
-    e, big, k0 = (float(v) for v in _ps_constants(lat_ts))
-    north = lat_ts > 0
-    lam = F.radians(lon)
-    phi = F.radians(lat) if north else -F.radians(lat)
-    esin = F.lit(e) * F.sin(phi)
-    t = F.tan(F.lit(3.141592653589793 / 4.0) - phi / 2) * F.pow(
-        (F.lit(1.0) + esin) / (F.lit(1.0) - esin), F.lit(e / 2.0)
-    )
-    rho = F.lit(2.0) * F.lit(A_WGS84) * F.lit(k0) * t / F.lit(big)
-    E = rho * F.sin(lam)
-    N = -rho * F.cos(lam) if north else rho * F.cos(lam)
-    return E, N
-
-
-def robinson_forward(lon: Column, lat: Column) -> tuple[Column, Column]:
-    """Robinson (ESRI:54030) as pure Column arithmetic — codegen twin
-    of kernels.projections.robinson_forward.  The natural-cubic-spline
-    segment lookup is an element_at into literal coefficient arrays
-    (19 doubles each), so the tree stays small; arithmetic replicates
-    the kernel's _spline_eval op order exactly."""
-    from ..kernels.projections import (
-        _ROBINSON_MX,
-        _ROBINSON_MY,
-        _ROBINSON_X,
-        _ROBINSON_XSCALE,
-        _ROBINSON_Y,
-        _ROBINSON_YSCALE,
-        R_SPHERE,
-    )
-
-    aphi = F.least(F.greatest(F.abs(lat.cast("double")), F.lit(0.0)), F.lit(90.0))
-    i = F.least(F.floor(aphi / F.lit(5.0)).cast("int"), F.lit(17))
-    a = ((i + 1).cast("double") * F.lit(5.0) - aphi) / F.lit(5.0)
-    b = (aphi - i.cast("double") * F.lit(5.0)) / F.lit(5.0)
-
-    def spline(table, M):
-        ys = F.array(*[F.lit(float(v)) for v in table])
-        ms = F.array(*[F.lit(float(v)) for v in M])
-        yi, yi1 = F.element_at(ys, i + 1), F.element_at(ys, i + 2)
-        mi, mi1 = F.element_at(ms, i + 1), F.element_at(ms, i + 2)
-        cube = (a * a * a - a) * mi + (b * b * b - b) * mi1
-        return yi * a + b * yi1 + cube * F.lit(5.0) * F.lit(5.0) / F.lit(6.0)
-
-    X = spline(_ROBINSON_X, _ROBINSON_MX)
-    Y = spline(_ROBINSON_Y, _ROBINSON_MY)
-    x = F.lit(_ROBINSON_XSCALE * R_SPHERE) * X * F.radians(lon)
-    y = F.lit(_ROBINSON_YSCALE * R_SPHERE) * Y * F.signum(lat.cast("double"))
-    return x, y
-
-
 # ---------------------------------------------------------------------------
-# SQL text twins (for the DuckDB oracle)
+# Transforms and projections
 # ---------------------------------------------------------------------------
 
 def _poly_terms_sql(order: int, x: str, y: str) -> list[str]:
@@ -387,6 +199,9 @@ def _poly_terms_sql(order: int, x: str, y: str) -> list[str]:
 
 
 def projective_predict_sql(H, x: str, y: str) -> tuple[str, str]:
+    """Homography (kernels.transforms.Projective.predict semantics):
+    (a·x+b·y+c)/(g·x+h·y+i), two rows over the shared denominator."""
+
     def lit(v):
         return dlit_sql(v)
 
@@ -396,18 +211,38 @@ def projective_predict_sql(H, x: str, y: str) -> tuple[str, str]:
     return px, py
 
 
+# WGS84 semi-major axis — the EPSG:3857 sphere radius
+WEBMERC_R = 6378137.0
+
+
 def mercator_forward_sql(lon: str, lat: str) -> tuple[str, str]:
-    """SQL twin of mercator_forward — identical expression tree (same
-    double literals, so Spark and DuckDB evaluate the same fp ops)."""
+    """EPSG:4326 -> EPSG:3857 — the twin of
+    kernels.transforms._SphericalMercator(forward=True) (public
+    spherical web-Mercator formulas); the same double literals, so
+    Spark and DuckDB evaluate the same fp ops."""
     x = f"(6378137.0e0 * radians({lon}))"
     y = f"(6378137.0e0 * ln(tan(0.7853981633974483e0 + radians({lat}) / 2)))"
     return x, y
 
 
+def mercator_inverse_sql(x: str, y: str) -> tuple[str, str]:
+    """EPSG:3857 -> EPSG:4326."""
+    r = f"{WEBMERC_R!r}e0"
+    lon = f"degrees({x} / {r})"
+    lat = (
+        f"degrees(2.0e0 * atan(exp({y} / {r})) "
+        f"- {3.141592653589793 / 2.0!r}e0)"
+    )
+    return lon, lat
+
+
 def mollweide_forward_sql(lon: str, lat: str) -> tuple[str, str]:
-    """SQL twin of mollweide_forward: the same fixed-count Newton fold
-    via DuckDB list_reduce (first list element is the initial
-    accumulator, so the list is [phi, 0 x N] for N iterations)."""
+    """lon/lat deg -> Mollweide (ESRI:54009) meters in DuckDB text —
+    the oracle's form of :func:`mollweide_forward_stages`: the same
+    fixed-count Newton solve as a list_reduce fold (first list element
+    is the initial accumulator, so the list is [phi, 0 x N] for N
+    iterations) with the op sequence of
+    kernels.projections.mollweide_forward."""
     from ..kernels.projections import MOLL_NEWTON_ITERS, R_SPHERE
 
     zeros = ", ".join(["0e0"] * MOLL_NEWTON_ITERS)
@@ -428,11 +263,68 @@ def mollweide_forward_sql(lon: str, lat: str) -> tuple[str, str]:
     return x, y
 
 
+def mollweide_forward_stages(lon: str, lat: str, prefix: str):
+    """lon/lat deg -> Mollweide (ESRI:54009) meters in Spark text,
+    with the Newton solve for theta' UNROLLED into projections: each
+    step rewrites one materialized accumulator column, so every
+    reference inside a step is a cheap attribute (CollapseProject
+    keeps the split because the accumulator is non-cheap and consumed
+    three times per step) and the whole solve runs in whole-stage
+    codegen — a lambda fold would run interpreted, and a textual
+    unroll would grow as 3^N.  Op order is that of the numpy kernel
+    and of the oracle's fold (:func:`mollweide_forward_sql`), so
+    values are bit-equal (pinned in tests/test_projections.py).
+    Returns (stages, x_expr, y_expr): ``stages`` is a list of
+    {column: sql} projections to apply in order, one ``withColumns``
+    each, over ``prefix``-named columns that the caller drops after
+    projecting its outputs."""
+    from ..kernels.projections import MOLL_NEWTON_ITERS, R_SPHERE
+
+    pi = "3.141592653589793e0"
+    lam, c, acc = prefix + "lam", prefix + "c", prefix + "acc"
+    step = f"{acc} - ({acc} + sin({acc}) - {c}) / (1.0e0 + cos({acc}))"
+    stages = [
+        {
+            lam: f"radians({lon})",
+            c: f"{pi} * sin(radians({lat}))",
+            acc: f"cast(radians({lat}) as double)",
+        }
+    ] + [{acc: step}] * MOLL_NEWTON_ITERS
+    # exact-pole special case — see kernels MOLL_NEWTON_ITERS note
+    th = (
+        f"((CASE WHEN {c} = {pi} THEN {pi} WHEN {c} = -{pi} THEN -{pi} "
+        f"ELSE {acc} END) / 2.0e0)"
+    )
+    xs = dlit_sql(2.0 * 2.0 ** 0.5 / 3.141592653589793 * R_SPHERE)
+    x = f"({xs} * {lam} * cos({th}))"
+    y = f"({dlit_sql(2.0 ** 0.5 * R_SPHERE)} * sin({th}))"
+    return stages, x, y
+
+
+def mollweide_inverse_sql(x: str, y: str) -> tuple[str, str]:
+    """Mollweide meters -> lon/lat deg (closed form, no iteration) —
+    the twin of kernels.projections.mollweide_inverse."""
+    from ..kernels.projections import R_SPHERE
+
+    pi = "3.141592653589793e0"
+    sqrt2_r = dlit_sql(2.0 ** 0.5 * R_SPHERE)
+    th = f"asin(greatest(-1.0e0, least(1.0e0, {y} / {sqrt2_r})))"
+    lat = (
+        f"degrees(asin(greatest(-1.0e0, least(1.0e0, "
+        f"(2.0e0 * {th} + sin(2.0e0 * {th})) / {pi}))))"
+    )
+    lon = f"degrees({pi} * {x} / (2.0e0 * {sqrt2_r} * cos({th})))"
+    return lon, lat
+
+
 def polar_stereographic_forward_sql(
     lon: str, lat: str, lat_ts: float
 ) -> tuple[str, str]:
-    """SQL twin of polar_stereographic_forward — identical constants
-    and op order."""
+    """Ellipsoidal polar stereographic variant B (EPSG GN7-2 §3.2.4) —
+    the twin of kernels.projections.polar_stereographic_forward with
+    lon0=fe=fn=0.  North aspect when lat_ts > 0 (EPSG:3995), south
+    when < 0 (EPSG:3031).  The projection constants (e, k0, the big
+    radical) are driver-side literals."""
     from ..kernels.projections import A_WGS84, _ps_constants
 
     e, big, k0 = (float(v) for v in _ps_constants(lat_ts))
@@ -449,9 +341,14 @@ def polar_stereographic_forward_sql(
     return E, N
 
 
-def robinson_forward_sql(lon: str, lat: str) -> tuple[str, str]:
-    """SQL twin of robinson_forward — same literal spline arrays via
-    1-indexed list_extract, same op order."""
+def _robinson_sql(lon: str, lat: str, array, at, sign: str) -> tuple[str, str]:
+    """Robinson (ESRI:54030), the twin of
+    kernels.projections.robinson_forward: the natural-cubic-spline
+    segment lookup indexes literal coefficient arrays (19 doubles
+    each), so the tree stays small; arithmetic replicates the
+    kernel's _spline_eval op order exactly.  ``array(items)`` writes
+    a literal array, ``at(arr, k)`` its 1-based element k, and
+    ``sign`` names the dialect's sign function."""
     from ..kernels.projections import (
         _ROBINSON_MX,
         _ROBINSON_MY,
@@ -468,18 +365,36 @@ def robinson_forward_sql(lon: str, lat: str) -> tuple[str, str]:
     b = f"(({aphi} - cast(({i}) as double) * 5.0e0) / 5.0e0)"
 
     def spline(table, M):
-        ys = "[" + ", ".join(dlit_sql(v) for v in table) + "]"
-        ms = "[" + ", ".join(dlit_sql(v) for v in M) + "]"
-        yi, yi1 = f"({ys}[({i}) + 1])", f"({ys}[({i}) + 2])"
-        mi, mi1 = f"({ms}[({i}) + 1])", f"({ms}[({i}) + 2])"
+        ys = array(", ".join(dlit_sql(v) for v in table))
+        ms = array(", ".join(dlit_sql(v) for v in M))
+        yi, yi1 = at(ys, f"({i}) + 1"), at(ys, f"({i}) + 2")
+        mi, mi1 = at(ms, f"({i}) + 1"), at(ms, f"({i}) + 2")
         cube = f"(({a}*{a}*{a} - {a}) * {mi} + ({b}*{b}*{b} - {b}) * {mi1})"
         return f"({yi} * {a} + {b} * {yi1} + {cube} * 5.0e0 * 5.0e0 / 6.0e0)"
 
     X = spline(_ROBINSON_X, _ROBINSON_MX)
     Y = spline(_ROBINSON_Y, _ROBINSON_MY)
     x = f"({dlit_sql(_ROBINSON_XSCALE * R_SPHERE)} * {X} * radians({lon}))"
-    y = f"({dlit_sql(_ROBINSON_YSCALE * R_SPHERE)} * {Y} * sign(cast({lat} as double)))"
+    y = f"({dlit_sql(_ROBINSON_YSCALE * R_SPHERE)} * {Y} * {sign}(cast({lat} as double)))"
     return x, y
+
+
+def robinson_forward_sql(lon: str, lat: str) -> tuple[str, str]:
+    """Robinson in DuckDB text (the oracle): ``[...]`` list literals
+    with 1-indexed ``list[k]`` lookup."""
+    return _robinson_sql(
+        lon, lat, lambda items: f"[{items}]", lambda arr, k: f"({arr}[{k}])",
+        "sign",
+    )
+
+
+def robinson_forward_spark_sql(lon: str, lat: str) -> tuple[str, str]:
+    """Robinson in Spark text (the engine): ``array(...)`` literals
+    with 1-based ``element_at`` lookup."""
+    return _robinson_sql(
+        lon, lat, lambda items: f"array({items})",
+        lambda arr, k: f"element_at({arr}, {k})", "signum",
+    )
 
 
 def dlit_sql(c: float) -> str:

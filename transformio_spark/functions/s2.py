@@ -25,7 +25,7 @@ downstream operators exploit:
 - **hierarchical prefix nesting**: the level-k ancestor is
   ``d >> 2*(level-k)`` (Hilbert positions nest — pinned by
   tests/test_s2_hex.py against a brute sweep), so rollups and
-  parent re-keying are pure bit arithmetic like tiles.cell_parent;
+  parent re-keying are pure bit arithmetic like tiles.cell_parent_sql;
 - **spatial locality**: consecutive ids are unit-step adjacent cells,
   so ``repartitionByRange`` on the id is a spatial partitioner with
   strictly better locality than the Morton id (no Z-order jumps);

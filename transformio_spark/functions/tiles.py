@@ -10,6 +10,14 @@ cell id a spatial-locality partitioner.  The encoder is a pluggable
 seam: an H3 backend can be dropped in where available; everything
 downstream only sees ``cell_id: long``.
 
+Every formula is written once, as SQL text (``*_sql``): the engine
+applies it with ``F.expr`` and the DuckDB oracle runs the same text
+(DESIGN.md §3, one expression form).  Three Column functions remain
+for callers that hand in Columns: ``lon_e4``/``lat_e4`` (the S2 cell
+algorithm in functions/s2.py) and ``tile_id`` (the benchmark's tile
+sweep); each is pinned plan-equal to its ``*_sql`` twin in
+tests/test_plan_quality.py.
+
 Numeric-safety contract (cross-engine exactness): coordinates are
 snapped to the 1e-4-degree payload lattice → scaled to exact integers
 → tiled with integer-exact arithmetic, so the same formula evaluated
@@ -27,97 +35,56 @@ LAT_SPAN_E4 = 1_700_000  # 170 deg (domain [-85, 85))
 
 
 def lon_e4(lon: Column) -> Column:
-    """Snap a longitude to the exact integer 1e-4 lattice."""
+    """Snap a longitude to the exact integer 1e-4 lattice.  Column
+    form of :func:`e4_sql`, kept for functions/s2.py."""
     return F.round(lon * 10000e0, 0).cast("long")
 
 
 def lat_e4(lat: Column) -> Column:
+    """Latitude twin of :func:`lon_e4` (functions/s2.py)."""
     return F.round(lat * 10000e0, 0).cast("long")
 
 
-def tile_xy(lon: Column, lat: Column, zoom: int) -> tuple[Column, Column]:
+def tile_id(lon: Column, lat: Column, zoom: int) -> Column:
+    """Column form of :func:`tile_id_sql`, kept for the benchmark's
+    tile sweep (perfbench/run.py), which passes Columns."""
+    n = 1 << zoom
+    tx = F.floor((lon_e4(lon) + 1_800_000) * n / float(LON_SPAN_E4))
+    ty = F.floor((lat_e4(lat) + 850_000) * n / float(LAT_SPAN_E4))
+    return (ty * n + tx).cast("long")
+
+
+# ---------------------------------------------------------------------------
+# SQL text (Spark F.expr and the DuckDB oracle) — integer-exact formulas
+# ---------------------------------------------------------------------------
+
+def e4_sql(c: str) -> str:
+    """Snap a coordinate to the exact integer 1e-4 lattice."""
+    return f"cast(round(({c}) * 10000e0, 0) as bigint)"
+
+
+def tile_xy_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
     """Equirectangular quadtree tile coordinates at ``zoom``
     (2^zoom x 2^zoom grid over the domain).  Integer-exact: the
     product (e4 + offset) * 2^zoom stays below 2^53, and IEEE division
     by the exact span is correctly rounded, so floor() is stable."""
     n = 1 << zoom
-    tx = F.floor((lon_e4(lon) + 1_800_000) * n / float(LON_SPAN_E4))
-    ty = F.floor((lat_e4(lat) + 850_000) * n / float(LAT_SPAN_E4))
-    return tx, ty
-
-
-def tile_id(lon: Column, lat: Column, zoom: int) -> Column:
-    """Row-major tile id: ty * 2^zoom + tx."""
-    tx, ty = tile_xy(lon, lat, zoom)
-    return (ty * (1 << zoom) + tx).cast("long")
-
-
-def _interleave(c: Column, bits: int) -> Column:
-    """Spread the low ``bits`` bits of c so bit i lands at position 2i
-    (classic Morton magic-mask spread, as Column bit arithmetic)."""
-    masks = [
-        (16, 0x0000FFFF0000FFFF),
-        (8, 0x00FF00FF00FF00FF),
-        (4, 0x0F0F0F0F0F0F0F0F),
-        (2, 0x3333333333333333),
-        (1, 0x5555555555555555),
-    ]
-    out = c
-    for shift, mask in masks:
-        if shift * 2 >= 2 * bits and shift >= bits:
-            continue
-        # NOTE: Column `|` is boolean OR — bitwiseOR is explicit
-        out = out.bitwiseOR(F.shiftleft(out, shift)).bitwiseAND(F.lit(mask))
-    return out
-
-
-def cell_id(lon: Column, lat: Column, zoom: int) -> Column:
-    """Hierarchical Morton cell id with the zoom packed in the high
-    bits: (zoom << 58) | interleave(tx, ty).  Parent/child relations
-    are bit-shifts, like H3/S2 resolutions."""
-    tx, ty = tile_xy(lon, lat, zoom)
-    morton = _interleave(tx, zoom).bitwiseOR(
-        F.shiftleft(_interleave(ty, zoom), 1)
-    )
-    return (F.lit(zoom).cast("long") * F.lit(1 << 58).cast("long") + morton).cast("long")
-
-
-def cell_parent(cell: Column, zoom: int, parent_zoom: int) -> Column:
-    """Re-key a cell to a coarser resolution (pure bit arithmetic)."""
-    drop = 2 * (zoom - parent_zoom)
-    morton = cell - F.lit(zoom).cast("long") * F.lit(1 << 58).cast("long")
-    return (
-        F.lit(parent_zoom).cast("long") * F.lit(1 << 58).cast("long")
-        + F.shiftright(morton, drop)
-    ).cast("long")
-
-
-# ---------------------------------------------------------------------------
-# SQL text twins (DuckDB oracle) — same integer-exact formulas
-# ---------------------------------------------------------------------------
-
-def tile_xy_sql(lon: str, lat: str, zoom: int) -> tuple[str, str]:
-    n = 1 << zoom
-    tx = (
-        f"floor((cast(round(({lon}) * 10000e0, 0) as bigint) + 1800000) "
-        f"* {n} / {float(LON_SPAN_E4)!r}e0)"
-    )
-    ty = (
-        f"floor((cast(round(({lat}) * 10000e0, 0) as bigint) + 850000) "
-        f"* {n} / {float(LAT_SPAN_E4)!r}e0)"
-    )
+    tx = f"floor(({e4_sql(lon)} + 1800000) * {n} / {float(LON_SPAN_E4)!r}e0)"
+    ty = f"floor(({e4_sql(lat)} + 850000) * {n} / {float(LAT_SPAN_E4)!r}e0)"
     return tx, ty
 
 
 def tile_id_sql(lon: str, lat: str, zoom: int) -> str:
+    """Row-major tile id: ty * 2^zoom + tx."""
     tx, ty = tile_xy_sql(lon, lat, zoom)
     return f"cast(({ty}) * {1 << zoom} + ({tx}) as bigint)"
 
 
 def _interleave_sql(c: str, bits: int) -> str:
-    """SQL twin of _interleave — the same magic-mask spread steps,
-    emitted as one expression text valid in BOTH dialects (Spark SQL
-    and DuckDB both parse `<<`, `|`, `&` on BIGINT identically)."""
+    """Spread the low ``bits`` bits of c so bit i lands at position 2i
+    (classic Morton magic-mask spread), as one expression text valid
+    in BOTH dialects (Spark SQL and DuckDB both parse `<<`, `|`, `&`
+    on BIGINT identically)."""
     masks = [
         (16, 0x0000FFFF0000FFFF),
         (8, 0x00FF00FF00FF00FF),
@@ -134,8 +101,9 @@ def _interleave_sql(c: str, bits: int) -> str:
 
 
 def cell_id_sql(lon: str, lat: str, zoom: int) -> str:
-    """SQL twin of cell_id: Morton cell id with the zoom packed in the
-    high bits, the identical expression text for Spark and DuckDB."""
+    """Hierarchical Morton cell id with the zoom packed in the high
+    bits: (zoom << 58) | interleave(tx, ty).  Parent/child relations
+    are bit-shifts, like H3/S2 resolutions."""
     tx, ty = tile_xy_sql(lon, lat, zoom)
     mx = _interleave_sql(tx, zoom)
     my = _interleave_sql(ty, zoom)
@@ -146,8 +114,8 @@ def cell_id_sql(lon: str, lat: str, zoom: int) -> str:
 
 
 def cell_parent_sql(cell: str, zoom: int, parent_zoom: int) -> str:
-    """SQL twin of cell_parent: drop 2 Morton bits per zoom level and
-    re-tag the resolution."""
+    """Re-key a cell to a coarser resolution (pure bit arithmetic):
+    drop 2 Morton bits per zoom level and re-tag the resolution."""
     drop = 2 * (zoom - parent_zoom)
     morton = f"(cast({cell} as bigint) - (cast({zoom} as bigint) << 58))"
     return (
@@ -173,86 +141,50 @@ def _geohash_bits(precision: int) -> tuple[int, int]:
     return (total + 1) // 2, total // 2  # lon bits, lat bits
 
 
-def geohash_val(lon: Column, lat: Column, precision: int = 6) -> Column:
+def geohash_val_sql(lon: str, lat: str, precision: int = 6) -> str:
     """The 5·precision-bit geohash INTEGER of a point — true geohash
     domain (lon [-180,180), lat [-90,90)), e4-lattice integer-exact
-    bin math like tile_xy, bit interleave via the Morton magic masks
-    (lon takes the MSB).  ``geohash_from_val`` renders it through the
-    published alphabet; because GEOHASH_B32 is ASCII-ASCENDING
-    (asserted in tests), fixed-precision geohash STRINGS order exactly
-    like these integers — so aggregations can group/rank on the long
-    and render only the surviving rows (round 6, §2.3 shuffle keys,
-    not payloads)."""
-    nlon, nlat = _geohash_bits(precision)
-    bx = F.floor((lon_e4(lon) + 1_800_000) * (1 << nlon) / float(LON_SPAN_E4))
-    by = F.floor(
-        (lat_e4(lat) + 900_000) * (1 << nlat) / float(2 * 900_000)
-    )
-    # lat==90 exactly is the one closed-edge input; clamp into range
-    by = F.least(by, F.lit((1 << nlat) - 1))
-    if nlon > nlat:  # odd precision: lon has one extra (lowest) bit
-        val = F.shiftleft(_interleave(F.shiftright(bx, 1), nlat), 1).bitwiseOR(
-            _interleave(by, nlat)
-        )
-        val = F.shiftleft(val, 1).bitwiseOR(bx.bitwiseAND(F.lit(1)))
-    else:
-        val = F.shiftleft(_interleave(bx, nlon), 1).bitwiseOR(
-            _interleave(by, nlat)
-        )
-    return val
-
-
-def geohash_from_val(val: Column, precision: int = 6) -> Column:
-    """Render a geohash integer (``geohash_val``) through the
-    published base-32 alphabet — 5-bit groups, MSB first."""
-    alphabet = F.array(*[F.lit(ch) for ch in GEOHASH_B32])
-    chars = [
-        F.element_at(
-            alphabet,
-            (
-                F.shiftright(val, 5 * (precision - 1 - j))
-                .bitwiseAND(F.lit(31))
-                + F.lit(1)
-            ).cast("int"),
-        )
-        for j in range(precision)
-    ]
-    return F.concat(*chars)
-
-
-def geohash(lon: Column, lat: Column, precision: int = 6) -> Column:
-    """Geohash string of a point (Niemeyer 2008): geohash_val rendered
-    through the base-32 alphabet.  Pure Column arithmetic —
-    whole-stage codegen, no UDF."""
-    return geohash_from_val(geohash_val(lon, lat, precision), precision)
-
-
-def geohash_sql(lon: str, lat: str, precision: int = 6) -> str:
-    """SQL-text twin of :func:`geohash` (shared Spark/DuckDB dialect:
-    `<<`, `>>`, `|`, `&` on BIGINT and 1-based substr)."""
+    bin math like tile_xy_sql, bit interleave via the Morton magic
+    masks (lon takes the MSB).  ``geohash_from_val_sql`` renders it
+    through the published alphabet; because GEOHASH_B32 is
+    ASCII-ASCENDING (asserted in tests), fixed-precision geohash
+    STRINGS order exactly like these integers — so aggregations can
+    group/rank on the long and render only the surviving rows."""
     nlon, nlat = _geohash_bits(precision)
     bx = (
-        f"floor((cast(round(({lon}) * 10000e0, 0) as bigint) + 1800000) "
+        f"floor(({e4_sql(lon)} + 1800000) "
         f"* {1 << nlon} / {float(LON_SPAN_E4)!r}e0)"
     )
+    # lat==90 exactly is the one closed-edge input; clamp into range
     by = (
-        f"least(floor((cast(round(({lat}) * 10000e0, 0) as bigint) + 900000) "
+        f"least(floor(({e4_sql(lat)} + 900000) "
         f"* {1 << nlat} / {float(2 * 900_000)!r}e0), {(1 << nlat) - 1})"
     )
-    if nlon > nlat:
+    if nlon > nlat:  # odd precision: lon has one extra (lowest) bit
         hi = (
             f"((({_interleave_sql(f'(cast({bx} as bigint) >> 1)', nlat)} << 1) "
             f"| {_interleave_sql(f'cast({by} as bigint)', nlat)}))"
         )
-        val = f"(({hi} << 1) | (cast({bx} as bigint) & 1))"
-    else:
-        val = (
-            f"(({_interleave_sql(f'cast({bx} as bigint)', nlon)} << 1) "
-            f"| {_interleave_sql(f'cast({by} as bigint)', nlat)})"
-        )
+        return f"(({hi} << 1) | (cast({bx} as bigint) & 1))"
+    return (
+        f"(({_interleave_sql(f'cast({bx} as bigint)', nlon)} << 1) "
+        f"| {_interleave_sql(f'cast({by} as bigint)', nlat)})"
+    )
+
+
+def geohash_from_val_sql(val: str, precision: int = 6) -> str:
+    """Render a geohash integer (``geohash_val_sql``) through the
+    published base-32 alphabet — 5-bit groups, MSB first, each a
+    1-based ``substr`` of the alphabet (shared Spark/DuckDB dialect)."""
     chars = [
         f"substr('{GEOHASH_B32}', "
         f"cast((({val} >> {5 * (precision - 1 - j)}) & 31) + 1 as int), 1)"
         for j in range(precision)
     ]
     return "(" + " || ".join(chars) + ")"
+
+
+def geohash_sql(lon: str, lat: str, precision: int = 6) -> str:
+    """Geohash string of a point (Niemeyer 2008): geohash_val_sql
+    rendered through the base-32 alphabet."""
+    return geohash_from_val_sql(geohash_val_sql(lon, lat, precision), precision)

@@ -8,7 +8,7 @@ through untouched (the input_hint invariant).
 
 px-payload coordinates are mapped to geo space through a FITTED
 transform (the 3x3 affine estimated from the GCP table by the numpy
-kernel — reference transforms.py:458-485 math) applied as a Column
+kernel — reference transforms.py:458-485 math) applied as a SQL
 expression, then snapped to the 1e-4 payload lattice (media_ref
 precision defines coordinate precision; see synthspec docstring).
 """
@@ -25,6 +25,17 @@ from ..functions import geo
 from ..kernels import Affine
 
 _NUM = r"(-?[0-9]+\.?[0-9]*)"
+
+
+def px_affine_sql(affine_A, is_px: str, x: str, y: str) -> tuple[str, str]:
+    """(lon, lat) SQL text of a raw payload (x, y): px payloads (where
+    ``is_px`` holds) go through the fitted affine and snap to the 1e-4
+    payload lattice, geo payloads pass through."""
+    alon, alat = geo.polynomial_predict_sql(affine_A.tolist(), 1, x, y)
+    return (
+        f"CASE WHEN {is_px} THEN round({alon}, 4) ELSE {x} END",
+        f"CASE WHEN {is_px} THEN round({alat}, 4) ELSE {y} END",
+    )
 
 
 def _parse_ref(ref):
@@ -142,21 +153,13 @@ def span_pair_points(docs: DataFrame, affine_A: np.ndarray) -> DataFrame:
         {"_kind0": kind0, "_rx0": raw_x0, "_ry0": raw_y0}
     )
     # fitted affine applied to px primaries (same as extract_coordinates)
-    alon, alat = geo.affine_predict(
-        affine_A.tolist(), F.col("_rx0"), F.col("_ry0")
-    )
-    lon0 = F.when(F.col("_kind0") == "px", F.round(alon, 4)).otherwise(
-        F.col("_rx0")
-    )
-    lat0 = F.when(F.col("_kind0") == "px", F.round(alat, 4)).otherwise(
-        F.col("_ry0")
-    )
+    lon0, lat0 = px_affine_sql(affine_A, "_kind0 = 'px'", "_rx0", "_ry0")
     _, lon1, lat1 = _parse_ref(F.col("_ref1"))
     return staged.select(
         "doc_id",
         "doc_num",
-        lon0.alias("lon0"),
-        lat0.alias("lat0"),
+        F.expr(lon0).alias("lon0"),
+        F.expr(lat0).alias("lat0"),
         lon1.alias("lon1"),
         lat1.alias("lat1"),
     )
@@ -170,23 +173,15 @@ def finish_coordinates(
     raw_y) table — shared by the span-parsing path and the round-6
     numeric fastpath (sources/synth.media_points_numeric), so the two
     can never drift."""
-    px_lon, px_lat = geo.affine_predict(
-        affine_A.tolist(), F.col("raw_x"), F.col("raw_y")
-    )
-    lon = F.when(F.col("ref_kind") == "px", F.round(px_lon, 4)).otherwise(
-        F.col("raw_x")
-    )
-    lat = F.when(F.col("ref_kind") == "px", F.round(px_lat, 4)).otherwise(
-        F.col("raw_y")
-    )
-    return pts.select(
+    lon, lat = px_affine_sql(affine_A, "ref_kind = 'px'", "raw_x", "raw_y")
+    return pts.selectExpr(
         "doc_id",
         "doc_num",
         *carry,
         "span_pos",
         "ref_kind",
-        lon.alias("lon"),
-        lat.alias("lat"),
+        f"{lon} AS lon",
+        f"{lat} AS lat",
     )
 
 

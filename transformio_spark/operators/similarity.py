@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``brute_force_topk``: exact cosine top-k via Column arithmetic
-  (zip_with dot product) — the correctness baseline; broadcast the
-  query side, no shuffle on the corpus.
+- ``brute_force_topk``: exact cosine top-k via a zip_with dot
+  product — the correctness baseline; broadcast the query side, no
+  shuffle on the corpus.
 - ``lsh_topk``: the scale path — random-hyperplane (sign) LSH buckets
   computed with deterministic seeded planes, equi-join on bucket,
   exact re-rank inside buckets.  At 10^12 rows the bucket join
@@ -17,13 +17,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.geo import dlit_sql
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+
+def _dot_sql(a: str, b: str) -> str:
+    """Dot product of two array<double> expressions, summed left to
+    right."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0e0, "
+        f"(x, y) -> x + y)"
     )
+
+
+def _array_sql(v: list[float]) -> str:
+    return "array(" + ", ".join(dlit_sql(x) for x in v) + ")"
 
 
 def _norm(a):
@@ -51,7 +58,7 @@ def brute_force_topk(
     c = corpus.select(F.col(id_col).alias("nb_id"), F.col("unit").alias("c_unit"))
     q = queries.select("query_id", "unit")
     crossed = c.join(F.broadcast(q))
-    cos = _dot(F.col("unit"), F.col("c_unit"))
+    cos = F.expr(_dot_sql("unit", "c_unit"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nb_id"))
     return (
         crossed.withColumn("cos", cos)
@@ -66,15 +73,25 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(unit_col, planes: list[list[float]]):
-    """Sign-bit bucket id from deterministic hyperplanes — pure Column
-    arithmetic over literal arrays."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(v)) for v in p])
-        bit = F.when(_dot(unit_col, lit_plane) >= 0, F.lit(1)).otherwise(F.lit(0))
-        bucket = bucket + F.shiftleft(bit.cast("long"), i)
-    return bucket
+def lsh_bucket_sql(unit: str, planes: list[list[float]]) -> str:
+    """Sign-bit bucket id from deterministic hyperplanes, as one SQL
+    expression over literal plane arrays."""
+    bits = "".join(
+        f" + shiftleft(cast(CASE WHEN {_dot_sql(unit, _array_sql(p))} >= 0 "
+        f"THEN 1 ELSE 0 END as bigint), {i})"
+        for i, p in enumerate(planes)
+    )
+    return f"(cast(0 as bigint){bits})"
+
+
+def _lsh_keys(n_tables: int, dim: int, n_planes: int, seed: int) -> list[str]:
+    """One ``b<t>`` bucket key per table: the table's bucket id
+    scaled by n_tables plus t, so keys of different tables differ."""
+    return [
+        f"{lsh_bucket_sql('unit', hyperplanes(dim, n_planes, seed + 1000 * t))}"
+        f" * {n_tables} + {t} AS b{t}"
+        for t in range(n_tables)
+    ]
 
 
 def ivf_centroids(dim: int, n_cells: int, seed: int = 11) -> list[list[float]]:
@@ -114,40 +131,31 @@ def ivf_train_centroids(
     return C.tolist()
 
 
-def _cell_rank_array(unit_col, cents: list[list[float]]):
-    """array of cells ordered by descending centroid dot — pure Column
-    arithmetic (struct sort on (-dot, cell)).  The centroid matrix is
-    ONE nested literal array walked by a single transform/fold
-    template, not n_cells separate aggregate trees — cuts codegen
-    size/compile time ~n_cells-fold at identical math."""
-    cents_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in c]) for c in cents]
+def _cell_rank_array_sql(unit: str, cents: list[list[float]]) -> str:
+    """array of cells ordered by descending centroid dot (struct sort
+    on (-dot, cell)).  The centroid matrix is ONE nested literal array
+    walked by a single transform/fold template, not n_cells separate
+    aggregate trees — cuts codegen size/compile time ~n_cells-fold at
+    identical math."""
+    cents_lit = "array(" + ", ".join(_array_sql(c) for c in cents) + ")"
+    dots = f"transform({cents_lit}, c -> {_dot_sql(unit, 'c')})"
+    return (
+        f"array_sort(zip_with({dots}, sequence(0, {len(cents) - 1}), "
+        f"(d, i) -> named_struct('nd', -d, 'cell', i)))"
     )
-    dots = F.transform(cents_lit, lambda c: _dot(unit_col, c))
-    idx = F.sequence(F.lit(0), F.lit(len(cents) - 1))
-    entries = F.zip_with(
-        dots, idx,
-        lambda d, i: F.struct((-d).alias("nd"), i.alias("cell")),
-    )
-    return F.array_sort(entries)
-
-
-def ivf_cell(unit_col, cents: list[list[float]]):
-    """Nearest-centroid cell id — the IVF assignment, zero joins."""
-    return F.element_at(_cell_rank_array(unit_col, cents), 1)["cell"]
 
 
 def ivf_rank_cells_udf(cents: list[list[float]], n_top: int):
     """Arrow-batched assignment fast path: one numpy dgemm per batch
     (units @ centroids^T), argsort(-dot) stable -> same
-    (dot desc, cell asc) order as the Column fold.  The per-row
+    (dot desc, cell asc) order as the SQL fold.  The per-row
     higher-order-function fold is ~0.1 ms/row (interpreted, object
     churn); the batched matmul is ~100x faster per row — the right
-    physical plan at 10^12 rows.  Identity of results with the Column
+    physical plan at 10^12 rows.  Identity of results with the SQL
     path is asserted in tests.
 
     TIE-MARGIN ASSUMPTION: dgemm's fp summation order differs from the
-    sequential Column fold / DuckDB list_dot_product, so a near-tie in
+    sequential SQL fold / DuckDB list_dot_product, so a near-tie in
     centroid dots (gap within ~1e-12 accumulated rounding) could flip
     the cell ranking between engines.  Gate validity therefore rests
     on the data having a real gap — tests/test_dedup_similarity.py
@@ -185,7 +193,7 @@ def ivf_topk(
     recall vs cost exactly like IVF-Flat indexes.
 
     ``fast=True`` (default) assigns via the Arrow-batched numpy dgemm
-    (ivf_rank_cells_udf); ``fast=False`` keeps the pure-Column fold —
+    (ivf_rank_cells_udf); ``fast=False`` keeps the pure-SQL fold —
     identical results (tested), different physical path."""
     if fast:
         corpus_rank = ivf_rank_cells_udf(cents, 1)
@@ -200,22 +208,20 @@ def ivf_topk(
             F.explode(query_rank(F.col("unit"))).alias("cell"),
         )
     else:
+        rank = _cell_rank_array_sql("unit", cents)
         c = corpus.select(
             F.col(id_col).alias("nb_id"),
             F.col("unit").alias("c_unit"),
-            ivf_cell(F.col("unit"), cents).alias("cell"),
+            F.expr(f"element_at({rank}, 1).cell").alias("cell"),
         )
         q = queries.select(
             "query_id", "unit",
-            F.explode(
-                F.transform(
-                    F.slice(_cell_rank_array(F.col("unit"), cents), 1, n_probe),
-                    lambda s: s["cell"],
-                )
+            F.expr(
+                f"explode(transform(slice({rank}, 1, {n_probe}), s -> s.cell))"
             ).alias("cell"),
         )
     joined = q.join(c, "cell")
-    cos = _dot(F.col("unit"), F.col("c_unit"))
+    cos = F.expr(_dot_sql("unit", "c_unit"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nb_id"))
     return (
         joined.withColumn("cos", cos)
@@ -243,12 +249,6 @@ def cosine_neardup_pairs(
     while same-bucket candidates (not all pairs) bound the join size."""
     if dim is None:
         raise ValueError("cosine_neardup_pairs requires dim=")
-    keys = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + 1000 * t)
-        keys.append(
-            (lsh_bucket(F.col("unit"), planes) * n_tables + t).alias(f"b{t}")
-        )
     # round 6 (§2.3/§8 shuffle keys, not payloads — the committed
     # minhash_lsh_pairs pattern applied here): the bucket self-join
     # used to carry BOTH 64-double unit vectors through the 16-way
@@ -261,8 +261,8 @@ def cosine_neardup_pairs(
     # caveat as minhash_lsh_pairs.  Measured 33.5 -> ~12 s at sf0.1
     # (2 M candidates; the residual is the candidate dedup + the
     # per-pair cosine itself).
-    sig = emb.select(
-        F.col(id_col).alias("id"), "unit", *keys
+    sig = emb.selectExpr(
+        f"{id_col} AS id", "unit", *_lsh_keys(n_tables, dim, n_planes, seed)
     ).localCheckpoint(eager=True)
     b = sig.withColumn(
         "bucket", F.explode(F.array(*[F.col(f"b{t}") for t in range(n_tables)]))
@@ -281,7 +281,7 @@ def cosine_neardup_pairs(
         sig.select(F.col("id").alias("id_b"), F.col("unit").alias("u_b")),
         "id_b",
     )
-    cos = _dot(F.col("u_a"), F.col("u_b"))
+    cos = F.expr(_dot_sql("u_a", "u_b"))
     return (
         cand.withColumn("cos", cos)
         .where(F.col("cos") >= threshold)
@@ -317,25 +317,16 @@ def lsh_topk(
             "lsh_topk requires dim= (embedding dimensionality); "
             "do not infer it with a driver action"
         )
-    cb_keys = []
-    qb_keys = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + 1000 * t)
-        cb_keys.append(
-            (lsh_bucket(F.col("unit"), planes) * n_tables + t).alias(f"b{t}")
-        )
-        qb_keys.append(
-            (lsh_bucket(F.col("unit"), planes) * n_tables + t).alias(f"b{t}")
-        )
+    keys = _lsh_keys(n_tables, dim, n_planes, seed)
     # round 6 (§2.3 shuffle keys, not payloads): the bucket join and
     # the candidate dedup carry (query_id, nb_id, bucket) only; both
     # unit vectors re-attach to the deduped candidates afterwards —
     # the corpus side's ×n_tables explode no longer ships the vector
     # payload through the exchanges.  Candidates and cos unchanged.
-    cb = corpus.select(F.col(id_col).alias("nb_id"), *cb_keys).withColumn(
+    cb = corpus.selectExpr(f"{id_col} AS nb_id", *keys).withColumn(
         "bucket", F.explode(F.array(*[F.col(f"b{t}") for t in range(n_tables)]))
     )
-    qb = queries.select("query_id", *qb_keys).withColumn(
+    qb = queries.selectExpr("query_id", *keys).withColumn(
         "bucket", F.explode(F.array(*[F.col(f"b{t}") for t in range(n_tables)]))
     )
     joined = (
@@ -353,7 +344,7 @@ def lsh_topk(
             "nb_id",
         )
     )
-    cos = _dot(F.col("unit"), F.col("c_unit"))
+    cos = F.expr(_dot_sql("unit", "c_unit"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("nb_id"))
     return (
         joined.withColumn("cos", cos)

@@ -18,33 +18,35 @@ Design for 10^12 rows / 1000 executors:
   testable (salted == unsalted), independent of AQE's skew splitting
   (which stays enabled as belt-and-braces).
 - kNN control-point matching: compile the (tiny) center table into
-  a per-point argmin, or broadcast it and rank by haversine with a
-  per-point window, keep k (N4).
+  a per-point argmin expression, keep k (N4).
+
+Join keys and refine predicates are SQL text, each applied with one
+call (DESIGN.md §3, one expression form); callers pass their coarse
+keys the same way, as ``key(df) -> SQL text``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import geo, tiles
 from ..sources.synth import literal_table
 
 
-def _e5(c: F.Column) -> F.Column:
+def _e5_sql(c: str) -> str:
     """Snap a coordinate to the exact integer 1e-5 lattice — all
     containment/PIP predicates run in integer space so Spark and the
     DuckDB oracle can never disagree at region boundaries."""
-    return F.round(c * 100000.0, 0).cast("long")
+    return f"cast(round({c} * 100000.0e0, 0) as bigint)"
 
 
-def _contains() -> F.Column:
-    return (
-        (_e5(F.col("lon")) >= _e5(F.col("lon_min")))
-        & (_e5(F.col("lon")) < _e5(F.col("lon_max")))
-        & (_e5(F.col("lat")) >= _e5(F.col("lat_min")))
-        & (_e5(F.col("lat")) < _e5(F.col("lat_max")))
-    )
+_CONTAINS_SQL = (
+    f"{_e5_sql('lon')} >= {_e5_sql('lon_min')} "
+    f"AND {_e5_sql('lon')} < {_e5_sql('lon_max')} "
+    f"AND {_e5_sql('lat')} >= {_e5_sql('lat_min')} "
+    f"AND {_e5_sql('lat')} < {_e5_sql('lat_max')}"
+)
 
 
 def broadcast_contains_join(
@@ -60,44 +62,38 @@ def broadcast_contains_join(
     predicate runs |boxes| times per point and BNLJ skips whole-stage
     codegen.  When the caller can express a coarse cell key computable
     on BOTH sides (point coords → key, box extent → key set), pass
-    ``point_key(points) -> Column`` and ``box_key(boxes) -> Column``:
+    ``point_key(points)`` and ``box_key(boxes)``, each returning the
+    key's SQL text:
     the join becomes a broadcast HASH join on the key with the exact
     containment predicate as a codegen'd post-filter — the same
     coarse-key+refine plan the tiled path uses, minus the shuffle."""
     if point_key is None or box_key is None:
-        return points.join(F.broadcast(boxes), on=_contains(), how="inner")
-    pts = points.withColumn("_ck", point_key(points))
-    bxs = boxes.withColumn("_ck", box_key(boxes))
+        return points.join(
+            F.broadcast(boxes), on=F.expr(_CONTAINS_SQL), how="inner"
+        )
+    pts = points.withColumn("_ck", F.expr(point_key(points)))
+    bxs = boxes.withColumn("_ck", F.expr(box_key(boxes)))
     return (
         pts.join(F.broadcast(bxs), on="_ck", how="inner")
-        .where(_contains())
+        .where(_CONTAINS_SQL)
         .drop("_ck")
     )
 
 
 def _box_tile_cover(boxes: DataFrame, zoom: int) -> DataFrame:
     """Explode each box into the coarse tiles it overlaps (driver-free,
-    pure Column sequence arithmetic)."""
-    n = 1 << zoom
-    tx_min, ty_min = tiles.tile_xy(F.col("lon_min"), F.col("lat_min"), zoom)
+    pure sequence arithmetic)."""
+    tx_min, ty_min = tiles.tile_xy_sql("lon_min", "lat_min", zoom)
     # upper edge is exclusive → subtract one lattice step before tiling
-    tx_max, ty_max = tiles.tile_xy(
-        F.col("lon_max") - 0.0001, F.col("lat_max") - 0.0001, zoom
-    )
-    covered = boxes.withColumn(
+    tx_max, ty_max = tiles.tile_xy_sql("lon_max - 1.0e-4", "lat_max - 1.0e-4", zoom)
+    return boxes.withColumn(
         "tile_id",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(ty_min, ty_max),
-                    lambda ty: F.transform(
-                        F.sequence(tx_min, tx_max), lambda tx: ty * n + tx
-                    ),
-                )
-            )
+        F.expr(
+            f"explode(flatten(transform(sequence({ty_min}, {ty_max}), "
+            f"ty -> transform(sequence({tx_min}, {tx_max}), "
+            f"tx -> ty * {1 << zoom} + tx))))"
         ),
     )
-    return covered
 
 
 def tiled_contains_join(
@@ -106,31 +102,32 @@ def tiled_contains_join(
     """N6: coarse-tile equi-join + exact refine, with optional explicit
     salting.  Returns the same rows as broadcast_contains_join."""
     cover = _box_tile_cover(boxes, zoom)
-    pts = points.withColumn("tile_id", tiles.tile_id(F.col("lon"), F.col("lat"), zoom))
+    pts = points.withColumn(
+        "tile_id", F.expr(tiles.tile_id_sql("lon", "lat", zoom))
+    )
     if n_salt and n_salt > 1:
-        pts = pts.withColumn("salt", F.pmod(F.col("doc_num"), F.lit(n_salt)))
+        pts = pts.withColumn("salt", F.expr(f"pmod(doc_num, {n_salt})"))
         cover = cover.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
+            "salt", F.expr(f"explode(sequence(0, {n_salt - 1}))")
         )
         joined = pts.join(cover, on=["tile_id", "salt"], how="inner")
     else:
         joined = pts.join(cover, on=["tile_id"], how="inner")
     out_cols = [c for c in joined.columns if c not in ("salt",)]
-    return joined.where(_contains()).select(*out_cols)
+    return joined.where(_CONTAINS_SQL).select(*out_cols)
 
 
-def _pit_predicate(x, y) -> F.Column:
-    c1 = (F.col("x2") - F.col("x1")) * (y - F.col("y1")) - (
-        F.col("y2") - F.col("y1")
-    ) * (x - F.col("x1"))
-    c2 = (F.col("x3") - F.col("x2")) * (y - F.col("y2")) - (
-        F.col("y3") - F.col("y2")
-    ) * (x - F.col("x2"))
-    c3 = (F.col("x1") - F.col("x3")) * (y - F.col("y3")) - (
-        F.col("y1") - F.col("y3")
-    ) * (x - F.col("x3"))
-    return ((c1 <= 0) & (c2 <= 0) & (c3 <= 0)) | (
-        (c1 >= 0) & (c2 >= 0) & (c3 >= 0)
+def _pit_sql(x: str, y: str) -> str:
+    """Boundary-inclusive sign test of point (x, y) against triangle
+    (x1, y1)-(x2, y2)-(x3, y3): the three edge cross products are all
+    <= 0 or all >= 0."""
+    c = [
+        f"(x{j} - x{i}) * ({y} - y{i}) - (y{j} - y{i}) * ({x} - x{i})"
+        for i, j in ((1, 2), (2, 3), (3, 1))
+    ]
+    return (
+        f"({c[0]} <= 0 AND {c[1]} <= 0 AND {c[2]} <= 0) "
+        f"OR ({c[0]} >= 0 AND {c[1]} >= 0 AND {c[2]} >= 0)"
     )
 
 
@@ -145,12 +142,10 @@ def point_in_triangle_join_keyed(
     coords), so boundary points are classified identically by Spark
     and the oracle.  Exact point-in-triangle when every triangle lies
     within one coarse cell."""
-    pts = points.withColumn("_ck", point_key(points))
-    tris = triangles.withColumn("_ck", tri_key(triangles))
+    pts = points.withColumn("_ck", F.expr(point_key(points)))
+    tris = triangles.withColumn("_ck", F.expr(tri_key(triangles)))
     joined = pts.join(F.broadcast(tris), on="_ck", how="inner")
-    return joined.where(
-        _pit_predicate(_e5(F.col("lon")), _e5(F.col("lat")))
-    ).drop("_ck")
+    return joined.where(_pit_sql(_e5_sql("lon"), _e5_sql("lat"))).drop("_ck")
 
 
 def ray_cast_inside(ring, px, py) -> F.Column:
@@ -196,11 +191,13 @@ def point_in_polygon_join(
     post-filter (same plan shape as the box/triangle joins); without
     keys it degrades to BNLJ with the predicate as the join
     condition."""
-    inside = ray_cast_inside(F.col("ring"), _e5(F.col("lon")), _e5(F.col("lat")))
+    inside = ray_cast_inside(
+        F.col("ring"), F.expr(_e5_sql("lon")), F.expr(_e5_sql("lat"))
+    )
     if point_key is None or poly_key is None:
         return points.join(F.broadcast(polys), on=inside, how="inner")
-    pts = points.withColumn("_ck", point_key(points))
-    pl = polys.withColumn("_ck", poly_key(polys))
+    pts = points.withColumn("_ck", F.expr(point_key(points)))
+    pl = polys.withColumn("_ck", F.expr(poly_key(polys)))
     return (
         pts.join(F.broadcast(pl), on="_ck", how="inner")
         .where(inside)
@@ -208,61 +205,37 @@ def point_in_polygon_join(
     )
 
 
-def knn_join(
-    points: DataFrame, centers: DataFrame, k: int = 1, inline: bool = True
-) -> DataFrame:
+def knn_join(points: DataFrame, centers: DataFrame, k: int = 1) -> DataFrame:
     """N4: k nearest centers per point.  Output adds center_id,
     dist_km, knn_rank.
 
-    inline=True (default, the scale plan for small center sets): the
-    center table is collected on the driver (it is a broadcast-sized
-    control-point set) and compiled INTO the expression — per row,
-    one (dist_km, center_id) struct per center, sort_array'ed and
-    sliced to k.  Zero joins, zero shuffles, whole-stage codegen;
-    the per-point window-rank plan would shuffle |points| x |centers|
-    rows just to pick minima.
-
-    inline=False keeps the general broadcast cross join + window rank
-    for center sets too big to inline."""
-    if inline:
-        rows = centers.select("center_id", "lon", "lat").collect()
-        # one haversine per center, spelled out in one SQL expression:
-        # a literal center array walked by a `transform` lambda (then
-        # `array_sort`) runs interpreted, row by row, and ten haversines
-        # built as Columns cost ~2,000 py4j calls per query build.  This
-        # runs in generated code, in the same (dist_km, center_id) order.
-        entries = ", ".join(
-            "named_struct('dist_km', "
-            + geo.haversine_km_sql(
-                "lon", "lat", geo.dlit_sql(r.lon), geo.dlit_sql(r.lat)
-            )
-            + f", 'center_id', {int(r.center_id)})"
-            for r in rows
+    The center table is collected on the driver (it is a
+    broadcast-sized control-point set) and compiled INTO the
+    expression — per row, one (dist_km, center_id) struct per center,
+    sort_array'ed and sliced to k.  Zero joins, zero shuffles,
+    whole-stage codegen; a per-point window-rank plan would shuffle
+    |points| x |centers| rows just to pick minima."""
+    rows = centers.select("center_id", "lon", "lat").collect()
+    # one haversine per center, spelled out in one SQL expression:
+    # a literal center array walked by a `transform` lambda (then
+    # `array_sort`) runs interpreted, row by row.  This runs in
+    # generated code, in the same (dist_km, center_id) order.
+    entries = ", ".join(
+        "named_struct('dist_km', "
+        + geo.haversine_km_sql(
+            "lon", "lat", geo.dlit_sql(r.lon), geo.dlit_sql(r.lat)
         )
-        topk = F.expr(f"slice(sort_array(array({entries})), 1, {int(k)})")
-        out = points.select("*", F.posexplode(topk).alias("_pos", "_nn"))
-        return out.select(
-            *[out[c] for c in points.columns],
-            F.col("_nn.center_id").alias("center_id"),
-            F.col("_nn.dist_km").alias("dist_km"),
-            (F.col("_pos") + 1).alias("knn_rank"),
-        )
-    c = centers.select(
-        F.col("center_id"),
-        F.col("lon").alias("c_lon"),
-        F.col("lat").alias("c_lat"),
+        + f", 'center_id', {int(r.center_id)})"
+        for r in rows
     )
-    crossed = points.join(F.broadcast(c))
-    dist = geo.haversine_km(
-        F.col("lon"), F.col("lat"), F.col("c_lon"), F.col("c_lat")
+    topk = F.expr(f"slice(sort_array(array({entries})), 1, {int(k)})")
+    out = points.select("*", F.posexplode(topk).alias("_pos", "_nn"))
+    return out.select(
+        *[out[c] for c in points.columns],
+        F.col("_nn.center_id").alias("center_id"),
+        F.col("_nn.dist_km").alias("dist_km"),
+        (F.col("_pos") + 1).alias("knn_rank"),
     )
-    w = Window.partitionBy("doc_id", "span_pos").orderBy(
-        dist.asc(), F.col("center_id").asc()
-    )
-    ranked = crossed.withColumn("dist_km", dist).withColumn(
-        "knn_rank", F.row_number().over(w)
-    )
-    return ranked.where(F.col("knn_rank") <= k).drop("c_lon", "c_lat")
 
 
 def radius_cover_cells(
@@ -323,17 +296,13 @@ def radius_join_counts(
         spark, centers, "center_id int, c_lon double, c_lat double"
     )
     keyed = points.withColumn(
-        "cell", tiles.tile_id(F.col("lon"), F.col("lat"), zoom)
+        "cell", F.expr(tiles.tile_id_sql("lon", "lat", zoom))
     )
+    dist = geo.haversine_km_sql("lon", "lat", "c_lon", "c_lat")
     matched = (
         keyed.join(F.broadcast(cand_df), "cell")
         .join(F.broadcast(cdf), "center_id")
-        .where(
-            geo.haversine_km(
-                F.col("lon"), F.col("lat"), F.col("c_lon"), F.col("c_lat")
-            )
-            <= F.lit(float(radius_km))
-        )
+        .where(f"{dist} <= {geo.dlit_sql(radius_km)}")
     )
     return matched.groupBy("center_id").agg(
         F.count(F.lit(1)).alias("n_within")

@@ -74,7 +74,7 @@ def points_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tile_counts(spark, sf_dir) -> DataFrame:
     pts = points_df(spark, sf_dir)
     return (
-        pts.select(tiles.tile_id(F.col("lon"), F.col("lat"), TILE_ZOOM).alias("tile_id"))
+        pts.selectExpr(f"{tiles.tile_id_sql('lon', 'lat', TILE_ZOOM)} AS tile_id")
         .groupBy("tile_id")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .orderBy(F.desc("n_points"), F.asc("tile_id"))
@@ -82,31 +82,32 @@ def q_tile_counts(spark, sf_dir) -> DataFrame:
     )
 
 
-def _grid_key_from_coords(df) -> F.Column:
+def _grid_key_from_coords(df) -> str:
     """Coarse cell key of a point in the 5x5 region grid — exact
-    integer-lattice arithmetic (boxes are 72x34 degrees)."""
-    lon_e5 = F.round(F.col("lon") * 100000.0, 0).cast("long")
-    lat_e5 = F.round(F.col("lat") * 100000.0, 0).cast("long")
+    integer-lattice arithmetic (boxes are 72x34 degrees), as SQL
+    text (the spatial_join key contract)."""
+    lon_e5 = "cast(round(lon * 100000.0e0, 0) as bigint)"
+    lat_e5 = "cast(round(lat * 100000.0e0, 0) as bigint)"
     return (
-        F.floor((lat_e5 + 8_500_000) / 3_400_000) * 5
-        + F.floor((lon_e5 + 18_000_000) / 7_200_000)
-    ).cast("long")
+        f"cast(floor(({lat_e5} + 8500000) / 3400000) * 5 "
+        f"+ floor(({lon_e5} + 18000000) / 7200000) as bigint)"
+    )
 
 
-def _grid_key_from_box(df) -> F.Column:
+def _grid_key_from_box(df) -> str:
     return (
-        F.floor((F.col("lat_min") + 85.0) / 34.0) * 5
-        + F.floor((F.col("lon_min") + 180.0) / 72.0)
-    ).cast("long")
+        "cast(floor((lat_min + 85.0e0) / 34.0e0) * 5 "
+        "+ floor((lon_min + 180.0e0) / 72.0e0) as bigint)"
+    )
 
 
-def _grid_key_from_triangle(df) -> F.Column:
+def _grid_key_from_triangle(df) -> str:
     # triangle vertices are e5-lattice bigints inside their box:
     # x1 = (lon_min + 8) * 1e5 with lon_min = -180 + 72k → exact k
     return (
-        F.floor((F.col("y1") + 8_100_000) / 3_400_000) * 5
-        + F.floor((F.col("x1") + 17_200_000) / 7_200_000)
-    ).cast("long")
+        "cast(floor((y1 + 8100000) / 3400000) * 5 "
+        "+ floor((x1 + 17200000) / 7200000) as bigint)"
+    )
 
 
 def q_region_join_bcast(spark, sf_dir) -> DataFrame:
@@ -158,7 +159,7 @@ def q_pip_polygon(spark, sf_dir) -> DataFrame:
         point_key=_grid_key_from_coords,
         # polygons are strictly inside their 72x34 box -> the coarse
         # 5x5 grid cell IS the region id
-        poly_key=lambda df: F.col("region_id").cast("long"),
+        poly_key=lambda df: "cast(region_id as bigint)",
     )
     return _bounded_sort(
         joined.groupBy("region_id").agg(F.count(F.lit(1)).alias("n_points")),
@@ -179,7 +180,7 @@ def q_knn_city_assign(spark, sf_dir) -> DataFrame:
 def q_hotspot_share(spark, sf_dir) -> DataFrame:
     pts = points_df(spark, sf_dir)
     cells = (
-        pts.select(tiles.tile_id(F.col("lon"), F.col("lat"), TILE_ZOOM).alias("tile_id"))
+        pts.selectExpr(f"{tiles.tile_id_sql('lon', 'lat', TILE_ZOOM)} AS tile_id")
         .groupBy("tile_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -229,8 +230,8 @@ def q_span_pair_distance(spark, sf_dir) -> DataFrame:
     pairs = synth.span_pair_points_numeric(
         spark, sf_dir, extract.px2geo_affine()
     )
-    d = geo.haversine_km(F.col("lon0"), F.col("lat0"), F.col("lon1"), F.col("lat1"))
-    paired = pairs.select(d.alias("dist_km"))
+    d = geo.haversine_km_sql("lon0", "lat0", "lon1", "lat1")
+    paired = pairs.selectExpr(f"{d} AS dist_km")
     return paired.agg(
         _e(F.sqrt(F.avg(F.pow(F.col("dist_km"), 2))), 4).alias("rmse_e4"),
         _e(F.avg(F.abs(F.col("dist_km"))), 4).alias("mae_e4"),
@@ -1260,7 +1261,7 @@ def q_embedding_ann_lsh(spark, sf_dir) -> DataFrame:
     ).orderBy("query_id", "rnk")
 
 
-# literal order-2 matrix for the Column-expression transform path
+# literal order-2 matrix for the SQL-expression transform path
 # (small high-order coefficients keep outputs bounded on ±180 inputs)
 POLY2_A = [
     [1e-05, -2e-05, 1.5e-05, 0.9, 0.05, 3.0],
@@ -1270,13 +1271,13 @@ POLY2_A = [
 
 
 def q_poly2_transform(spark, sf_dir) -> DataFrame:
-    """Order-2 polynomial transform as PURE Column arithmetic (SURVEY
-    op 11's preferred physical form — whole-stage codegen, no Python):
-    identical fp expression tree in the DuckDB oracle, so aggregates
-    match to the last ulp before e-scaling."""
+    """Order-2 polynomial transform as PURE SQL-text arithmetic
+    (SURVEY op 11's preferred physical form — whole-stage codegen, no
+    Python): the DuckDB oracle runs the same text, so aggregates match
+    to the last ulp before e-scaling."""
     pts = points_df(spark, sf_dir)
-    px, py = geo.polynomial_predict(POLY2_A, 2, F.col("lon"), F.col("lat"))
-    out = pts.select(px.alias("px"), py.alias("py"))
+    px, py = geo.polynomial_predict_sql(POLY2_A, 2, "lon", "lat")
+    out = pts.selectExpr(f"{px} AS px", f"{py} AS py")
     return out.agg(
         F.count(F.lit(1)).alias("n_points"),
         _e(F.sum("px"), 4).alias("sum_px_e4"),
@@ -1286,7 +1287,7 @@ def q_poly2_transform(spark, sf_dir) -> DataFrame:
     )
 
 
-# literal homography for the Column-expression projective path
+# literal homography for the SQL-expression projective path
 # (SURVEY op 9): near-identity with small perspective terms so the
 # denominator stays ~1 on +/-180 x +/-85 inputs
 PROJECTIVE_H = [
@@ -1298,12 +1299,12 @@ PROJECTIVE_H = [
 
 def q_projective_transform(spark, sf_dir) -> DataFrame:
     """Homography transform (SURVEY op 9 — Projective, absent/stub in
-    the reference, required by BASELINE) as PURE Column arithmetic:
-    identical fp expression tree in the DuckDB oracle, so aggregates
-    match exactly (same pattern as q_poly2_transform)."""
+    the reference, required by BASELINE) as PURE SQL-text arithmetic:
+    the DuckDB oracle runs the same text, so aggregates match exactly
+    (same pattern as q_poly2_transform)."""
     pts = points_df(spark, sf_dir)
-    px, py = geo.projective_predict(PROJECTIVE_H, F.col("lon"), F.col("lat"))
-    out = pts.select(px.alias("px"), py.alias("py"))
+    px, py = geo.projective_predict_sql(PROJECTIVE_H, "lon", "lat")
+    out = pts.selectExpr(f"{px} AS px", f"{py} AS py")
     return out.agg(
         F.count(F.lit(1)).alias("n_points"),
         _e(F.sum("px"), 4).alias("sum_px_e4"),
@@ -1335,7 +1336,7 @@ def _projected_cells(out: DataFrame, cell: float) -> DataFrame:
 
 def _compiled_projection_cells(spark, sf_dir, crs: str, cell: float) -> DataFrame:
     """``_projected_cells`` of the points projected EPSG:4326 ->
-    ``crs`` by the Chain->Column compiler."""
+    ``crs`` by the Chain->SQL compiler."""
     from ..kernels import Chain, MapProjection
     from ..operators import compiler
 
@@ -1350,7 +1351,7 @@ def _compiled_projection_cells(spark, sf_dir, crs: str, cell: float) -> DataFram
 def q_mercator_cells(spark, sf_dir) -> DataFrame:
     """MapProjection (SURVEY op 14, reference transforms.py:536-587)
     end-to-end: extracted lon/lat points → EPSG:4326→3857 via the
-    Chain→Column COMPILER (operators/compiler.py — whole-stage
+    Chain→SQL COMPILER (operators/compiler.py — whole-stage
     codegen, zero Python on this fully-analytic chain; the pandas-UDF
     kernel route stays driver-covered by tin_transform/poly_roundtrip)
     → 2000-km web-mercator cell counts with meter-rounded coordinate
@@ -1363,19 +1364,19 @@ def q_mollweide_cells(spark, sf_dir) -> DataFrame:
     """World-projection op (SURVEY op 14; reference
     tests/test_image_projections.py:27-29 exercises Mollweide
     ESRI:54009): lon/lat points → Mollweide meters via the
-    Chain→Column compiler — the Newton theta-solve runs as an
-    F.aggregate fold (kernels/projections.py MOLL_NEWTON_ITERS fixed
-    steps), so the whole projection is whole-stage codegen with a
-    LINEAR-size expression tree.  Same cell-count/sum observables as
-    mercator_cells; the DuckDB oracle replicates the identical fold
-    via list_reduce."""
+    Chain→SQL compiler — the Newton theta-solve runs as
+    MOLL_NEWTON_ITERS chained projections of one accumulator column
+    (functions/geo.mollweide_forward_stages), so the whole projection
+    is whole-stage codegen with a LINEAR-size plan.  Same
+    cell-count/sum observables as mercator_cells; the DuckDB oracle
+    runs the same Newton steps as a list_reduce fold."""
     return _compiled_projection_cells(spark, sf_dir, "ESRI:54009", 2_000_000.0)
 
 
 def q_polar_cells(spark, sf_dir) -> DataFrame:
     """Ellipsoidal polar stereographic (EPSG:3031, SURVEY op 14 /
     reference tests/test_image_projections.py:39-41) end-to-end via
-    the Chain→Column compiler: EPSG GN7-2 variant-B arithmetic in
+    the Chain→SQL compiler: EPSG GN7-2 variant-B arithmetic in
     whole-stage codegen, same cell/sum observables as
     mercator_cells/mollweide_cells (5,000-km cells — south-aspect
     rho spans ~300M m at lat +85)."""
@@ -1384,7 +1385,7 @@ def q_polar_cells(spark, sf_dir) -> DataFrame:
 
 def q_robinson_cells(spark, sf_dir) -> DataFrame:
     """Robinson (ESRI:54030, the reference's README MapProjection
-    doctest projection) via the Chain→Column compiler: the
+    doctest projection) via the Chain→SQL compiler: the
     natural-cubic-spline table lookup runs as element_at into literal
     arrays, all whole-stage codegen.  Same observables as the other
     projection gate queries (2,000-km cells)."""
@@ -1770,11 +1771,11 @@ def q_idw_surface(spark, sf_dir) -> DataFrame:
         [float(p[0]) for p in CHINA22_IMPOINTS],
     )
     pts = points_df(spark, sf_dir)
-    tx, ty = tiles.tile_xy(F.col("lon"), F.col("lat"), 5)
+    tx, ty = tiles.tile_xy_sql("lon", "lat", 5)
     return (
-        pts.select(
-            tx.alias("tx"), ty.alias("ty"),
-            F.round(F.expr(expr) * 1e6).cast("long").alias("v_e6"),
+        pts.selectExpr(
+            f"{tx} AS tx", f"{ty} AS ty",
+            f"cast(round({expr} * 1000000.0e0) as bigint) AS v_e6",
         )
         .groupBy("tx", "ty")
         .agg(
@@ -1837,9 +1838,9 @@ def q_gc_waypoints(spark, sf_dir) -> DataFrame:
         F.expr(glon).alias("wlon"),
         F.expr(glat).alias("wlat"),
     )
-    tx, ty = tiles.tile_xy(F.col("wlon"), F.col("wlat"), WAYPOINT_ZOOM)
+    tx, ty = tiles.tile_xy_sql("wlon", "wlat", WAYPOINT_ZOOM)
     return (
-        way.select("fq", tx.alias("tx"), ty.alias("ty"))
+        way.selectExpr("fq", f"{tx} AS tx", f"{ty} AS ty")
         .groupBy("fq", "tx", "ty")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .orderBy("fq", "tx", "ty")
@@ -1851,13 +1852,14 @@ def q_geohash_counts(spark, sf_dir) -> DataFrame:
     encoding, Niemeyer 2008, for joining against external geo data;
     the interoperable sibling of the engine-native Morton cells):
     every extracted point encoded at precision 5 via
-    functions/tiles.geohash — e4-lattice integer bin math + Morton
-    magic-mask interleave + base-32 lookup, pure Column codegen, no
-    UDF — then count per cell, top 100.  The DuckDB oracle runs the
-    *independently written* SQL-text twin (tiles.geohash_sql), and
-    both are pinned against an iterative-bisection third
-    implementation + published test vectors in
-    tests/test_spark_operators.py."""
+    functions/tiles.geohash_val_sql — e4-lattice integer bin math +
+    Morton magic-mask interleave, pure codegen, no UDF — then count per
+    cell, top 100, rendered through the base-32 alphabet by
+    geohash_from_val_sql.  The DuckDB oracle runs the same text
+    (tiles.geohash_sql); the independent check is the
+    iterative-bisection implementation + published test vectors in
+    tests/test_spark_operators.py, run against the text in both
+    engines."""
     # round 6 (§2.3 shuffle keys, not payloads): group/rank on the
     # geohash INTEGER and render the base-32 string only for the 100
     # surviving rows.  GEOHASH_B32 is ASCII-ascending (pinned in
@@ -1865,20 +1867,15 @@ def q_geohash_counts(spark, sf_dir) -> DataFrame:
     # their integers and (n desc, gh asc) == (n desc, val asc);
     # the rendered output is identical string-for-string.
     pts = points_df(spark, sf_dir)
+    ghv = tiles.geohash_val_sql("lon", "lat", GEOHASH_PRECISION)
     return (
-        pts.select(
-            tiles.geohash_val(
-                F.col("lon"), F.col("lat"), GEOHASH_PRECISION
-            ).alias("ghv")
-        )
+        pts.selectExpr(f"{ghv} AS ghv")
         .groupBy("ghv")
         .agg(F.count(F.lit(1)).alias("n_points"))
         .orderBy(F.desc("n_points"), F.asc("ghv"))
         .limit(100)
-        .select(
-            tiles.geohash_from_val(F.col("ghv"), GEOHASH_PRECISION).alias(
-                "gh"
-            ),
+        .selectExpr(
+            f"{tiles.geohash_from_val_sql('ghv', GEOHASH_PRECISION)} AS gh",
             "n_points",
         )
     )
@@ -1900,9 +1897,9 @@ def q_grid_dbscan(spark, sf_dir) -> DataFrame:
     from ..operators.grid import grid_dbscan
 
     pts = points_df(spark, sf_dir)
-    tx, ty = tiles.tile_xy(F.col("lon"), F.col("lat"), DBSCAN_ZOOM)
+    tx, ty = tiles.tile_xy_sql("lon", "lat", DBSCAN_ZOOM)
     counts = (
-        pts.select(tx.alias("tx"), ty.alias("ty"))
+        pts.selectExpr(f"{tx} AS tx", f"{ty} AS ty")
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1967,9 +1964,9 @@ def q_hotspot_focal(spark, sf_dir) -> DataFrame:
     from ..operators.grid import focal_sum
 
     pts = points_df(spark, sf_dir)
-    tx, ty = tiles.tile_xy(F.col("lon"), F.col("lat"), 10)
+    tx, ty = tiles.tile_xy_sql("lon", "lat", 10)
     counts = (
-        pts.select(tx.alias("tx"), ty.alias("ty"))
+        pts.selectExpr(f"{tx} AS tx", f"{ty} AS ty")
         .groupBy("tx", "ty")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1990,7 +1987,7 @@ def q_tile_rollup(spark, sf_dir) -> DataFrame:
     rollup' pattern): per-point Morton cell ids at zoom 12 are
     pre-aggregated (one count per occupied fine cell — at 100 TB this
     first groupBy is the massive-reduction step), then re-keyed to
-    zoom 8 by PURE BIT ARITHMETIC (functions/tiles.cell_parent — no
+    zoom 8 by PURE BIT ARITHMETIC (functions/tiles.cell_parent_sql — no
     recomputation from coordinates) and re-aggregated.  The DuckDB
     twin runs the identical two-level plan through the shared
     expression texts (cell_id_sql / cell_parent_sql), so the Morton
@@ -2000,13 +1997,11 @@ def q_tile_rollup(spark, sf_dir) -> DataFrame:
 
     child = (
         points_df(spark, sf_dir)
-        .groupBy(
-            tiles.cell_id(F.col("lon"), F.col("lat"), 12).alias("c12")
-        )
+        .groupBy(F.expr(tiles.cell_id_sql("lon", "lat", 12)).alias("c12"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     return _bounded_sort(
-        child.withColumn("cell8", tiles.cell_parent(F.col("c12"), 12, 8))
+        child.withColumn("cell8", F.expr(tiles.cell_parent_sql("c12", 12, 8)))
         .groupBy("cell8")
         .agg(
             F.sum("n").alias("n_points"),
@@ -2047,8 +2042,8 @@ def q_poly_roundtrip(spark, sf_dir) -> DataFrame:
     b = udfs.with_transformed(
         pts, roundtrip, x="x", y="y", out_x="bx", out_y="by"
     )
-    err = geo.euclidean(F.col("x"), F.col("y"), F.col("bx"), F.col("by"))
-    return b.select(err.alias("err")).agg(
+    err = geo.euclidean_sql("x", "y", "bx", "by")
+    return b.selectExpr(f"{err} AS err").agg(
         F.count(F.lit(1)).alias("n_points"),
         _e(F.sqrt(F.avg(F.pow(F.col("err"), 2))), 6).alias("rmse_e6"),
         _e(F.max("err"), 6).alias("max_e6"),
@@ -2301,7 +2296,7 @@ def model_accuracy_gate():
 
 def q_model_accuracy(spark, sf_dir) -> DataFrame:
     """SURVEY ops 18/20/21 relationally: residuals of the observable
-    re-fit (predict via the order-2 Column twin, geodesic R=6367
+    re-fit (predict via the order-2 SQL text, geodesic R=6367
     haversine against the observed GCP targets), then RMSE / MAE / MAX
     as one aggregate row.  ``coalesce(1)`` over the literal table
     pins the double-summation order to the GCP row order, matching
@@ -2312,10 +2307,10 @@ def q_model_accuracy(spark, sf_dir) -> DataFrame:
     df = synth.literal_table(
         spark, gcps, "sx double, sy double, dx double, dy double"
     ).coalesce(1)
-    px, py = geo.polynomial_predict(A, 2, F.col("sx"), F.col("sy"))
+    px, py = geo.polynomial_predict_sql(A, 2, "sx", "sy")
     # distance arg order (pred, obs) — reference accuracy.py:37
-    resid = geo.haversine_km(px, py, F.col("dx"), F.col("dy"))
-    r = df.select(resid.alias("r"))
+    resid = geo.haversine_km_sql(px, py, "dx", "dy")
+    r = df.selectExpr(f"{resid} AS r")
     return r.agg(
         F.count(F.lit(1)).alias("n_points"),
         _e(F.sqrt(F.avg(F.col("r") * F.col("r"))), 6).alias("rmse_e6"),

@@ -247,7 +247,7 @@ def span_pair_points_numeric(
     table without the media_ref render+parse round trip, same decimal
     snap argument as media_points_numeric (pinned row-equal in
     tests/test_extract_fastpath.py)."""
-    from ..functions import geo
+    from ..operators.extract import px_affine_sql
 
     base = _spans_base(spark, sf_dir, with_text=False).where(
         F.col("doc_num") % 3 == 2
@@ -267,18 +267,9 @@ def span_pair_points_numeric(
         snap("lon2", 4).alias("lon1"),
         snap("lat2", 4).alias("lat1"),
     )
-    alon, alat = geo.affine_predict(
-        affine_A.tolist(), F.col("_rx0"), F.col("_ry0")
-    )
-    lon0 = F.when(F.col("_px0"), F.round(alon, 4)).otherwise(F.col("_rx0"))
-    lat0 = F.when(F.col("_px0"), F.round(alat, 4)).otherwise(F.col("_ry0"))
-    return staged.select(
-        "doc_id",
-        "doc_num",
-        lon0.alias("lon0"),
-        lat0.alias("lat0"),
-        "lon1",
-        "lat1",
+    lon0, lat0 = px_affine_sql(affine_A, "_px0", "_rx0", "_ry0")
+    return staged.selectExpr(
+        "doc_id", "doc_num", f"{lon0} AS lon0", f"{lat0} AS lat0", "lon1", "lat1"
     )
 
 

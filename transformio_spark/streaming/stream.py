@@ -3,7 +3,7 @@
 The north rule is batch-with-resume (lineage anti-join, plans/
 pipeline.py), so streaming is a thin complement, not the core: a
 file-source stream of docs parquet → the SAME extraction + tiling
-Column kernels as batch (operators/extract.py — one code path, two
+expressions as batch (operators/extract.py — one code path, two
 execution modes) → event-time windowed tile counts with a watermark
 for late data.  Tested with trigger=availableNow + memory sink.
 """
@@ -39,9 +39,7 @@ def streaming_tile_counts(
     # event_ts carried through extraction — no stream-stream join
     pts = extract.extract_coordinates(stream, affine_A, carry=("event_ts",))
     return (
-        pts.withColumn(
-            "tile_id", tiles.tile_id(F.col("lon"), F.col("lat"), zoom)
-        )
+        pts.withColumn("tile_id", F.expr(tiles.tile_id_sql("lon", "lat", zoom)))
         .withWatermark("event_ts", watermark)
         .groupBy(F.window("event_ts", window).alias("win"), F.col("tile_id"))
         .agg(F.count(F.lit(1)).alias("n_points"))
