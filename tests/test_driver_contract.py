@@ -12,26 +12,11 @@ import math
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def _duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
 
 
 def _normalize(rows, cols):
@@ -70,13 +55,8 @@ def _norm_type(t: str) -> str:
 QUERY_NAMES = sorted(entrymod.queries().keys())
 
 
-@pytest.fixture(scope="session")
-def duck(sf_dir):
-    return _duck(sf_dir)
-
-
 @pytest.mark.parametrize("name", QUERY_NAMES)
-def test_query_matches_oracle(spark, sf_dir, duck, name):
+def test_query_matches_oracle(spark, sf_dir, oracle_arrow, name):
     qfn = entrymod.queries()[name]
     sql = entrymod.oracle_sql().get(name)
     sdf = qfn(spark, sf_dir)
@@ -89,7 +69,7 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
         assert sorted(map(repr, srows)) == sorted(map(repr, srows2))
         assert len(srows) >= 1
         return
-    arrow = duck.execute(sql).arrow()
+    arrow = oracle_arrow(name)
     dcols = arrow.column_names
     drows = [
         tuple(arrow.column(c)[i].as_py() for c in dcols)

@@ -6,31 +6,16 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-@pytest.fixture(scope="module")
-def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
 
 @pytest.mark.parametrize("name", sorted(entrymod.oracle_sql().keys()))
-def test_oracle_sql_runs(duck, name):
-    rows = duck.execute(entrymod.oracle_sql()[name]).fetchall()
-    assert len(rows) >= 1
+def test_oracle_sql_runs(oracle_arrow, name):
+    assert oracle_arrow(name).num_rows >= 1
 
 
 def test_every_oracle_has_a_query():

@@ -81,23 +81,28 @@ def _arrow_udf_nodes(df):
     return [n for n in _plan_nodes(df) if n.nodeName() == "ArrowEvalPython"]
 
 
-def _jobs_per_execution(spark, build) -> tuple[int, int]:
-    """(jobs launched while building the query, jobs of build + collect)
-    for one execution under a fresh job group."""
+def _jobs_of(spark, fn):
+    """(fn(), number of jobs it launched), counted under a fresh job
+    group."""
     import uuid
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     group = f"job-budget-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        df = build()
-        n_build = len(tracker.getJobIdsForGroup(group))
-        df.collect()
-        return n_build, len(tracker.getJobIdsForGroup(group))
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def _jobs_per_execution(spark, build) -> tuple[int, int]:
+    """(jobs launched while building the query, jobs of build + collect)
+    for one execution."""
+    df, n_build = _jobs_of(spark, build)
+    _, n_collect = _jobs_of(spark, df.collect)
+    return n_build, n_build + n_collect
 
 
 def test_region_join_is_hash_not_nested_loop(spark, sf_dir):
@@ -560,3 +565,77 @@ def test_kept_column_forms_match_their_sql_text(spark):
     # the comparison can fail: a different zoom is a different plan
     assert not same([tiles.tile_id(lon, lat, 4)],
                     [tiles.tile_id_sql("lon", "lat", 5)])
+
+
+def test_materialize_counts_in_the_checkpoint_job(spark):
+    """materialize returns the exact row count, and observing it costs
+    no job beyond those of a bare eager local checkpoint."""
+    from transformio_spark.plans.session import materialize
+
+    def frame():
+        return (
+            spark.range(0, 1000, 1, 4)
+            .groupBy((F.col("id") % 37).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    frame().collect()  # warm
+    _, bare = _jobs_of(spark, lambda: frame().localCheckpoint(eager=True))
+    (df, n), observed = _jobs_of(spark, lambda: materialize(frame()))
+    assert n == 37 == df.count()
+    assert observed <= bare, (observed, bare)
+
+
+@pytest.mark.parametrize("cap,budget", [(1, 45), (2, 45), (7, 48)])
+def test_connected_components_lane_path_job_budget(spark, monkeypatch, cap, budget):
+    """Jobs launched while building connected_components on the
+    multi-lane path (edge cap lowered to 1, 2 and 7) over the seed-42
+    graphs of test_connected_components_matches_reference: every
+    barrier counts its rows in its own checkpoint job.  Counted at
+    local[4]: 45 / 45 / 48; with a separate count() job after each
+    star-round checkpoint they took 55 / 55 / 58."""
+    import random
+
+    from transformio_spark.operators import dedup
+
+    rng = random.Random(42)
+    graphs = {}
+    for c in (1, 2, 7):
+        edges = [
+            (f"n{rng.randrange(30):02d}", f"n{rng.randrange(30):02d}")
+            for _ in range(25)
+        ]
+        graphs[c] = edges + [(b, a) for a, b in edges[:5]] + edges[5:8]
+    pairs = spark.createDataFrame(graphs[cap], "id_a string, id_b string")
+    monkeypatch.setattr(dedup, "_UF_MAX_EDGES", cap)
+    _, jobs = _jobs_of(spark, lambda: dedup.connected_components(pairs))
+    assert jobs <= budget, (cap, jobs)
+
+
+def test_eager_barriers_go_through_materialize():
+    """``localCheckpoint`` and ``Observation(`` appear in the engine
+    only inside plans.session.materialize and in plans/pipeline.py
+    (whose per-unit observations ride on a catalog write)."""
+    import ast
+    import pathlib
+
+    import transformio_spark
+
+    root = pathlib.Path(transformio_spark.__file__).parent
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "plans/pipeline.py":
+            continue
+        src = path.read_text()
+        allowed = set()
+        if rel == "plans/session.py":
+            fn = next(
+                n for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef) and n.name == "materialize"
+            )
+            allowed = set(range(fn.lineno, fn.end_lineno + 1))
+        for i, line in enumerate(src.splitlines(), 1):
+            if ("localCheckpoint" in line or "Observation(" in line) and i not in allowed:
+                stray.append(f"{rel}:{i}: {line.strip()}")
+    assert not stray, stray

@@ -12,10 +12,6 @@ data pipelines).  Shape at scale:
   before the per-document count aggregate;
 - output is (id, n_overlap) for flagged documents only, so the result
   is bounded by contamination incidence, not corpus size.
-
-If the eval set ever outgrows broadcast size, the same plan runs as a
-shuffle hash join on the n-gram — flip `broadcast_eval=False`; the
-semantics are identical.
 """
 
 from __future__ import annotations
@@ -31,18 +27,15 @@ def ngram_overlap(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(id, n_overlap): how many DISTINCT word n-grams of each corpus
     document also occur anywhere in the eval corpus.  Documents with
     zero overlap are absent (flag-only output)."""
-    ev = (
+    ev = F.broadcast(
         eval_docs.select(
             F.explode(word_ngrams(F.col(text_col), n)).alias("g")
         ).distinct()
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
     grams = docs.select(
         F.col(id_col),
         F.explode(word_ngrams(F.col(text_col), n)).alias("g"),

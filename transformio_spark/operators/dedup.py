@@ -17,10 +17,11 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..plans.session import materialize
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -82,77 +83,6 @@ def minhash_signature(shingles, n_hashes: int = 32):
     )
 
 
-def simhash_votes(shingles):
-    """Per-bit ±1 vote sums over all shingles (array of 64 longs) —
-    one aggregate pass; bit shifts are literal ints (shiftright does
-    not accept Column shift amounts)."""
-
-    def per_shingle_bits(s):
-        h = F.xxhash64(s)
-        return F.array(
-            *[
-                F.when(
-                    F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1).cast("long"),
-                ).otherwise(F.lit(-1).cast("long"))
-                for i in range(64)
-            ]
-        )
-
-    return F.aggregate(
-        shingles,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, s: F.zip_with(acc, per_shingle_bits(s), lambda a, b: a + b),
-    )
-
-
-def simhash_from_votes(votes_col):
-    """Fold the 64 vote counts into the 64-bit fingerprint."""
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        bit = F.when(
-            F.element_at(votes_col, i + 1) > 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-        out = out.bitwiseOR(bit)
-    return out
-
-
-def simhash_neardup_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    max_hamming: int = 10,
-) -> DataFrame:
-    """SimHash near-duplicate pairs: 16-bit prefix buckets generate
-    candidates (same plan shape as the MinHash band join), exact
-    hamming distance (xor + bit_count, pure Column) verifies.
-    Returns (id_a, id_b, hamming) with id_a < id_b.
-
-    Prefix bucketing finds pairs whose top 16 bits agree — near-dups
-    usually do (the prefix is the 16 most significant majority votes);
-    multi-rotation bucketing would push recall further at k x the
-    candidate cost, the standard SimHash tradeoff."""
-    sh = simhash_buckets(docs, id_col=id_col, text_col=text_col, k=k)
-    left = sh.select(
-        F.col("bucket"), F.col("id").alias("id_a"),
-        F.col("simhash").alias("h_a"),
-    )
-    right = sh.select(
-        F.col("bucket"), F.col("id").alias("id_b"),
-        F.col("simhash").alias("h_b"),
-    )
-    ham = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        left.join(right, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", ham.cast("int"))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-
-
 def jaccard(a, b):
     return F.size(F.array_intersect(a, b)).cast("double") / F.size(F.array_union(a, b))
 
@@ -180,13 +110,12 @@ def minhash_lsh_pairs(
     )
     # materialize (id, shingles, signature) ONCE (round 6): the bucket
     # self-join otherwise re-evaluated the whole shingle+minhash
-    # subtree on both sides.  Same cluster-mode checkpoint() caveat as
-    # _star_components.
-    sig = docs.select(
-        F.col(id_col).alias("id"), sh_col.alias("sh")
-    ).withColumn(
-        "sig", minhash_signature(F.col("sh"), n_hashes)
-    ).localCheckpoint(eager=True)
+    # subtree on both sides.
+    sig, _ = materialize(
+        docs.select(F.col(id_col).alias("id"), sh_col.alias("sh")).withColumn(
+            "sig", minhash_signature(F.col("sh"), n_hashes)
+        )
+    )
     # round 6 (guide §2.3/§8: shuffle keys, not payloads): the band
     # self-join used to carry the full shingle arrays through the
     # 8-way band explode and BOTH exchange sides; now only
@@ -242,7 +171,7 @@ _HEX_DIGITS = "0123456789abcdef"
 
 
 def simhash_md5_exprs() -> tuple[list[str], list[str], str, str]:
-    """Engine-portable SQL fragments for the md5-bit SimHash twin.
+    """Engine-portable SQL fragments for the md5-bit SimHash.
 
     Each shingle's 64 vote bits come from the first 16 hex digits of
     ``md5(shingle)`` — bit ``i`` is bit ``i % 4`` of hex digit
@@ -287,15 +216,12 @@ def simhash_md5_exprs() -> tuple[list[str], list[str], str, str]:
 def simhash_md5_buckets(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
 ) -> DataFrame:
-    """Oracle-verifiable SimHash twin: same shingle→votes→fingerprint→
-    prefix-bucket pipeline as :func:`simhash_buckets`, but the per-bit
-    vote source is md5 (available verbatim in DuckDB) instead of
-    xxhash64, so the ENTIRE pipeline gets a full rows+schema+hash
-    driver oracle.  This twin is what the ``simhash_buckets`` gate
-    query and its bench leaf run; the xxhash64 version (one
-    non-cryptographic JVM hash per shingle vs md5's ~5-10x cost) is
-    called by no query or bench leaf.  The two differ only in which
-    deterministic bits feed the votes.
+    """SimHash fingerprints + 16-bit prefix buckets (near-dup candidate
+    generation by Hamming-adjacent prefix): shingle → per-bit votes →
+    fingerprint → prefix bucket.  The per-bit vote source is md5
+    (available verbatim in DuckDB), so the ENTIRE pipeline gets a full
+    rows+schema+hash driver oracle; the ``simhash_buckets`` gate query
+    and its bench leaf run it.
     Returns (id, simhash_hex string, bucket long); explode+groupBy
     plan — one shuffle on id, identical shape at 10^12 rows."""
     digits, sums, hex_expr, bucket_expr = simhash_md5_exprs()
@@ -369,16 +295,14 @@ def _star_components(sym: DataFrame, max_rounds: int = 64) -> DataFrame:
     neighbor and u itself at the group minimum.  Converges in
     O(log^2 n) rounds regardless of graph diameter.  Returns
     (id, comp) with comp = component min."""
-    # localCheckpoint truncates the lineage each round — an iterative
+    # the checkpoint truncates the lineage each round — an iterative
     # self-join otherwise grows the logical plan geometrically until
-    # ANALYSIS (not data) blows the driver heap.  On a multi-executor
-    # cluster swap for checkpoint() on a durable dir (executor loss
-    # invalidates local checkpoints); the lineage/metrics log
-    # (plans/pipeline.py) already records per-round progress.
-    prev = sym.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    ).distinct().localCheckpoint(eager=True)
-    prev_count = prev.count()
+    # ANALYSIS (not data) blows the driver heap
+    prev, prev_count = materialize(
+        sym.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        ).distinct()
+    )
     for _ in range(max_rounds):
         both = prev.union(prev.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # large-star: m = min(N(u) ∪ {u}); edge (v, m) for every v > u
@@ -394,19 +318,17 @@ def _star_components(sym: DataFrame, max_rounds: int = 64) -> DataFrame:
         )
         # small-star: group children by u; m = min of parents; re-point
         smins = large.groupBy("u").agg(F.min("v").alias("m"))
-        cur = (
+        cur, cur_count = materialize(
             large.join(smins, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(smins.select(F.col("u"), F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         # both sides are distinct row sets, so equality is
-        # |cur| == |prev| AND cur \ prev == ∅ — one cheap count on the
-        # fresh checkpoint plus one anti-join, instead of the two full
-        # subtract jobs this replaced (round 5: ~30% per-round cost)
-        cur_count = cur.count()
+        # |cur| == |prev| AND cur \ prev == ∅; both counts come with
+        # their checkpoint jobs, so the anti-join is the round's only
+        # extra job
         changed = cur_count != prev_count or not cur.join(
             prev, ["u", "v"], "left_anti"
         ).isEmpty()
@@ -449,16 +371,11 @@ def connected_components(
     two labelings compose — local roots are local minima, so the
     composition is again the component minimum."""
     # materialized ONCE — it feeds the lane split, the contraction and
-    # the node universe; observe() counts it inside the checkpoint job
-    # (same cluster-mode checkpoint() caveat as _star_components)
-    n_obs = Observation()
-    edges = (
+    # the node universe
+    edges, n_edges = materialize(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .observe(n_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    n_edges = n_obs.get["n"]
     id_type = dict(edges.dtypes)["u"]
     uf_schema = f"id {id_type}, root {id_type}"
     if n_edges <= _UF_MAX_EDGES:
@@ -477,13 +394,12 @@ def connected_components(
     # materialized ONCE: mapping feeds mu, mv and the node-labeling
     # join — MapInPandas sits above the reusable exchange, so without
     # the checkpoint each subtree copy re-ran the per-lane union-find
-    mapping = (
+    mapping, _ = materialize(
         tagged.where(F.col("lu") == F.col("lv"))
         .select("u", "v", "lu")
         .repartition(n_lanes, "lu")
         .drop("lu")
         .mapInPandas(_uf_partition, uf_schema)
-        .localCheckpoint(eager=True)
     )
     mu = mapping.select(F.col("id").alias("u"), F.col("root").alias("ru"))
     mv = mapping.select(F.col("id").alias("v"), F.col("root").alias("rv"))
@@ -528,19 +444,3 @@ def neardup_component_summary(
         F.count(F.lit(1)).alias("n_members"),
         F.array_join(F.array_sort(F.collect_list("id")), ",").alias("members"),
     )
-
-
-def simhash_buckets(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 8
-) -> DataFrame:
-    """SimHash fingerprints + 16-bit prefix buckets (near-dup candidate
-    generation by Hamming-adjacent prefix)."""
-    sh = docs.select(
-        F.col(id_col).alias("id"), char_shingles(F.col(text_col), k).alias("sh")
-    )
-    out = sh.withColumn("votes", simhash_votes(F.col("sh"))).withColumn(
-        "simhash", simhash_from_votes(F.col("votes"))
-    )
-    return out.withColumn(
-        "bucket", F.shiftrightunsigned(F.col("simhash"), 48).cast("long")
-    ).select("id", "simhash", "bucket")

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.session import materialize
 from .dedup import connected_components
 
 def focal_sum(
@@ -125,7 +126,7 @@ def grid_dbscan(
     # it into the materialization job avoids a second checkpoint.
     spark = cells.sparkSession
     par = spark.sparkContext.defaultParallelism
-    core = (
+    core, _ = materialize(
         cells.where(F.col(value) >= min_pts)
         .select(
             F.col(tx).alias("tx"),
@@ -134,7 +135,6 @@ def grid_dbscan(
             (F.col(ty) * width + F.col(tx)).cast("long").alias("cell_id"),
         )
         .repartition(2 * par, "cell_id")
-        .localCheckpoint(eager=True)
     )
     # 4 forward offsets cover each unordered 8-neighbor pair once:
     # E, SE, S, SW (the backward four are the same pairs reversed).

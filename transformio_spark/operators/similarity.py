@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geo import dlit_sql
+from ..plans.session import materialize
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -257,13 +258,14 @@ def cosine_neardup_pairs(
     # through the candidate join + dedup, and the vectors re-attach to
     # the deduped candidate PAIRS from the once-materialized sig
     # table.  Candidate set and verify are unchanged (pinned by the
-    # driver oracle + recall tests).  Same cluster-mode checkpoint()
-    # caveat as minhash_lsh_pairs.  Measured 33.5 -> ~12 s at sf0.1
+    # driver oracle + recall tests).  Measured 33.5 -> ~12 s at sf0.1
     # (2 M candidates; the residual is the candidate dedup + the
     # per-pair cosine itself).
-    sig = emb.selectExpr(
-        f"{id_col} AS id", "unit", *_lsh_keys(n_tables, dim, n_planes, seed)
-    ).localCheckpoint(eager=True)
+    sig, _ = materialize(
+        emb.selectExpr(
+            f"{id_col} AS id", "unit", *_lsh_keys(n_tables, dim, n_planes, seed)
+        )
+    )
     b = sig.withColumn(
         "bucket", F.explode(F.array(*[F.col(f"b{t}") for t in range(n_tables)]))
     ).select("id", "bucket")

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..functions import geo, text, tiles
 from ..operators import extract, spatial_join
 from ..sources import synth
+from .session import materialize
 
 TILE_ZOOM = 10
 
@@ -1009,11 +1010,10 @@ def q_embedding_neardup_pairs(spark, sf_dir) -> DataFrame:
 
 def q_simhash_buckets(spark, sf_dir) -> DataFrame:
     """SimHash fingerprints + 16-bit prefix buckets over the documents
-    corpus, via the md5-bit twin (operators/dedup.simhash_md5_buckets)
+    corpus, via the md5-bit SimHash (operators/dedup.simhash_md5_buckets)
     so the whole shingle→votes→fingerprint→bucket pipeline carries a
     full DuckDB oracle (round-4 retirement of the last dedup
-    rows-only row).  Production near-dup pairs keep the xxhash64 bit
-    source (pytest-pinned); the two paths share every other step."""
+    rows-only row).  It is the engine's only SimHash."""
     from ..operators import dedup
 
     docs = synth.raw_documents(spark, sf_dir).select(
@@ -1098,10 +1098,10 @@ def q_curation_funnel(spark, sf_dir) -> DataFrame:
     # round 6: materialize the fingerprint+rank stage once — it feeds
     # both the survivors->LSH->components leg and the final funnel
     # join, which otherwise re-run the scan+md5+window pipeline
-    staged = (
+    staged, _ = materialize(
         docs.withColumn("fp", T.fingerprint(F.col("text")))
         .withColumn("rn", F.row_number().over(w))
-    ).localCheckpoint(eager=True)
+    )
     # AQE rightly coalesces the gate corpus's window shuffle to ONE
     # partition, and the checkpoint freezes that layout — the
     # downstream MinHash stage (the funnel's heaviest per-row math)

@@ -13,7 +13,25 @@ from __future__ import annotations
 import os
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """The engine's one eager barrier: run ``df`` once into a local
+    checkpoint and return it with its row count, observed by the same
+    job (no second ``count()`` job).  The checkpoint truncates the
+    lineage, so every consumer reads the materialized rows instead of
+    re-running the plan below.
+
+    A local checkpoint lives in executor storage: on a multi-executor
+    cluster the loss of an executor loses its blocks, and the query has
+    to be rebuilt from its sources (a reliable ``checkpoint()`` on a
+    durable dir survives that; the lineage log of ``plans/pipeline.py``
+    records per-unit progress for resume)."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return out, obs.get["n"]
 
 
 def ensure_shipped(spark: SparkSession) -> None:
